@@ -1865,8 +1865,9 @@ def q_job_stage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("task_run_ms") > 0) & (F.col("peak_mem_bytes") > 0)
             ).alias("profiled"),
             # ...and every stage shuffles (overviews reduce child
-            # payloads; the process stage's checkpoint commit groups by
-            # tile), so measured shuffle bytes are positive
+            # payloads; the process stage's DEM input spreads its tile
+            # ids over the session), so measured shuffle bytes are
+            # positive
             (
                 (F.col("shuffle_read_bytes") > 0)
                 & (F.col("shuffle_write_bytes") > 0)
@@ -3033,7 +3034,7 @@ def q_feature_clip_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``process: feature_clip`` with a feature output — vector file
     input (S2, source CRS honored) -> explode -> read_vector_window
     clip (V1) -> VECTOR_SCHEMA rows committed through the normal
-    stage machinery (checkpoint/lineage/metrics). Digest: per tile,
+    stage machinery (manifest/metrics). Digest: per tile,
     clipped-feature count + clipped-area sum recomputed from the
     OUTPUT geometries; oracle = the vector_clip rectangle algebra
     verbatim — the job must reproduce the operator pipeline exactly."""

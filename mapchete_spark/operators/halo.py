@@ -156,34 +156,29 @@ def _assemble_canvas(p: TilePyramid, pb: int, target_key: int, pdf: pd.DataFrame
     return me, canvas, nodata, dtype
 
 
-def _drop_skipped_targets(parts: DataFrame, skip_target_keys) -> DataFrame:
+def _drop_skipped_targets(parts: DataFrame, target_filter) -> DataFrame:
     """Continue-mode compute skip for halo consumers: drop every strip
     destined for an already-done target BEFORE the shuffle — done tiles
     are neither assembled nor processed, while their own strips still
     reach not-yet-done neighbors (pre-filtering the INPUT would starve
     neighbor canvases instead)."""
-    if skip_target_keys is None:
+    if target_filter is None:
         return parts
-    done = skip_target_keys.select(F.col(skip_target_keys.columns[0]).alias("target_key")).distinct()
-    return parts.join(done, on="target_key", how="left_anti")
+    return target_filter.apply(parts, "target_key")
 
 
 def add_buffers(
     tiles: DataFrame, pyramid: TilePyramid, pixelbuffer: int,
-    skip_target_keys: Optional[DataFrame] = None,
+    target_filter=None,
 ) -> DataFrame:
     """Tile raster table -> same table with each tile's array replaced
-    by its pixel-buffered window (shape per Tile.shape(pixelbuffer))."""
+    by its pixel-buffered window (shape per Tile.shape(pixelbuffer));
+    ``target_filter`` as in run_buffered_process."""
     if pixelbuffer <= 0:
-        if skip_target_keys is not None:
-            done = skip_target_keys.select(
-                F.col(skip_target_keys.columns[0]).alias("tile_key")
-            ).distinct()
-            return tiles.join(done, on="tile_key", how="left_anti")
-        return tiles
+        return tiles if target_filter is None else target_filter.apply(tiles)
     pb = int(pixelbuffer)
     pyr_dict = pyramid.to_dict()
-    parts = _drop_skipped_targets(_parts_stage(tiles, pyramid, pb), skip_target_keys)
+    parts = _drop_skipped_targets(_parts_stage(tiles, pyramid, pb), target_filter)
 
     def assemble(key: Tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         p = TilePyramid(**pyr_dict)
@@ -286,14 +281,16 @@ def run_buffered_process(
     params: Optional[dict] = None,
     out_dtype: Optional[str] = None,
     out_nodata: Optional[float] = None,
-    skip_target_keys: Optional[DataFrame] = None,
+    target_filter=None,
 ) -> DataFrame:
     """Fused halo + process: one strip shuffle, then assemble AND run
-    the raster process inside one streamed-group mapInPandas."""
+    the raster process inside one streamed-group mapInPandas.
+    ``target_filter`` (continue mode, a checkpoint.KeyFilter) drops the
+    strips of targets it excludes before the shuffle."""
     pb = int(pixelbuffer)
     pyr_dict = pyramid.to_dict()
     params = params or {}
-    parts = _drop_skipped_targets(_parts_stage(tiles, pyramid, pb), skip_target_keys)
+    parts = _drop_skipped_targets(_parts_stage(tiles, pyramid, pb), target_filter)
 
     def assemble_and_run(target_key: int, pdf: pd.DataFrame):
         from mapchete_spark.operators.process import Empty, TileContext

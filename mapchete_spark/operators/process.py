@@ -89,7 +89,7 @@ def run_raster_process(
     out_dtype: Optional[str] = None,
     out_nodata: Optional[float] = None,
     pixelbuffer: int = 0,
-    skip_target_keys: Optional[DataFrame] = None,
+    target_filter=None,
 ) -> DataFrame:
     """Apply a raster process to every tile row; rows whose process
     raises Empty (or returns None) are dropped. Output arrays replace
@@ -101,9 +101,9 @@ def run_raster_process(
     buffered arrays never make an extra Python->JVM->Python round trip
     (2x less Arrow traffic than add_buffers + separate process pass).
 
-    ``skip_target_keys`` (continue mode): tiles whose key is listed are
-    neither assembled nor processed; with a pixelbuffer their strips
-    still feed neighbors.
+    ``target_filter`` (continue mode, a checkpoint.KeyFilter): tiles it
+    drops are neither assembled nor processed; with a pixelbuffer their
+    strips still feed neighbors.
     """
     if pixelbuffer > 0:
         from mapchete_spark.operators.halo import run_buffered_process
@@ -111,13 +111,10 @@ def run_raster_process(
         return run_buffered_process(
             tiles, pyramid, pixelbuffer, process, params=params,
             out_dtype=out_dtype, out_nodata=out_nodata,
-            skip_target_keys=skip_target_keys,
+            target_filter=target_filter,
         )
-    if skip_target_keys is not None:
-        done = skip_target_keys.select(
-            F.col(skip_target_keys.columns[0]).alias("tile_key")
-        ).distinct()
-        tiles = tiles.join(done, on="tile_key", how="left_anti")
+    if target_filter is not None:
+        tiles = target_filter.apply(tiles)
     pyr_dict = pyramid.to_dict()
     params = params or {}
 

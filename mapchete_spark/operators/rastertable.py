@@ -76,6 +76,94 @@ def tile_of_row(pyramid: TilePyramid, row) -> Tile:
     return Tile(pyramid, int(row["zoom"]), int(row["tile_row"]), int(row["tile_col"]))
 
 
+def merge_tile_ranges(ranges) -> list:
+    """Sorted (r0, r1, c0, c1) ranges with overlapping/adjacent column
+    ranges of the same row extent merged (ADVICE r6 #3): antimeridian-
+    wrapped bounds of exactly grid width can hand in two ranges sharing
+    a boundary column, which a plain union would emit twice where the
+    old OR-filter was idempotent."""
+    merged = []
+    for rng in sorted(tuple(int(v) for v in r) for r in ranges):
+        if merged and merged[-1][0] == rng[0] and merged[-1][1] == rng[1] \
+                and rng[2] <= merged[-1][3] + 1:
+            merged[-1] = (rng[0], rng[1], merged[-1][2], max(merged[-1][3], rng[3]))
+        else:
+            merged.append(rng)
+    return merged
+
+
+def aoi_tile_ranges(
+    pyramid: TilePyramid, zoom: int, bounds: Optional[Bounds] = None
+) -> list:
+    """Merged (r0, r1, c0, c1) inclusive tile ranges covering ``bounds``
+    at ``zoom`` (the whole matrix when None)."""
+    if bounds is None:
+        return [
+            (0, pyramid.matrix_height(zoom) - 1, 0, pyramid.matrix_width(zoom) - 1)
+        ]
+    return merge_tile_ranges(pyramid.tile_ranges_from_bounds(bounds, zoom))
+
+
+def tiles_in_area(pyramid: TilePyramid, area, zooms, rows, cols) -> np.ndarray:
+    """V12 area predicate: a mask of the tiles whose bounds intersect
+    the AOI geometry (exact test per tile)."""
+    return np.array(
+        [
+            bool(area.intersects_rect(
+                Tile(pyramid, int(z), int(r), int(c)).bounds(pixelbuffer=0)
+            ))
+            for z, r, c in zip(zooms, rows, cols)
+        ],
+        dtype=bool,
+    )
+
+
+def filter_tiles_to_area(df: DataFrame, pyramid: TilePyramid, area) -> DataFrame:
+    """Keep only the rows of tiles that intersect ``area``, distributed
+    (the bbox prefilter already happened through the tile ranges)."""
+    from mapchete_spark.geometry.wkb import to_wkb
+
+    wkb = bytes(to_wkb(area))
+    pyr_dict = pyramid.to_dict()
+
+    def fn(batches):
+        from mapchete_spark.geometry.wkb import from_wkb
+
+        geom = from_wkb(wkb)
+        p = TilePyramid(**pyr_dict)
+        for pdf in batches:
+            yield pdf[tiles_in_area(p, geom, pdf["zoom"], pdf["tile_row"], pdf["tile_col"])]
+
+    return df.mapInPandas(fn, df.schema)
+
+
+def aoi_tile_keys(
+    pyramid: TilePyramid,
+    zoom: int,
+    bounds: Optional[Bounds] = None,
+    area=None,
+    limit: Optional[int] = None,
+) -> Optional[np.ndarray]:
+    """Sorted keys of the tiles ``materialize_dem`` generates at
+    ``zoom``, enumerated on the driver; None when the covering ranges
+    hold more than ``limit`` tiles."""
+    ranges = aoi_tile_ranges(pyramid, zoom, bounds)
+    if limit is not None and sum(
+        (r1 - r0 + 1) * (c1 - c0 + 1) for r0, r1, c0, c1 in ranges
+    ) > limit:
+        return None
+    if not ranges:
+        return np.empty(0, dtype=np.int64)
+    rows, cols = np.concatenate(
+        [np.mgrid[r0 : r1 + 1, c0 : c1 + 1].reshape(2, -1) for r0, r1, c0, c1 in ranges],
+        axis=1,
+    )
+    if area is not None:
+        hit = tiles_in_area(pyramid, area, np.full(rows.size, zoom), rows, cols)
+        rows, cols = rows[hit], cols[hit]
+    return np.unique(linear_tile_key(zoom, rows, cols)).astype(np.int64)
+
+
 def tile_ids_for_ranges(spark: SparkSession, ranges, zoom: int) -> DataFrame:
     """Codegen tile-ID table with one generated row PER TILE INSIDE the
     covering (r0, r1, c0, c1) ranges — not one per matrix cell.
@@ -84,23 +172,10 @@ def tile_ids_for_ranges(spark: SparkSession, ranges, zoom: int) -> DataFrame:
     generates 4^zoom rows to keep a handful (billions at z15+ for a
     small raster). The covering ranges are already computed, so each
     becomes its own ``spark.range(rows*cols)`` with div/mod arithmetic;
-    disjoint ranges union linearly. Generated row count == covering
-    size at any zoom.
-
-    Overlapping/adjacent column ranges with the same row extent are
-    merged first (ADVICE r6 #3): antimeridian-wrapped bounds of exactly
-    grid width can hand in two ranges sharing a boundary column, which
-    the plain union would emit twice where the old OR-filter was
-    idempotent."""
-    merged = []
-    for rng in sorted(tuple(int(v) for v in r) for r in ranges):
-        if merged and merged[-1][0] == rng[0] and merged[-1][1] == rng[1] \
-                and rng[2] <= merged[-1][3] + 1:
-            merged[-1] = (rng[0], rng[1], merged[-1][2], max(merged[-1][3], rng[3]))
-        else:
-            merged.append(list(rng))
+    ranges are merged first (``merge_tile_ranges``) and disjoint ones
+    union linearly. Generated row count == covering size at any zoom."""
     out = None
-    for (r0, r1, c0, c1) in merged:
+    for (r0, r1, c0, c1) in merge_tile_ranges(ranges):
         w = int(c1 - c0 + 1)
         n = int(r1 - r0 + 1) * w
         part = spark.range(n).select(
@@ -132,18 +207,12 @@ def materialize_dem(
     dropped on the ID table, BEFORE any payload is computed — at scale
     the exactness filter must never pay for excluded tiles."""
     pyr = pyramid or TilePyramid("geodetic")
-    mw, mh = pyr.matrix_width(zoom), pyr.matrix_height(zoom)
-    if bounds is not None:
-        ranges = pyr.tile_ranges_from_bounds(bounds, zoom)
-        if not ranges:
-            return spark.createDataFrame([], RASTER_SCHEMA)
-    else:
-        ranges = [(0, mh - 1, 0, mw - 1)]
+    ranges = aoi_tile_ranges(pyr, zoom, bounds)
+    if not ranges:
+        return spark.createDataFrame([], RASTER_SCHEMA)
     ids = tile_ids_for_ranges(spark, ranges, zoom)
     if area is not None:
-        from mapchete_spark.plans.job import _filter_tiles_to_area
-
-        ids = _filter_tiles_to_area(ids, pyr, area)
+        ids = filter_tiles_to_area(ids, pyr, area)
 
     pyr_dict = pyr.to_dict()
 

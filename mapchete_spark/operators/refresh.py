@@ -4,8 +4,8 @@ When baselevel tiles are reprocessed, their parent chains must be
 re-interpolated even though the parents exist in the checkpoint
 (mapchete/processing/base.py:805-845, the ``overview_parents`` set).
 
-Spark shape: the changed-tile seed set comes from the lineage /
-checkpoint tables (JobStore.changed_since) — parent keys are pure
+Spark shape: the changed-tile seed set comes from the done-manifest
+(JobStore.changed_since, by commit time) — parent keys are pure
 arithmetic on the child keys, so the propagation is a per-zoom
 ``select distinct parent_key`` (no data movement), and only the
 affected parents' children are re-read for the actual reduce:

@@ -3,11 +3,21 @@ sequence of Spark stages.
 
 Lifecycle mapping (SURVEY.md §3.1): parse YAML -> per-zoom plan on the
 driver; then per process zoom (descending):
-    input tiles -> halo (pixelbuffer) -> process UDF -> continue-mode
-    anti-join -> write (output parquet + checkpoint + lineage + metrics)
+    input tiles -> halo (pixelbuffer) -> process UDF -> write
+    (output parquet) -> driver-side commit (done-manifest + metrics)
 and per overview zoom: groupBy(parent) reduce of the level above
 (lower path) or parent->children upsample (higher path) — Z1 semantics
 (mapchete/processing/tasks.py:378-450).
+
+Continue mode is planned on the driver (reference S11/J1/J2: an
+existence check on tiles whose ids are computed, not stored): each
+stage's todo set is its tile-grid keys (operators/rastertable.py
+aoi_tile_keys, the same ranges and area test materialize_dem uses)
+minus the manifest's done keys. An empty todo set starts no Spark job;
+otherwise the smaller of todo and done rides into the stage as a
+KeyFilter (operators/checkpoint.py). Tiles whose process raised Empty
+are recorded as done, unlike the reference, which re-runs them on every
+continue run because no tile file exists for them.
 
 Output layout: parquet partitioned by zoom under <output.path>/tiles —
 at 100 TB a single partitioned table (not per-tile files) is the only
@@ -22,10 +32,19 @@ import os
 import time
 from typing import Callable, Dict, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapchete_spark.operators.checkpoint import JobStore
+from mapchete_spark.functions.geo import parent_tile_key_col, zorder_key_col
+from mapchete_spark.operators.checkpoint import (
+    NO_KEYS,
+    PASS_ALL,
+    JobStore,
+    KeyFilter,
+    plan_keys,
+    write_tiles,
+)
 from mapchete_spark.operators.halo import add_buffers
 from mapchete_spark.operators.overviews import overview_reduce_once, overview_upsample
 from mapchete_spark.operators.process import (
@@ -37,8 +56,18 @@ from mapchete_spark.operators.process import (
     run_multi_raster_process,
     run_vector_process,
 )
-from mapchete_spark.operators.rastertable import materialize_dem
+from mapchete_spark.operators.rastertable import (
+    RASTER_SCHEMA,
+    aoi_tile_keys,
+    filter_tiles_to_area,
+    materialize_dem,
+)
 from mapchete_spark.plans.config import JobConfig
+from mapchete_spark.tilegrid.keys import (
+    LINEAR_ZOOM_SHIFT,
+    linear_tile_key,
+    split_linear_tile_key,
+)
 
 # built-in process registry: name -> (kind, fn, min pixelbuffer)
 PROCESS_REGISTRY: Dict[str, tuple] = {
@@ -94,37 +123,6 @@ def resolve_process(cfg: JobConfig):
     return kind, pf, 0
 
 
-def _filter_tiles_to_area(df: DataFrame, pyramid, area) -> DataFrame:
-    """V12 area geometry: keep only tiles whose bounds intersect the
-    configured AOI geometry (exact test per tile, distributed — the
-    bbox prefilter already happened through cfg.bounds)."""
-    from mapchete_spark.geometry.wkb import to_wkb
-
-    wkb = bytes(to_wkb(area))
-    pyr_dict = pyramid.to_dict()
-
-    def fn(batches):
-        import numpy as np
-
-        from mapchete_spark.geometry.wkb import from_wkb
-        from mapchete_spark.tilegrid.pyramid import Tile, TilePyramid
-
-        geom = from_wkb(wkb)
-        p = TilePyramid(**pyr_dict)
-        for pdf in batches:
-            keep = [
-                bool(
-                    geom.intersects_rect(
-                        Tile(p, int(z), int(r), int(c)).bounds(pixelbuffer=0)
-                    )
-                )
-                for z, r, c in zip(pdf["zoom"], pdf["tile_row"], pdf["tile_col"])
-            ]
-            yield pdf[np.array(keep, dtype=bool)]
-
-    return df.mapInPandas(fn, df.schema)
-
-
 #: keys marking a dict as a SINGLE input spec, not a named-input map
 _INPUT_RESERVED = {"source", "path", "hole"}
 
@@ -176,8 +174,30 @@ def _input_tiles(spark, cfg: JobConfig, zoom: int) -> DataFrame:
     return _materialize_input(spark, cfg, zoom, cfg.input_at_zoom(zoom))
 
 
+def _is_dem(inp) -> bool:
+    return inp in (None, "dem") or (isinstance(inp, dict) and inp.get("source") == "dem")
+
+
+def _parent_keys(keys: np.ndarray) -> np.ndarray:
+    z, r, c = split_linear_tile_key(keys)
+    return np.unique(linear_tile_key(z - 1, r // 2, c // 2))
+
+
+def _child_keys(keys: np.ndarray, pyramid) -> np.ndarray:
+    """Keys of the children of same-zoom ``keys`` (Tile.get_children:
+    clipped to the child zoom's matrix)."""
+    if not keys.size:
+        return NO_KEYS
+    z, r, c = split_linear_tile_key(keys)
+    zc = int(z[0]) + 1
+    rows = (2 * r[:, None] + np.array([0, 0, 1, 1])).ravel()
+    cols = (2 * c[:, None] + np.array([0, 1, 0, 1])).ravel()
+    ok = (rows < pyramid.matrix_height(zc)) & (cols < pyramid.matrix_width(zc))
+    return np.unique(linear_tile_key(zc, rows[ok], cols[ok]))
+
+
 def _materialize_input(spark, cfg: JobConfig, zoom: int, inp) -> DataFrame:
-    if inp in (None, "dem") or (isinstance(inp, dict) and inp.get("source") == "dem"):
+    if _is_dem(inp):
         # area filter applied on the ID table inside materialize_dem —
         # excluded tiles never compute a payload
         return materialize_dem(
@@ -192,7 +212,7 @@ def _materialize_input(spark, cfg: JobConfig, zoom: int, inp) -> DataFrame:
     else:
         raise ValueError(f"unsupported input spec: {inp!r}")
     if cfg.area is not None:
-        df = _filter_tiles_to_area(df, cfg.pyramid, cfg.area)
+        df = filter_tiles_to_area(df, cfg.pyramid, cfg.area)
     return df
 
 
@@ -405,7 +425,6 @@ def execute(
     the job store's status table:
     pending -> parsing -> initializing -> running -> done | failed."""
     out_path = cfg.output["path"]
-    tiles_path = os.path.join(out_path, "tiles")
     store = JobStore(spark, store_path or os.path.join(out_path, "_state"))
     seq = [0]
 
@@ -415,6 +434,13 @@ def execute(
             obs(state=state, detail=detail, run_id=store.run_id)
         seq[0] += 1
 
+    with store.batched():
+        return _run(spark, cfg, mode, store, notify)
+
+
+def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str, int]:
+    out_path = cfg.output["path"]
+    tiles_path = os.path.join(out_path, "tiles")
     notify("pending")
     notify("parsing")
     try:
@@ -423,8 +449,18 @@ def execute(
         notify("failed", f"{type(exc).__name__}: {exc}")
         raise
     notify("initializing")
+    payload = "data" if kind == "raster" else "geometry"
+    # continue mode: the manifest's done keys per zoom, read once on the
+    # driver after committing the files of a run that crashed mid-stage
+    done: Dict[int, np.ndarray] = {}
     try:
         prep = run_preprocessing_tasks(spark, cfg)
+        store.compact()
+        if mode == "continue":
+            store.adopt_orphans(tiles_path, payload)
+            keys = store.done_keys()
+            zooms = keys >> LINEAR_ZOOM_SHIFT
+            done = {int(z): keys[zooms == z] for z in np.unique(zooms)}
     except Exception as exc:
         notify("failed", f"{type(exc).__name__}: {exc}")
         raise
@@ -437,54 +473,61 @@ def execute(
 
     profiler = StageMetricsProfiler.attach(spark)
 
-    def stage(name: str, df_fn, payload="data"):
+    def stage(name: str, zoom: int, candidates, build):
+        """Plan on the driver, then — if anything is left to do — one
+        Spark write and a manifest commit. ``candidates(limit)`` gives
+        the keys the stage would write, or None when they are unknown or
+        would take more than ``limit`` keys to enumerate; ``build(todo)``
+        the stage's rows, with the ``todo`` KeyFilter applied. Candidates
+        the stage did not write raised Empty: they are recorded as done
+        too, so a no-op run skips them."""
         t0 = time.time()
         if mode == "readonly":
             counts[name] = 0
             return
-        group = f"{store.run_id}:{name}"
-        if profiler is not None:
-            spark.sparkContext.setJobGroup(group, name)
-        try:
-            df = df_fn()
-            if mode == "continue":
-                # write guard only: the compute skip happens on the INPUT
-                # side (anti-join below mapInPandas is not pushable by
-                # Catalyst, so filtering here alone would recompute
-                # every tile and merely skip the write)
-                df = store.filter_todo(df)
-            df = df.cache()
-            try:
-                n = df.count()
-                if n:
-                    # physical layout: sort each partition in z-order so
-                    # parquet row groups carry spatial locality (row/col
-                    # min/max stats then prune spatial range scans)
-                    from mapchete_spark.functions.geo import zorder_key_col
-
-                    ordered = df.sortWithinPartitions(
-                        zorder_key_col(
-                            F.col("zoom"), F.col("tile_row"), F.col("tile_col")
-                        )
-                    )
-                    ordered.write.mode("append").partitionBy("zoom").parquet(
-                        tiles_path
-                    )
-                    store.commit_tiles(df, payload_col=payload)
-            finally:
-                df.unpersist()
-        except Exception as exc:  # J7: surface the failing stage
+        done_z = done.get(zoom, NO_KEYS)
+        # the limit keeps planning proportional to the keys the driver
+        # holds: past twice the done keys the todo keys outnumber them,
+        # so todo is not empty and dropping the done keys is the smaller
+        # filter
+        cand = candidates(2 * done_z.size)
+        todo = plan_keys(cand, done_z) if mode == "continue" else PASS_ALL
+        n, profile = 0, None
+        if todo is not None:
+            group = f"{store.run_id}:{name}"
             if profiler is not None:
-                profiler.detach(store.run_id)
-            notify("failed", f"{name}: {type(exc).__name__}")
-            raise
-        profile = (
-            profiler.profile_for(group) if profiler is not None else None
-        )
+                spark.sparkContext.setJobGroup(group, name)
+            try:
+                # physical layout: sort each partition in z-order so
+                # parquet row groups carry spatial locality (row/col
+                # min/max stats then prune spatial range scans)
+                ordered = build(todo).sortWithinPartitions(
+                    zorder_key_col(F.col("zoom"), F.col("tile_row"), F.col("tile_col"))
+                )
+                written = write_tiles(
+                    store, ordered, tiles_path, payload, partition_by="zoom"
+                )
+            except Exception as exc:  # J7: surface the failing stage
+                if profiler is not None:
+                    profiler.detach(store.run_id)
+                notify("failed", f"{name}: {type(exc).__name__}")
+                raise
+            n = len(written)
+            done_z = np.union1d(done_z, written)
+            if cand is None:
+                cand = candidates(2 * done_z.size)
+            if cand is not None:
+                empty = np.setdiff1d(cand, done_z)
+                store.record_empty(empty)
+                done_z = np.union1d(done_z, empty)
+            done[zoom] = done_z
+            if profiler is not None:
+                profile = profiler.profile_for(group)
         store.record_metric(name, n, (time.time() - t0) * 1000, profile)
         counts[name] = n
 
     pb = max(cfg.pyramid.pixelbuffer, min_pb)
+    out_meta = int(cfg.output.get("metatiling", cfg.pyramid.metatiling))
     notify("running")
 
     # ---- process zooms (descending; one Spark action per zoom = Z5) ----
@@ -496,9 +539,12 @@ def execute(
         params = _resolve_vector_file_params(
             spark, cfg, params, _vector_param_cache
         )
+        inp_spec = cfg.input_at_zoom(zoom)
+        # the output keys are tile-grid arithmetic for DEM inputs; other
+        # inputs define their own tiles, and an output split re-keys them
+        plannable = _is_dem(inp_spec) and out_meta == cfg.pyramid.metatiling
 
-        def build(zoom=zoom, params=params):
-            inp_spec = cfg.input_at_zoom(zoom)
+        def build(todo, zoom=zoom, params=params, inp_spec=inp_spec):
             if kind == "features":
                 from mapchete_spark.operators.process import (
                     run_feature_process,
@@ -515,15 +561,8 @@ def execute(
                     ),
                     cfg.pyramid,
                 )
-                if mode == "continue":
-                    done = store.checkpoint().select(
-                        "tile_key"
-                    ).distinct()
-                    clipped = clipped.join(
-                        done, on="tile_key", how="left_anti"
-                    )
                 return run_feature_process(
-                    clipped, cfg.pyramid, fn, params=params
+                    todo.apply(clipped), cfg.pyramid, fn, params=params
                 )
             if _is_multi_input(inp_spec):
                 if kind != "raster":
@@ -538,113 +577,94 @@ def execute(
                     )
                 tables, groups = _input_tiles_multi(spark, cfg, zoom)
                 return run_multi_raster_process(
-                    tables, cfg.pyramid, fn, params=params,
+                    {n: todo.apply(t) for n, t in tables.items()},
+                    cfg.pyramid, fn, params=params,
                     out_dtype=cfg.output.get("dtype"),
                     out_nodata=cfg.output.get("nodata"),
                     groups=groups,
                 )
             tiles = _input_tiles(spark, cfg, zoom)
-            out_meta_ = int(cfg.output.get("metatiling", cfg.pyramid.metatiling))
-            # continue-mode compute skip: drop already-done PROCESS
-            # TARGETS before the process UDF (this is what makes resume
-            # actually save compute — reference skip-existing semantics,
-            # processing/base.py:456-504). With a pixelbuffer the skip
-            # happens on halo targets so done tiles still mail strips
-            # to unfinished neighbors. Output-split jobs (output keys
-            # != process keys) keep the write-guard-only behavior.
-            skip_keys = None
-            if mode == "continue" and out_meta_ == cfg.pyramid.metatiling:
-                skip_keys = store.checkpoint().select("tile_key").distinct()
-            if kind == "raster":
-                # pixelbuffer fuses the halo exchange into the process
-                out = run_raster_process(
-                    tiles, cfg.pyramid, fn, params=params,
-                    out_dtype=cfg.output.get("dtype"),
-                    out_nodata=cfg.output.get("nodata"),
-                    pixelbuffer=pb,
-                    skip_target_keys=skip_keys,
-                )
-                out_meta = int(cfg.output.get("metatiling", cfg.pyramid.metatiling))
-                if out_meta < cfg.pyramid.metatiling:
-                    # Z4: split process metatiles into output tiles
-                    from mapchete_spark.operators.outputsplit import (
-                        split_to_output_tiles,
-                    )
-                    from mapchete_spark.tilegrid.pyramid import TilePyramid
+            if kind != "raster":
+                tiles = add_buffers(tiles, cfg.pyramid, pb, target_filter=todo)
+                return run_vector_process(tiles, cfg.pyramid, fn, params=params)
+            # continue-mode compute skip: done PROCESS TARGETS are dropped
+            # before the process UDF (reference skip-existing semantics,
+            # processing/base.py:456-504); with a pixelbuffer they still
+            # mail strips to unfinished neighbors. An output split keys
+            # its rows by output tile, so there the filter guards the
+            # write only.
+            split = out_meta < cfg.pyramid.metatiling
+            # pixelbuffer fuses the halo exchange into the process
+            out = run_raster_process(
+                tiles, cfg.pyramid, fn, params=params,
+                out_dtype=cfg.output.get("dtype"),
+                out_nodata=cfg.output.get("nodata"),
+                pixelbuffer=pb,
+                target_filter=None if split else todo,
+            )
+            if not split:
+                return out
+            # Z4: split process metatiles into output tiles
+            from mapchete_spark.operators.outputsplit import (
+                split_to_output_tiles,
+            )
+            from mapchete_spark.tilegrid.pyramid import TilePyramid
 
-                    out_pyr = TilePyramid(
-                        grid=cfg.pyramid.grid,
-                        metatiling=out_meta,
-                        tile_size=cfg.pyramid.tile_size,
-                    )
-                    out = split_to_output_tiles(out, cfg.pyramid, out_pyr)
-            else:
-                tiles = add_buffers(
-                    tiles, cfg.pyramid, pb, skip_target_keys=skip_keys
-                )
-                out = run_vector_process(tiles, cfg.pyramid, fn, params=params)
-            return out
+            out_pyr = TilePyramid(
+                grid=cfg.pyramid.grid,
+                metatiling=out_meta,
+                tile_size=cfg.pyramid.tile_size,
+            )
+            return todo.apply(split_to_output_tiles(out, cfg.pyramid, out_pyr))
 
         stage(
             f"process_z{zoom}",
+            zoom,
+            (
+                lambda limit, zoom=zoom: aoi_tile_keys(
+                    cfg.pyramid, zoom, cfg.bounds, cfg.area, limit
+                )
+            )
+            if plannable
+            else (lambda limit: None),
             build,
-            payload="data" if kind == "raster" else "geometry",
         )
 
     # ---- overview zooms ----
     if cfg.baselevels and mode != "readonly" and kind == "raster":
-        # lower: reduce from the level above, seeding from written output
-        level_above = spark.read.parquet(tiles_path).where(
-            F.col("zoom") == cfg.baselevels.min
-        )
-        lower_zooms = cfg.overview_zooms_lower()
-        banded_worthwhile = True
-        if (
-            getattr(cfg.baselevels, "pipeline", "barrier") == "banded"
-            and lower_zooms
-            and mode == "continue"
-        ):
-            # ADVICE r5: skip the banded rebuild when every lower zoom
-            # is already committed — each checkpointed child at z+1
-            # must have its parent checkpointed at z (standard //2
-            # pyramid rollup). One small aggregate over the checkpoint
-            # table; any gap re-runs the pipeline (per-tile skip then
-            # happens in the commit stages).
-            decoded = (
-                store.checkpoint()
-                .select("tile_key")
-                .distinct()
-                .selectExpr(
-                    "CAST(shiftright(tile_key, 54) AS INT) AS zoom",
-                    "(shiftright(tile_key, 27) & 134217727) AS trow",
-                    "(tile_key & 134217727) AS tcol",
-                )
+
+        def level(zoom: int) -> DataFrame:
+            # the known schema: no schema-inference job per read
+            return (
+                spark.read.schema(RASTER_SCHEMA)
+                .parquet(tiles_path)
+                .where(F.col("zoom") == zoom)
             )
-            per_zoom = {
-                int(r["zoom"]): (int(r["n"]), int(r["np"]))
-                for r in decoded.groupBy("zoom")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.countDistinct(
-                        F.floor(F.col("trow") / 2),
-                        F.floor(F.col("tcol") / 2),
-                    ).alias("np"),
-                )
-                .collect()
-            }
-            banded_worthwhile = any(
-                per_zoom.get(z, (0, 0))[0] < per_zoom.get(z + 1, (0, 0))[1]
+
+        def parents_of_level_above(zoom):
+            return lambda limit: _parent_keys(done.get(zoom + 1, NO_KEYS))
+
+        lower_zooms = cfg.overview_zooms_lower()
+        banded = (
+            getattr(cfg.baselevels, "pipeline", "barrier") == "banded"
+            and bool(lower_zooms)
+        )
+        if banded and mode == "continue":
+            # ADVICE r5: skip the banded rebuild when every lower zoom is
+            # already committed, i.e. no zoom misses a parent of the
+            # level above it (any gap re-runs the pipeline; the per-tile
+            # skip then happens in the commit stages)
+            banded = any(
+                np.setdiff1d(
+                    _parent_keys(done.get(z + 1, NO_KEYS)), done.get(z, NO_KEYS)
+                ).size
                 for z in lower_zooms
             )
-        if (
-            getattr(cfg.baselevels, "pipeline", "barrier") == "banded"
-            and lower_zooms
-            and banded_worthwhile
-        ):
+        if banded:
             # Round 5 fine-grained pipelining: the whole lower chain is
             # BUILT concurrently over independent row bands (no zoom
             # barrier; operators/pipeline_blocks.py), then each level
-            # commits through the normal stage machinery (checkpoint,
+            # commits through the normal stage machinery (manifest,
             # metrics, z-order layout) — commit is IO, not the
             # straggler-bound compute
             import shutil as _shutil
@@ -667,7 +687,7 @@ def execute(
             try:
                 pipelined_pyramid(
                     spark,
-                    level_above,
+                    level(cfg.baselevels.min),
                     cfg.pyramid,
                     cfg.baselevels.min,
                     min(lower_zooms),
@@ -678,44 +698,57 @@ def execute(
                 for zoom in lower_zooms:
                     stage(
                         f"overview_z{zoom}",
-                        lambda z=zoom: read_banded(spark, banded_dir, z),
+                        zoom,
+                        parents_of_level_above(zoom),
+                        lambda todo, z=zoom: todo.apply(
+                            read_banded(spark, banded_dir, z)
+                        ),
                     )
             finally:
                 _shutil.rmtree(banded_dir, ignore_errors=True)
             lower_zooms = []
-        for zoom in lower_zooms:
-            src = level_above
-            if mode == "continue":
-                # compute skip: drop children whose PARENT is already
-                # checkpointed before the reduce shuffle
-                from mapchete_spark.functions.geo import parent_tile_key_col
 
-                parent_key = parent_tile_key_col(
-                    F.col("zoom"), F.col("tile_row"), F.col("tile_col")
-                )
-                done = store.checkpoint().select(
-                    F.col("tile_key").alias("__parent_key")
-                ).distinct()
-                src = (
-                    src.withColumn("__parent_key", parent_key)
-                    .join(done, on="__parent_key", how="left_anti")
-                    .drop("__parent_key")
-                )
-            reduced = overview_reduce_once(
+        # lower: reduce from the level above; compute skip drops children
+        # whose PARENT is done before the reduce shuffle
+        def reduce(todo, zoom):
+            parent_key = parent_tile_key_col(
+                F.col("zoom"), F.col("tile_row"), F.col("tile_col")
+            )
+            src = todo.apply(
+                level(zoom + 1).withColumn("__parent_key", parent_key),
+                "__parent_key",
+            ).drop("__parent_key")
+            return overview_reduce_once(
                 src, cfg.pyramid, resampling=cfg.baselevels.lower
             )
-            stage(f"overview_z{zoom}", lambda reduced=reduced: reduced)
-            level_above = spark.read.parquet(tiles_path).where(F.col("zoom") == zoom)
-        # higher: upsample children from the top baselevel
-        level_below = spark.read.parquet(tiles_path).where(
-            F.col("zoom") == cfg.baselevels.max
-        )
-        for zoom in cfg.overview_zooms_higher():
-            upsampled = overview_upsample(
-                level_below, cfg.pyramid, resampling=cfg.baselevels.higher
+
+        for zoom in lower_zooms:
+            stage(
+                f"overview_z{zoom}",
+                zoom,
+                parents_of_level_above(zoom),
+                lambda todo, zoom=zoom: reduce(todo, zoom),
             )
-            stage(f"overview_z{zoom}", lambda upsampled=upsampled: upsampled)
-            level_below = spark.read.parquet(tiles_path).where(F.col("zoom") == zoom)
+
+        # higher: upsample children from the level below; a keep filter
+        # also limits the parents read
+        def upsample(todo, zoom):
+            src = level(zoom - 1)
+            if todo.keep:
+                src = KeyFilter(_parent_keys(todo.keys), keep=True).apply(src)
+            return todo.apply(
+                overview_upsample(src, cfg.pyramid, resampling=cfg.baselevels.higher)
+            )
+
+        for zoom in cfg.overview_zooms_higher():
+            stage(
+                f"overview_z{zoom}",
+                zoom,
+                lambda limit, zoom=zoom: _child_keys(
+                    done.get(zoom - 1, NO_KEYS), cfg.pyramid
+                ),
+                lambda todo, zoom=zoom: upsample(todo, zoom),
+            )
 
     # output metadata sidecar (S10 analog: formats/base.py:476-478)
     if mode != "readonly":

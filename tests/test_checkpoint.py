@@ -5,17 +5,29 @@ missing tiles are recomputed).
 The eight scenarios are independent (each owns its JobStore/out dir),
 so a module fixture runs them CONCURRENTLY on the shared session (the
 parity-pool pattern); a scenario's exception is stored and re-raised
-by the owning test only."""
+by the owning test only. The tests that count Spark jobs or patch the
+store run on their own, after the pool."""
 
+import hashlib
 import os
 import shutil
 import traceback
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
+import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
 
-from mapchete_spark.operators.checkpoint import JobStore, run_stage
+from mapchete_spark.operators.checkpoint import (
+    COMPACT_PARTS,
+    JobStore,
+    KeyFilter,
+    plan_keys,
+    run_stage,
+    tile_files,
+)
 from mapchete_spark.operators.rastertable import materialize_dem
 from mapchete_spark.tilegrid import Bounds, TilePyramid
 
@@ -81,14 +93,18 @@ def scenarios(spark, tmp_path_factory):
         n2 = run_stage(store, "s", lambda: _dem(spark), mode="overwrite")
         return dict(n1=n1, n2=n2)
 
-    def lineage():
+    def manifest():
         store = JobStore(spark, str(base / "s5" / "job"))
         run_stage(store, "dem_z5", lambda: _dem(spark))
-        lin = store.lineage()
         return dict(
-            n=lin.count(),
-            parts=lin.select("partition_id").distinct().count(),
-            cols=set(lin.columns),
+            rows=[r.asDict() for r in store.checkpoint().collect()],
+            want={
+                r["tile_key"]: r["h"]
+                for r in _dem(spark)
+                .select("tile_key", F.md5("data").alias("h"))
+                .collect()
+            },
+            run_id=store.run_id,
             metrics=[r.asDict() for r in store.metrics().collect()],
         )
 
@@ -161,7 +177,7 @@ def scenarios(spark, tmp_path_factory):
     thunks = dict(
         first_run=first_run, second_run=second_run,
         resume_missing=resume_missing, overwrite=overwrite,
-        lineage=lineage, changed_since=changed_since,
+        manifest=manifest, changed_since=changed_since,
         continue_skips_compute=continue_skips_compute,
         partial_resume_halo=partial_resume_halo,
     )
@@ -209,14 +225,15 @@ def test_overwrite_mode(scenarios):
     assert r["n1"] == r["n2"] > 0
 
 
-def test_lineage_and_metrics_recorded(scenarios):
-    r = _res(scenarios, "lineage")
-    assert r["n"] > 0
-    assert r["parts"] >= 1
-    assert {
-        "tile_key", "zoom", "partition_id", "n_src_rows", "payload_md5",
-        "run_id",
-    } <= r["cols"]
+def test_manifest_and_metrics_recorded(scenarios):
+    """One manifest row per committed tile, carrying its payload hash
+    and the committing run."""
+    r = _res(scenarios, "manifest")
+    assert len(r["want"]) > 0
+    assert sorted(row["tile_key"] for row in r["rows"]) == sorted(r["want"])
+    for row in r["rows"]:
+        assert row["payload_md5"] == r["want"][row["tile_key"]]
+        assert row["run_id"] == r["run_id"]
     assert any(
         m["stage"] == "dem_z5" and m["n_rows"] > 0 for m in r["metrics"]
     )
@@ -246,3 +263,169 @@ def test_partial_resume_recomputes_only_missing_with_halo(scenarios):
     for row in r["rows"]:
         assert row["tile_key"] % 2 == 1  # only the missing half recomputed
         assert r["fresh"][row["tile_key"]] == row["h"]  # halo intact
+
+
+def test_plan_keys_picks_the_smaller_filter():
+    cand = np.arange(10, dtype=np.int64)
+    assert plan_keys(cand, cand) is None
+    # 2 todo < 8 done: keep the todo keys
+    f = plan_keys(cand, np.arange(8, dtype=np.int64))
+    assert f.keep and f.keys.tolist() == [8, 9]
+    # 2 done (of those inside the candidates) < 8 todo: drop them
+    f = plan_keys(cand, np.array([3, 4, 99], dtype=np.int64))
+    assert not f.keep and f.keys.tolist() == [3, 4]
+    # unknown candidates: drop every done key
+    f = plan_keys(None, np.array([3, 99], dtype=np.int64))
+    assert not f.keep and f.keys.tolist() == [3, 99]
+
+
+def test_key_filter_keeps_or_drops(spark):
+    df = spark.range(20).withColumnRenamed("id", "tile_key")
+    # a key set far larger than the table goes through the same path
+    for keys in (np.array([1, 3, 5]), np.arange(1, 400_000, 2)):
+        keys = keys.astype(np.int64)
+        kept = sorted(r[0] for r in KeyFilter(keys, keep=True).apply(df).collect())
+        dropped = sorted(r[0] for r in KeyFilter(keys).apply(df).collect())
+        assert kept == [k for k in range(20) if k in keys]
+        assert dropped == [k for k in range(20) if k not in keys]
+
+
+def _pyramid_cfg(out, hole=False):
+    """A pixelbuffered process zoom plus one overview zoom. With the DEM
+    hole, one of the six process tiles is all nodata: its process raises
+    Empty and no tile is written for it."""
+    from mapchete_spark.plans.config import JobConfig
+
+    z, bounds = (6, [101.25, -2.8125, 109.6875, 2.8125]) if hole else (5, [0.0, 30.0, 22.5, 45.0])
+    return JobConfig.from_dict(
+        dict(
+            process="hillshade",
+            zoom_levels=dict(min=z - 1, max=z),
+            pyramid=dict(grid="geodetic", pixelbuffer=1),
+            baselevels=dict(min=z, max=z, lower="average"),
+            input=dict(source="dem", hole=hole),
+            output=dict(format="parquet_tiles", dtype="uint8", nodata=0, path=out),
+            bounds=bounds,
+        )
+    )
+
+
+def _stored(out):
+    """(tile_key, payload md5) of every stored row."""
+    t = pads.dataset(os.path.join(out, "tiles"), format="parquet").to_table(
+        columns=["tile_key", "data"]
+    )
+    return [
+        (k, hashlib.md5(d).hexdigest())
+        for k, d in zip(t.column("tile_key").to_pylist(), t.column("data").to_pylist())
+    ]
+
+
+def _file_digests(root):
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.md5(fh.read()).hexdigest()
+    return out
+
+
+def _last_job_id(spark):
+    """Id of a fresh one-task probe job; Spark numbers jobs in order."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-id probe")
+    try:
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("hole", [False, True])
+def test_noop_continue_starts_no_spark_job(spark, tmp_path, hole):
+    """A continue run with nothing left to do is planned on the driver:
+    it starts no Spark job and leaves every tile file as it was, and its
+    bookkeeping does not grow the state tables past the compaction
+    bound. A tile whose process raised Empty counts as done."""
+    from mapchete_spark.plans.job import execute
+
+    out = str(tmp_path / "o")
+    first = execute(spark, _pyramid_cfg(out, hole), mode="continue")
+    assert all(n > 0 for n in first.values()), first
+    manifest = JobStore(spark, os.path.join(out, "_state")).checkpoint()
+    assert manifest.where(F.col("payload_md5").isNull()).count() == (1 if hole else 0)
+    before = _file_digests(os.path.join(out, "tiles"))
+    for _ in range(COMPACT_PARTS + 2):
+        j0 = _last_job_id(spark)
+        counts = execute(spark, _pyramid_cfg(out, hole), mode="continue")
+        j1 = _last_job_id(spark)
+        assert counts == {k: 0 for k in first}
+        assert j1 - j0 - 1 == 0, f"no-op run started {j1 - j0 - 1} Spark jobs"
+    assert _file_digests(os.path.join(out, "tiles")) == before
+    for table in ("checkpoint", "metrics", "status"):
+        parts = [
+            f
+            for f in os.listdir(os.path.join(out, "_state", table))
+            if f.endswith(".parquet") and not f.startswith(".")
+        ]
+        assert len(parts) <= COMPACT_PARTS + 1, (table, parts)
+
+
+def test_crash_between_write_and_commit_is_repaired(spark, tmp_path, monkeypatch):
+    """A run that dies after its tile write but before the manifest
+    commit leaves uncommitted tile files; the next continue run adopts
+    them: every key is stored exactly once, with a clean run's bytes."""
+    from mapchete_spark.plans.job import execute
+
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    real_commit = JobStore.commit_files
+    calls = []
+
+    def commit_crashing_once(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("crash between tile write and commit")
+        return real_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(JobStore, "commit_files", commit_crashing_once)
+    with pytest.raises(RuntimeError):
+        execute(spark, _pyramid_cfg(crashed), mode="continue")
+    # the process zoom's tiles were written, none was committed
+    assert tile_files(os.path.join(crashed, "tiles"))
+    assert JobStore(spark, os.path.join(crashed, "_state")).done_keys().size == 0
+
+    repaired = execute(spark, _pyramid_cfg(crashed), mode="continue")
+    assert repaired["process_z5"] == 0  # adopted, not recomputed
+    execute(spark, _pyramid_cfg(clean), mode="continue")
+    stored, want = _stored(crashed), _stored(clean)
+    keys = [k for k, _ in stored]
+    assert len(keys) == len(set(keys)), "a tile is stored twice"
+    assert dict(stored) == dict(want)
+    assert len(want) == len(stored)
+
+
+def test_compacted_tile_table_adds_no_manifest_rows(spark, tmp_path):
+    """Compacting the tile table renames every tile file, so no manifest
+    row names them; the next continue run reads their keys, finds them
+    done and commits nothing: no tile is hashed again, none counts as
+    changed since the first run."""
+    from mapchete_spark.plans.job import execute
+    from mapchete_spark.sources.compact import compact_tile_table
+
+    out = str(tmp_path / "o")
+    execute(spark, _pyramid_cfg(out), mode="continue")
+    store = JobStore(spark, os.path.join(out, "_state"))
+    rows = store.checkpoint().count()
+    (first_run,) = [r[0] for r in store.checkpoint().select("run_id").distinct().collect()]
+    tiles = os.path.join(out, "tiles")
+    files = tile_files(tiles)
+    compact_tile_table(spark, tiles)
+    assert not files & tile_files(tiles)
+
+    counts = execute(spark, _pyramid_cfg(out), mode="continue")
+    assert counts == {"process_z5": 0, "overview_z4": 0}
+    assert store.checkpoint().count() == rows
+    assert store.changed_since(first_run).count() == 0
