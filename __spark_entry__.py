@@ -1858,7 +1858,8 @@ def q_job_stage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seq",
             "stage",
             F.col("n_rows").alias("n_tiles"),
-            # J6 task-metrics profile (operators/profilers listener):
+            # J6 task-metrics profile (operators/profilers, pulled from
+            # Spark's status store by each stage's job group):
             # executor run time and peak execution memory must be
             # measured for every stage...
             (

@@ -15,7 +15,8 @@ driver instead of scanning tables (the Jigsaw idea, PAPERS.md):
   written by a run that crashed before its commit; ``adopt_orphans``
   records its rows whose keys are not done, so a continue run neither
   recomputes nor duplicates its tiles.
-- metrics: per-stage row counts + wall time per run (J6 profilers).
+- metrics: per-stage row counts, wall time and Spark task metrics per
+  run (J6 profilers, pulled from Spark's status store).
 - status: the J7 lifecycle transitions of each run.
 
 Tile ids are computed, never stored (SURVEY §1.1), so a stage's todo
@@ -63,7 +64,7 @@ _ARROW = {
             ("wall_ms", pa.float64()),
             ("at", pa.float64()),
             # J6 task-metrics profile (operators/profilers.StageMetricsProfiler;
-            # nulls when no profiler was attached or the stage ran no job)
+            # nulls when the stage ran no job)
             ("task_run_ms", pa.float64()),
             ("peak_mem_bytes", pa.int64()),
             ("shuffle_read_bytes", pa.int64()),
@@ -350,7 +351,8 @@ class JobStore:
         self, stage: str, n_rows: int, wall_ms: float, profile: dict = None
     ):
         """One metrics row per stage; ``profile`` carries the Spark
-        TaskMetrics aggregate from StageMetricsProfiler (J6)."""
+        TaskMetrics totals of the stage's job group, pulled by
+        StageMetricsProfiler (J6); None when the stage ran no job."""
         p = profile or {}
         self._append(
             "metrics",

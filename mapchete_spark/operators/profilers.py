@@ -1,185 +1,60 @@
 """J6 task-metrics profilers — Spark-native twin of the reference's
 measurement decorators (mapchete/processing/profilers/{memory,time}.py
 attach per-task memory/time tracking; here the Spark scheduler already
-measures every task, so the profiler is a SparkListener that aggregates
-task metrics per JOB STAGE and lands them in the job's metrics table).
+measures every task and keeps the totals per stage in its own status
+store, so the profile of a job group is read from there after the fact).
 
-The listener is a py4j callback object implementing
-SparkListenerInterface (the same callback-server mechanism Structured
-Streaming's foreachBatch uses): onJobStart maps Spark stage ids to the
-current job group (plans/job.py sets the group to the mapchete stage
-name), onStageCompleted folds that stage's accumulated TaskMetrics —
-peak execution memory, shuffle read/write bytes, spill bytes, executor
-run time — into the per-group totals. Works identically on a real
-cluster: TaskMetrics are collected driver-side from task completion
-events regardless of executor count.
+A pull, not a listener: ``profile_for(group)`` drains the listener bus
+once, takes the group's job ids and their stage ids from the status
+tracker, and folds each stage's ``v1.StageData`` — executor run time,
+peak execution memory, shuffle read/write bytes, spill bytes — into one
+dict, counting a stage shared by two jobs of the group once. No Python
+object sits on the event bus and no py4j callback server is started.
 """
 
 from __future__ import annotations
 
-import threading
-from collections import defaultdict
-from typing import Dict, Optional
-
-
-def _empty_profile() -> Dict[str, int]:
-    return {
-        "task_run_ms": 0,
-        "peak_mem_bytes": 0,
-        "shuffle_read_bytes": 0,
-        "shuffle_write_bytes": 0,
-        "spilled_bytes": 0,
-    }
+from typing import Dict
 
 
 class StageMetricsProfiler:
-    """Aggregates Spark TaskMetrics per job group.
+    """Reads Spark TaskMetrics totals per job group from the status store.
 
-    Usage (plans/job.py):
-
-        prof = StageMetricsProfiler.attach(spark)   # None if unavailable
-        ...
-        spark.sparkContext.setJobGroup(stage_name, stage_name)
+        prof = StageMetricsProfiler.attach(spark)
+        spark.sparkContext.setJobGroup(group, description)
         <run the stage action>
-        profile = prof.profile_for(stage_name)      # dict of counters
-        ...
-        prof.detach()
+        profile = prof.profile_for(group)
     """
 
     def __init__(self, spark):
-        self._spark = spark
-        self._stage_to_group: Dict[int, Optional[str]] = {}
-        self.groups: Dict[Optional[str], Dict[str, int]] = defaultdict(
-            _empty_profile
-        )
-        # Guards every read/write of _stage_to_group and groups: the
-        # py4j callback thread mutates them (onJobStart /
-        # onStageCompleted) while job threads iterate them (detach /
-        # profile_for); dict resize under concurrent iteration raises
-        # RuntimeError.
-        self._lock = threading.Lock()
-
-    # -- SparkListenerInterface callbacks (called from the JVM) --------
-
-    def onJobStart(self, job_start):
-        group = job_start.properties().get("spark.jobGroup.id")
-        infos = job_start.stageInfos()
-        stage_ids = [infos.apply(i).stageId() for i in range(infos.size())]
-        with self._lock:
-            for sid in stage_ids:
-                self._stage_to_group[sid] = group
-
-    def onStageCompleted(self, stage_completed):
-        si = stage_completed.stageInfo()
-        m = si.taskMetrics()
-        # Pull the JVM-side numbers before taking the lock: py4j round
-        # trips are slow and must not serialize against job threads.
-        run_ms = int(m.executorRunTime())
-        peak = int(m.peakExecutionMemory())
-        sh_read = int(m.shuffleReadMetrics().totalBytesRead())
-        sh_write = int(m.shuffleWriteMetrics().bytesWritten())
-        spilled = int(m.memoryBytesSpilled())
-        with self._lock:
-            group = self._stage_to_group.get(si.stageId())
-            agg = self.groups[group]
-            agg["task_run_ms"] += run_ms
-            agg["peak_mem_bytes"] = max(agg["peak_mem_bytes"], peak)
-            agg["shuffle_read_bytes"] += sh_read
-            agg["shuffle_write_bytes"] += sh_write
-            agg["spilled_bytes"] += spilled
-
-    # py4j proxies dispatch by attribute lookup: every other listener
-    # callback (onTaskEnd, onExecutorAdded, ...) no-ops through here
-    def __getattr__(self, name):
-        if name == "equals":
-            return lambda other: False
-        if name == "hashCode":
-            return lambda: id(self)
-        if name == "toString":
-            return lambda: "StageMetricsProfiler"
-        return lambda *a, **k: None
-
-    class Java:
-        implements = ["org.apache.spark.scheduler.SparkListenerInterface"]
-
-    # -- driver-side API ----------------------------------------------
-
-    #: one listener per SparkContext, registered once and NEVER removed.
-    #: Two reasons (round-5 finding): (a) removal is impossible anyway —
-    #: the JVM bus removes by .equals(), and a py4j proxy's equals routes
-    #: back to Python, where this class answered a hard False, so every
-    #: removeSparkListener silently no-opped and each execute() LEAKED a
-    #: callback listener (every task/stage/job event then crossed the
-    #: py4j socket once per leaked listener — the whole-session
-    #: progressive slowdown, ~5x on late suite modules); (b) a singleton
-    #: is the correct shape regardless: groups are keyed by run_id-
-    #: prefixed job group, so concurrent execute() calls share one
-    #: listener and read only their own groups.
-    _SINGLETON: Dict[int, "StageMetricsProfiler"] = {}
-    #: serializes the check-then-act in attach(): without it two threads
-    #: racing through `get is None` both addSparkListener and every
-    #: event double-counts forever.
-    _SINGLETON_LOCK = threading.Lock()
+        self._sc = spark.sparkContext
 
     @classmethod
-    def attach(cls, spark) -> Optional["StageMetricsProfiler"]:
-        """Return the per-context singleton, registering it on the
-        listener bus on first use; None if the py4j callback server
-        cannot start (never fails the job over profiling)."""
-        try:
-            from pyspark.java_gateway import ensure_callback_server_started
-
-            sc = spark.sparkContext
-            key = id(sc._jsc)
-            with cls._SINGLETON_LOCK:
-                prof = cls._SINGLETON.get(key)
-                if prof is not None:
-                    return prof
-                ensure_callback_server_started(sc._gateway)
-                prof = cls(spark)
-                sc._jsc.sc().addSparkListener(prof)
-                cls._SINGLETON[key] = prof
-                return prof
-        except Exception:
-            return None
-
-    def flush(self) -> None:
-        """Drain the async listener bus so every completed stage's
-        metrics are folded in before reading (listener events trail the
-        action's return). listenerBus.waitUntilEmpty is private[spark],
-        which is public at the JVM level."""
-        try:
-            self._spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(
-                5000
-            )
-        except Exception:
-            try:
-                self._spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-            except Exception:
-                import time
-
-                time.sleep(0.5)
+    def attach(cls, spark) -> "StageMetricsProfiler":
+        """Registers nothing; kept so callers read one API."""
+        return cls(spark)
 
     def profile_for(self, group: str) -> Dict[str, int]:
-        self.flush()
-        with self._lock:
-            return dict(self.groups.get(group) or _empty_profile())
-
-    def detach(self, run_prefix: Optional[str] = None) -> None:
-        """Release one run's bookkeeping. The listener itself stays on
-        the bus (singleton; see attach). With a ``run_prefix`` only
-        that run's groups are pruned — concurrent runs' data survives;
-        without one, nothing is pruned (safe default)."""
-        if not run_prefix:
-            return
-        with self._lock:
-            for g in [
-                k for k in self.groups if k and k.startswith(run_prefix)
-            ]:
-                self.groups.pop(g, None)
-            drop = [
-                sid for sid, grp in self._stage_to_group.items()
-                if grp and grp.startswith(run_prefix)
-            ]
-            for sid in drop:
-                self._stage_to_group.pop(sid, None)
+        # status-store updates trail the action's return on the async bus
+        jsc = self._sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty(5000)
+        tracker, store = self._sc.statusTracker(), jsc.statusStore()
+        stage_ids = {
+            sid
+            for jid in tracker.getJobIdsForGroup(group)
+            for sid in getattr(tracker.getJobInfo(jid), "stageIds", ())
+        }
+        p = dict.fromkeys(
+            ("task_run_ms", "peak_mem_bytes", "shuffle_read_bytes",
+             "shuffle_write_bytes", "spilled_bytes"), 0,
+        )
+        for sid in stage_ids:
+            attempts = store.stageData(sid, False, None, False, None)
+            for i in range(attempts.size()):
+                s = attempts.apply(i)
+                p["task_run_ms"] += s.executorRunTime()
+                p["peak_mem_bytes"] = max(p["peak_mem_bytes"], s.peakExecutionMemory())
+                p["shuffle_read_bytes"] += s.shuffleReadBytes()
+                p["shuffle_write_bytes"] += s.shuffleWriteBytes()
+                p["spilled_bytes"] += s.memoryBytesSpilled()
+        return p

@@ -86,6 +86,13 @@ def register_process(name: str, kind: str, fn: Callable, min_pixelbuffer: int = 
     PROCESS_REGISTRY[name] = (kind, fn, min_pixelbuffer)
 
 
+# the thread-local properties SparkContext.setJobGroup sets
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
 # output formats producing feature rows instead of raster payloads
 _VECTOR_FORMATS = {"geojson", "flatgeobuf", "vector", "parquet_features"}
 
@@ -467,11 +474,11 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
     counts: Dict[str, int] = {}
 
     # J6: per-stage Spark TaskMetrics (peak memory, shuffle bytes, spill)
-    # via a listener keyed on the job group; None if the callback server
-    # is unavailable — profiling never fails the job
+    # pulled from Spark's status store by the stage's job group
     from mapchete_spark.operators.profilers import StageMetricsProfiler
 
     profiler = StageMetricsProfiler.attach(spark)
+    sc = spark.sparkContext
 
     def stage(name: str, zoom: int, candidates, build):
         """Plan on the driver, then — if anything is left to do — one
@@ -495,8 +502,10 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         n, profile = 0, None
         if todo is not None:
             group = f"{store.run_id}:{name}"
-            if profiler is not None:
-                spark.sparkContext.setJobGroup(group, name)
+            # the caller's job group comes back after the stage, so its
+            # own jobs are not attributed to the engine's last stage
+            caller = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+            sc.setJobGroup(group, name)
             try:
                 # physical layout: sort each partition in z-order so
                 # parquet row groups carry spatial locality (row/col
@@ -508,10 +517,11 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                     store, ordered, tiles_path, payload, partition_by="zoom"
                 )
             except Exception as exc:  # J7: surface the failing stage
-                if profiler is not None:
-                    profiler.detach(store.run_id)
                 notify("failed", f"{name}: {type(exc).__name__}")
                 raise
+            finally:
+                for k, v in caller.items():
+                    sc.setLocalProperty(k, v)
             n = len(written)
             done_z = np.union1d(done_z, written)
             if cand is None:
@@ -521,8 +531,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                 store.record_empty(empty)
                 done_z = np.union1d(done_z, empty)
             done[zoom] = done_z
-            if profiler is not None:
-                profile = profiler.profile_for(group)
+            profile = profiler.profile_for(group)
         store.record_metric(name, n, (time.time() - t0) * 1000, profile)
         counts[name] = n
 
@@ -762,8 +771,6 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         os.makedirs(out_path, exist_ok=True)
         with open(os.path.join(out_path, "metadata.json"), "w") as f:
             json.dump(meta, f, indent=2, default=str)
-    if profiler is not None:
-        profiler.detach(store.run_id)
     notify("done")
     return counts
 

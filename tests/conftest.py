@@ -17,6 +17,12 @@ def spark():
     # The oracle-parity replay also fans 12 concurrent query threads
     # into the session, which local[16] absorbs. Override with
     # SPARK_GRAFT_TEST_MASTER when sharing the machine.
+    # Threads and heap are capped by the host: on a 4-vCPU / 16 GB host
+    # local[16] with a 16g heap used 16.06 of 16.09 GB during the parity
+    # pool (~8 GB JVM plus ~80 Python workers at ~8 GB PSS), one large
+    # allocation short of the kernel killing the JVM mid-suite.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
     extra = {}
     if not os.environ.get("SPARK_GRAFT_TEST_CODEGEN"):
         # Janino whole-stage compilation costs 100-300ms per UNIQUE
@@ -37,9 +43,13 @@ def spark():
         # (session.py scales heap to THREADS, not to this suite's
         # concurrency): the 20-thread parity pool plus the raster jobs
         # thrash G1 at 8g — measured: the config-baselevels cubic job
-        # 41s -> 6.6s and the parity fixture 170s -> 135s at 16g
-        extra["spark.driver.memory"] = "16g"
-    master = os.environ.get("SPARK_GRAFT_TEST_MASTER", "local[16]")
+        # 41s -> 6.6s and the parity fixture 170s -> 135s at 16g;
+        # at most 2/5 of the host's memory (6g on 16 GB, where local[4]
+        # with a 6g heap runs the suite in ~10 min)
+        extra["spark.driver.memory"] = f"{max(4, min(16, host_gb * 2 // 5))}g"
+    master = os.environ.get(
+        "SPARK_GRAFT_TEST_MASTER", f"local[{max(1, min(16, cpus))}]"
+    )
     s = get_spark(
         "mapchete_spark_tests", master=master, shuffle_partitions=8,
         extra_conf=extra,

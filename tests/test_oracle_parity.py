@@ -9,8 +9,7 @@ session (Spark schedules jobs from many threads; PySpark's pinned
 thread mode keeps setJobGroup thread-local) with one DuckDB cursor per
 thread. The parametrized tests then assert on precomputed results —
 same per-query failure granularity, ~6x less wall time than the old
-sequential run. Queries that mutate session-global state (the
-TaskMetrics listener) or fork a spark-submit subprocess stay
+sequential run. A query that forks a spark-submit subprocess stays
 sequential."""
 
 import math
@@ -19,14 +18,12 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
-# queries that can't interleave with the pooled phase.
-# job_stage_metrics attributes stages by run_id-prefixed job group (so
-# attribution itself is concurrency-safe), but its py4j listener came
-# back with unprofiled stages whenever cli_execute's spark-submit
-# subprocess ran in the pool (even with job_stage_metrics itself run
-# after the pool drained) — some callback-server interference; both
-# stay sequential, which measures clean.
-_SEQUENTIAL = {"job_stage_metrics", "cli_execute"}
+# queries that can't interleave with the pooled phase: cli_execute
+# forks a spark-submit subprocess. job_stage_metrics runs in the pool,
+# so its every-stage-profiled expectation also checks that stage
+# profiles pulled by run_id-prefixed job group stay apart under the
+# pool's concurrent queries.
+_SEQUENTIAL = {"cli_execute"}
 
 _POOL_WORKERS = 28
 
@@ -130,8 +127,7 @@ def parity_results(spark, duck, sf_dir):
             return name, ("err", traceback.format_exc(), None)
 
     results = {}
-    # sequential queries FIRST: job_stage_metrics needs a quiet
-    # listener bus, which only exists before the pool floods it
+    # sequential queries first, before the pool floods the session
     for name in (n for n in names if n in _SEQUENTIAL):
         results[name] = run(name)[1]
     pooled = [n for n in names if n not in _SEQUENTIAL]
