@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from mapchete_spark.functions import geo as G
 from mapchete_spark.functions import spans as SP
 from mapchete_spark.operators.assign import assign_bbox_tiles, assign_point_tiles
+from mapchete_spark.operators.partitioning import spread_small_input
 from mapchete_spark.operators.pyramid import (
     reduce_docs_to_tiles,
     rollup_pyramid,
@@ -390,8 +391,7 @@ def q_span_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # posexplode so the struct fan-out runs on every core instead of the
     # scan's single task (results unchanged; the declared explode ->
     # shuffle -> reassemble pipeline below is untouched)
-    if docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = spread_small_input(docs, "doc_id")
     docs = SP.with_spans(docs)
     # the declared mid-pipeline shuffle, at the session's width: hash
     # partitioning by doc_id at defaultParallelism also satisfies the
@@ -2695,43 +2695,6 @@ def o_contours() -> str:
     from mapchete_spark.functions import rastersql as R
 
     return R.contours_sql(_RASTER_ZOOM, *_raster_ranges(), interval=200.0)
-
-
-def q_banded_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z3 fine-grained inter-zoom pipelining (round 5;
-    operators/pipeline_blocks.py): the same zoom 5->3 average pyramid
-    as `overviews`, built through CONCURRENT independent row-band
-    chains (the Spark-idiomatic rendering of the reference's
-    child->parent task graph, processing/tasks.py:570-617 — a
-    straggler band no longer holds the zoom barrier). Banding must be
-    a pure reordering of WHEN parents compute: the digests reproduce
-    the barrier build's multi-level oracle bit-exactly."""
-    import tempfile
-
-    from mapchete_spark.operators.digests import tile_value_digests
-    from mapchete_spark.operators.pipeline_blocks import (
-        pipelined_pyramid,
-        read_banded,
-    )
-    from mapchete_spark.operators.rastertable import materialize_dem
-
-    pyr, aoi = _raster_ctx()
-    dem = materialize_dem(spark, _RASTER_ZOOM, pyr, bounds=aoi, hole=False)
-    d = tempfile.mkdtemp(prefix="msq_banded_")
-    pipelined_pyramid(
-        spark, dem, pyr, _RASTER_ZOOM, 3, d, n_bands=4,
-        resampling="average",
-    )
-    out = None
-    for z in range(_RASTER_ZOOM - 1, 2, -1):
-        lvl = tile_value_digests(read_banded(spark, d, z), with_dims=False)
-        out = lvl if out is None else out.unionByName(lvl)
-    return out.orderBy(F.desc("zoom"), "tile_row", "tile_col")
-
-
-def o_banded_pyramid() -> str:
-    """The barrier build's oracle verbatim: banding is row-identity."""
-    return o_overviews()
 
 
 def q_overviews(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5450,7 +5413,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pii_scrub": q_pii_scrub,
         "raster_file_input": q_raster_file_input,
         "vector_file_input": q_vector_file_input,
-        "banded_pyramid": q_banded_pyramid,
         "dsir_weights": q_dsir_weights,
         "compact_roundtrip": q_compact_roundtrip,
         "kmeans": q_kmeans,
@@ -5982,7 +5944,6 @@ def oracle_sql() -> dict[str, str]:
     out["feature_clip_job"] = o_feature_clip_job()
     out["omerc_reproject"] = o_omerc_reproject()
     out["raster_files_input"] = o_raster_files_input()
-    out["banded_pyramid"] = o_banded_pyramid()
     out["dsir_weights"] = o_dsir_weights()
     out["overviews"] = o_overviews()
     out["upsample"] = o_upsample()

@@ -107,12 +107,6 @@ class Baselevels:
     max: int
     lower: str = "nearest"
     higher: str = "nearest"
-    # "barrier" (default, one stage per zoom) or "banded" (round 5:
-    # fine-grained inter-zoom pipelining over aligned row bands,
-    # operators/pipeline_blocks.py — the reference's child->parent
-    # task-graph behavior, processing/tasks.py:570-617)
-    pipeline: str = "barrier"
-    bands: int = 4
 
 
 @dataclass
@@ -164,14 +158,7 @@ class JobConfig:
                 max=int(raw["max"]),
                 lower=raw.get("lower", "nearest"),
                 higher=raw.get("higher", "nearest"),
-                pipeline=raw.get("pipeline", "barrier"),
-                bands=int(raw.get("bands", 4)),
             )
-            if bl.pipeline not in ("barrier", "banded"):
-                raise ConfigError(
-                    f"baselevels.pipeline must be barrier|banded, "
-                    f"got {bl.pipeline!r}"
-                )
             if bl.min < min(zooms) or bl.max > max(zooms):
                 raise ConfigError("baselevels must be within zoom_levels")
         bounds = Bounds(*conf["bounds"]) if conf.get("bounds") else None

@@ -650,73 +650,6 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                 .where(F.col("zoom") == zoom)
             )
 
-        def parents_of_level_above(zoom):
-            return lambda limit: _parent_keys(done.get(zoom + 1, NO_KEYS))
-
-        lower_zooms = cfg.overview_zooms_lower()
-        banded = (
-            getattr(cfg.baselevels, "pipeline", "barrier") == "banded"
-            and bool(lower_zooms)
-        )
-        if banded and mode == "continue":
-            # ADVICE r5: skip the banded rebuild when every lower zoom is
-            # already committed, i.e. no zoom misses a parent of the
-            # level above it (any gap re-runs the pipeline; the per-tile
-            # skip then happens in the commit stages)
-            banded = any(
-                np.setdiff1d(
-                    _parent_keys(done.get(z + 1, NO_KEYS)), done.get(z, NO_KEYS)
-                ).size
-                for z in lower_zooms
-            )
-        if banded:
-            # Round 5 fine-grained pipelining: the whole lower chain is
-            # BUILT concurrently over independent row bands (no zoom
-            # barrier; operators/pipeline_blocks.py), then each level
-            # commits through the normal stage machinery (manifest,
-            # metrics, z-order layout) — commit is IO, not the
-            # straggler-bound compute
-            import shutil as _shutil
-            import tempfile as _tempfile
-
-            from mapchete_spark.operators.pipeline_blocks import (
-                pipelined_pyramid,
-                read_banded,
-            )
-
-            # scratch lives under the job STATE directory, not inside
-            # the tile output tree (ADVICE r5: a failing stage used to
-            # leave msq_banded_* parquet INSIDE out_path, where tile
-            # readers would trip over it); the state dir is on the same
-            # shared filesystem, which a real cluster needs
-            os.makedirs(store.path, exist_ok=True)
-            banded_dir = _tempfile.mkdtemp(
-                prefix="_banded_", dir=store.path
-            )
-            try:
-                pipelined_pyramid(
-                    spark,
-                    level(cfg.baselevels.min),
-                    cfg.pyramid,
-                    cfg.baselevels.min,
-                    min(lower_zooms),
-                    banded_dir,
-                    n_bands=getattr(cfg.baselevels, "bands", 4),
-                    resampling=cfg.baselevels.lower,
-                )
-                for zoom in lower_zooms:
-                    stage(
-                        f"overview_z{zoom}",
-                        zoom,
-                        parents_of_level_above(zoom),
-                        lambda todo, z=zoom: todo.apply(
-                            read_banded(spark, banded_dir, z)
-                        ),
-                    )
-            finally:
-                _shutil.rmtree(banded_dir, ignore_errors=True)
-            lower_zooms = []
-
         # lower: reduce from the level above; compute skip drops children
         # whose PARENT is done before the reduce shuffle
         def reduce(todo, zoom):
@@ -731,11 +664,11 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                 src, cfg.pyramid, resampling=cfg.baselevels.lower
             )
 
-        for zoom in lower_zooms:
+        for zoom in cfg.overview_zooms_lower():
             stage(
                 f"overview_z{zoom}",
                 zoom,
-                parents_of_level_above(zoom),
+                lambda limit, zoom=zoom: _parent_keys(done.get(zoom + 1, NO_KEYS)),
                 lambda todo, zoom=zoom: reduce(todo, zoom),
             )
 

@@ -14,18 +14,24 @@ from pyspark.sql import SparkSession
 
 def _default_local_dir() -> str | None:
     """Shuffle/spill directory (spark.local.dir). Spark's guidance is
-    fast local disks; this sandbox's default tmp lives on a slow virtio
-    root disk whose dirty-page WRITEBACK of earlier queries' shuffle
-    files bleeds into later queries in a long session — measured as the
+    fast local disks; on a host whose default tmp is a slow virtio root
+    disk, the dirty-page WRITEBACK of earlier queries' shuffle files
+    bleeds into later queries in a long session — measured as the
     round-6 'full-mode session-state overhead': the bench's trailing
     quality_pack workload read 7.7s with /tmp shuffle dirs vs 4.8-5.5s
     with a tmpfs dir, suite 22.3s -> 18.6-20.0s (<0.1% steal, same
-    code). With 128 GiB RAM and ~2 GB of shuffle volume per run, tmpfs
-    is the sandbox analog of the NVMe scratch disks a production
-    cluster would mount here. Override with SPARK_GRAFT_LOCAL_DIR
-    (empty string = keep Spark's default); falls back to Spark's
-    default when /dev/shm is missing or short on space (16 GB floor,
-    so a genuinely disk-sized shuffle is never pointed at RAM)."""
+    code, 128 GiB host with ~2 GB of shuffle per run). tmpfs stands in
+    for the NVMe scratch disks a production cluster would mount here.
+    Falls back to Spark's default when /dev/shm is missing or has less
+    than 16 GB free.
+
+    Failure mode: the free-space check runs once, at session start.
+    A later shuffle or spill larger than what /dev/shm has left fails
+    mid-job with "No space left on device" where a disk would have held
+    it, and its pages count against the host's RAM while they live. A
+    JVM that crashes leaves its shuffle files in /dev/shm until they
+    are deleted or the host reboots. Set SPARK_GRAFT_LOCAL_DIR to a
+    directory to choose one, or to "" to keep Spark's default."""
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if override is not None:
         return override or None
@@ -47,6 +53,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A session with the engine's defaults. Shuffle and spill go to
+    tmpfs when /dev/shm has room at start; see ``_default_local_dir`` for
+    how a later, larger shuffle then fails and how to turn it off."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)

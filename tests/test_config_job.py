@@ -236,6 +236,24 @@ class TestExecute:
         n4 = out.where(F.col("zoom") == 4).count()
         n5 = out.where(F.col("zoom") == 5).count()
         assert 0 < n4 <= n5
+        # the stored lower chain (z4 from stored z5, z3 from stored z4)
+        # is byte for byte the in-memory chain over the stored z5 level
+        from mapchete_spark.operators.overviews import build_overviews
+
+        def md5s(df):
+            return {
+                (r["tile_row"], r["tile_col"]): r["h"]
+                for r in df.select(
+                    "tile_row", "tile_col", F.md5("data").alias("h")
+                ).collect()
+            }
+
+        want = build_overviews(
+            out.where(F.col("zoom") == 5), cfg.pyramid, 5, 3,
+            resampling=cfg.baselevels.lower,
+        )
+        for z, df in want:
+            assert md5s(out.where(F.col("zoom") == z)) == md5s(df), z
 
     def test_zoom_dependent_job(self, spark, executed_jobs):
         cfg, _counts = _job(executed_jobs, "zoom_dependent")

@@ -2,6 +2,7 @@
 invisible — same rows, narrower plans."""
 
 import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,6 +99,35 @@ class TestSpreadSmallInput:
         out = spread_small_input(df, "doc_id")
         # no extra exchange on an already-parallel input
         assert out is df
+
+    def test_shuffled_input_starts_no_job(self, spark):
+        """Under AQE, reading a shuffled input's partition count runs the
+        shuffle and returns the coalesced count. The guard decides from
+        the plan instead: no job, and the shuffle's own sizing stands."""
+        from mapchete_spark.operators.partitioning import spread_small_input
+
+        sc = spark.sparkContext
+        group = f"spread-{uuid.uuid4().hex}"
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        sc.setJobGroup(group, "spread_small_input on a shuffled input")
+        try:
+            df = (
+                spark.range(200000)
+                .groupBy((F.col("id") % 7).alias("k"))
+                .agg(F.count("*").alias("n"))
+            )
+            out = spread_small_input(df, "k")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(5000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert out is df
+        assert sorted(map(tuple, out.collect())) == [
+            (k, len(range(k, 200000, 7))) for k in range(7)
+        ]
 
 
 class TestMinhashEagerRelease:
