@@ -1865,10 +1865,10 @@ def q_job_stage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 (F.col("task_run_ms") > 0) & (F.col("peak_mem_bytes") > 0)
             ).alias("profiled"),
-            # ...and every stage shuffles (overviews reduce child
-            # payloads; the process stage's DEM input spreads its tile
-            # ids over the session), so measured shuffle bytes are
-            # positive
+            # ...and the overview stages shuffle (they reduce child
+            # payloads), so their measured shuffle bytes are positive,
+            # while the process stage reads each DEM window inside its
+            # task and shuffles nothing
             (
                 (F.col("shuffle_read_bytes") > 0)
                 & (F.col("shuffle_write_bytes") > 0)
@@ -1892,7 +1892,7 @@ def o_job_stage_metrics() -> str:
     n3 = (gr1 - gr0 + 1) * (gc1 - gc0 + 1)
     return f"""
     SELECT 1 AS seq, 'process_z5' AS stage, CAST({n5} AS BIGINT) AS n_tiles,
-           TRUE AS profiled, TRUE AS shuffled
+           TRUE AS profiled, FALSE AS shuffled
     UNION ALL SELECT 2, 'overview_z4', {n4}, TRUE, TRUE
     UNION ALL SELECT 3, 'overview_z3', {n3}, TRUE, TRUE
     ORDER BY seq

@@ -20,3 +20,10 @@ A from-scratch re-creation of the capabilities of ungarj/mapchete
 """
 
 __version__ = "0.1.0"
+
+from mapchete_spark import pyworker as _pyworker
+
+# a Spark task unpickling engine code: later tasks of this reused worker
+# skip the per-task zip directory re-reads (see pyworker.py)
+if _pyworker.in_spark_task():
+    _pyworker.cache_zip_directories()

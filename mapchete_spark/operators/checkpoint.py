@@ -120,8 +120,12 @@ class KeyFilter:
     keys: np.ndarray
     keep: bool = False
 
+    @property
+    def passes_all(self) -> bool:
+        return not self.keep and not len(self.keys)
+
     def apply(self, df: DataFrame, col: str = "tile_key") -> DataFrame:
-        if not self.keep and not len(self.keys):
+        if self.passes_all:
             return df
         keys = F.broadcast(df.sparkSession.createDataFrame(pa.table({col: self.keys})))
         return df.join(keys, on=col, how="left_semi" if self.keep else "left_anti")

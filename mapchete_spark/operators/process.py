@@ -6,18 +6,20 @@ process), a list of feature dicts (vector process), or ``Empty`` /
 None (skip tile — nothing is written, mirroring the write-skip-on-empty
 rewrite, mapchete/formats/base.py:450-460).
 
-Spark mapping: the tile raster table is mapInPandas-ed; each input row
-is one tile (already buffered by the halo operator when the process
-needs a pixelbuffer, e.g. hillshade needs >= 1,
-mapchete/processes/hillshade.py:54-205).  Whole Arrow batches stay in
-one Python call; per-tile numpy does the math.  No per-row Python at
-the DataFrame level.
+Spark mapping: ``raster_tile_row`` / ``vector_tile_rows`` run a process
+on one tile's array; the operators call them inside one mapInPandas per
+stage — over a tile raster table here, over windows read at the source
+in operators/halo.py. A process that needs a pixelbuffer (hillshade
+needs >= 1, mapchete/processes/hillshade.py:54-205) gets the buffered
+window. Whole Arrow batches stay in one Python call; per-tile numpy
+does the math.  No per-row Python at the DataFrame level.
 
 Built-in processes (P1-P4): convert, hillshade, contours, clip.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 from typing import Callable, Iterator, List, Optional
 
@@ -33,6 +35,7 @@ from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
     decode_array,
     encode_array,
+    schema_columns,
 )
 from mapchete_spark.raster.array import clip_array_with_vector
 from mapchete_spark.raster.terrain import generate_contours, hillshade
@@ -81,6 +84,105 @@ class TileContext:
 RasterProcess = Callable[[TileContext], np.ma.MaskedArray]
 
 
+def raster_tile_row(
+    tile: Tile,
+    tile_key: int,
+    arr: np.ma.MaskedArray,
+    nodata: float,
+    process: RasterProcess,
+    params: dict,
+    out_dtype: Optional[str] = None,
+    out_nodata: Optional[float] = None,
+    crop: bool = False,
+) -> Optional[dict]:
+    """Run a raster process on one tile's array: its output row
+    (column -> value), or None when the process raises Empty, returns
+    None or a fully masked array (write-skip on empty). ``crop`` cuts a
+    buffered result to the unbuffered tile window (the reference crops
+    at write time, io/raster/write.py) — processes that self-crop (e.g.
+    hillshade) pass through unchanged."""
+    ctx = TileContext(tile=tile, array=arr, nodata=nodata, params=params)
+    try:
+        result = process(ctx)
+    except Empty:
+        return None
+    if result is None:
+        return None
+    nd = out_nodata if out_nodata is not None else nodata
+    if out_dtype:
+        result = result.astype(out_dtype)
+    if isinstance(result, np.ma.MaskedArray) and result.mask.all():
+        return None
+    result = result if result.ndim == 3 else result[np.newaxis]
+    th, tw = tile.shape(pixelbuffer=0)
+    rh, rw = result.shape[-2:]
+    if crop and (rh, rw) != (th, tw):
+        cb = tile.bounds(pixelbuffer=(rw - tw) // 2)
+        tb = tile.bounds(pixelbuffer=0)
+        up = int(round((cb.top - tb.top) / tile.pixel_y_size))
+        left = (rw - tw) // 2
+        result = result[:, up : up + th, left : left + tw]
+    data, dtype, bands, h, w = encode_array(result, nd)
+    return {
+        "zoom": tile.zoom, "tile_row": tile.row, "tile_col": tile.col,
+        "tile_key": tile_key, "bands": bands, "height": h, "width": w,
+        "dtype": dtype, "nodata": nd, "data": data,
+    }
+
+
+def vector_tile_rows(
+    tile: Tile,
+    tile_key: int,
+    arr: np.ma.MaskedArray,
+    nodata: float,
+    process: Callable[[TileContext], List[dict]],
+    params: dict,
+) -> List[dict]:
+    """Run a vector process on one tile's array: one output row per
+    feature; none when the process raises Empty."""
+    ctx = TileContext(tile=tile, array=arr, nodata=nodata, params=params)
+    try:
+        feats = process(ctx)
+    except Empty:
+        return []
+    return [
+        {
+            "zoom": tile.zoom, "tile_row": tile.row, "tile_col": tile.col,
+            "tile_key": tile_key, "geometry": to_wkb(f["geometry"]),
+            "properties": json.dumps(f["properties"], sort_keys=True),
+        }
+        for f in feats or []
+    ]
+
+
+def _tiles_rows(tiles: DataFrame, pyramid: TilePyramid, tile_rows, schema: str) -> DataFrame:
+    """mapInPandas ``tile_rows(tile, tile_key, array, nodata)`` (a list
+    of output rows) over every row of a tile raster table."""
+    pyr_dict = pyramid.to_dict()
+    columns = schema_columns(schema)
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        p = TilePyramid(**pyr_dict)
+        for pdf in batches:
+            out = {k: [] for k in columns}
+            for z, trow, tcol, tkey, rdata, rdtype, rbands, rh, rw, rnodata in zip(
+                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
+                pdf["tile_key"].values, pdf["data"].values, pdf["dtype"].values,
+                pdf["bands"].values, pdf["height"].values, pdf["width"].values,
+                pdf["nodata"].values,
+            ):
+                arr = decode_array(
+                    rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
+                )
+                tile = Tile(p, int(z), int(trow), int(tcol))
+                for row in tile_rows(tile, int(tkey), arr, float(rnodata)):
+                    for k, v in row.items():
+                        out[k].append(v)
+            yield pd.DataFrame(out)
+
+    return tiles.mapInPandas(gen, schema=schema)
+
+
 def run_raster_process(
     tiles: DataFrame,
     pyramid: TilePyramid,
@@ -91,15 +193,16 @@ def run_raster_process(
     pixelbuffer: int = 0,
     target_filter=None,
 ) -> DataFrame:
-    """Apply a raster process to every tile row; rows whose process
-    raises Empty (or returns None) are dropped. Output arrays replace
-    the input payload; tile ids/keys are preserved.
+    """Apply a raster process to every row of a tile raster table; rows
+    whose process raises Empty (or returns None) are dropped. Output
+    arrays replace the input payload; tile ids/keys are preserved.
 
-    ``pixelbuffer`` > 0 fuses the halo exchange INTO the process stage:
-    edge strips shuffle to neighbors and the process runs directly on
-    the assembled buffered window inside the same applyInPandas — the
-    buffered arrays never make an extra Python->JVM->Python round trip
-    (2x less Arrow traffic than add_buffers + separate process pass).
+    ``pixelbuffer`` > 0 runs the process on each tile's buffered window,
+    assembled by the halo exchange (operators/halo.py
+    run_buffered_process: edge strips shuffle to neighbors, and one
+    streamed-group mapInPandas assembles and processes). Inputs whose
+    windows a task can read itself go through
+    ``halo.run_windowed_process`` instead, with no table and no shuffle.
 
     ``target_filter`` (continue mode, a checkpoint.KeyFilter): tiles it
     drops are neither assembled nor processed; with a pixelbuffer their
@@ -115,56 +218,15 @@ def run_raster_process(
         )
     if target_filter is not None:
         tiles = target_filter.apply(tiles)
-    pyr_dict = pyramid.to_dict()
     params = params or {}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = TilePyramid(**pyr_dict)
-        for pdf in batches:
-            out = {k: [] for k in (
-                "zoom", "tile_row", "tile_col", "tile_key", "bands",
-                "height", "width", "dtype", "nodata", "data",
-            )}
-            for z, trow, tcol, tkey, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-                pdf["tile_key"].values, pdf["data"].values, pdf["dtype"].values,
-                pdf["bands"].values, pdf["height"].values, pdf["width"].values,
-                pdf["nodata"].values,
-            ):
-                tile = Tile(p, int(z), int(trow), int(tcol))
-                arr = decode_array(
-                    rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
-                )
-                ctx = TileContext(
-                    tile=tile, array=arr, nodata=float(rnodata), params=params
-                )
-                try:
-                    result = process(ctx)
-                except Empty:
-                    continue
-                if result is None:
-                    continue
-                nodata = out_nodata if out_nodata is not None else float(rnodata)
-                if out_dtype:
-                    result = result.astype(out_dtype)
-                if isinstance(result, np.ma.MaskedArray) and result.mask.all():
-                    continue  # write-skip on fully masked output
-                data, dtype, bands, h, w = encode_array(
-                    result if result.ndim == 3 else result[np.newaxis], nodata
-                )
-                out["zoom"].append(int(z))
-                out["tile_row"].append(int(trow))
-                out["tile_col"].append(int(tcol))
-                out["tile_key"].append(int(tkey))
-                out["bands"].append(bands)
-                out["height"].append(h)
-                out["width"].append(w)
-                out["dtype"].append(dtype)
-                out["nodata"].append(nodata)
-                out["data"].append(data)
-            yield pd.DataFrame(out)
+    def tile_rows(tile, tile_key, arr, nodata):
+        row = raster_tile_row(
+            tile, tile_key, arr, nodata, process, params, out_dtype, out_nodata
+        )
+        return [row] if row else []
 
-    return tiles.mapInPandas(gen, schema=RASTER_SCHEMA)
+    return _tiles_rows(tiles, pyramid, tile_rows, RASTER_SCHEMA)
 
 
 VECTOR_SCHEMA = (
@@ -181,44 +243,12 @@ def run_vector_process(
 ) -> DataFrame:
     """Raster-in, features-out process (e.g. contours). Output rows:
     one per feature with WKB geometry + JSON properties."""
-    import json
-
-    pyr_dict = pyramid.to_dict()
     params = params or {}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = TilePyramid(**pyr_dict)
-        for pdf in batches:
-            out = {k: [] for k in (
-                "zoom", "tile_row", "tile_col", "tile_key", "geometry", "properties",
-            )}
-            for z, trow, tcol, tkey, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-                pdf["tile_key"].values, pdf["data"].values, pdf["dtype"].values,
-                pdf["bands"].values, pdf["height"].values, pdf["width"].values,
-                pdf["nodata"].values,
-            ):
-                tile = Tile(p, int(z), int(trow), int(tcol))
-                arr = decode_array(
-                    rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
-                )
-                ctx = TileContext(
-                    tile=tile, array=arr, nodata=float(rnodata), params=params
-                )
-                try:
-                    feats = process(ctx)
-                except Empty:
-                    continue
-                for f in feats or []:
-                    out["zoom"].append(int(z))
-                    out["tile_row"].append(int(trow))
-                    out["tile_col"].append(int(tcol))
-                    out["tile_key"].append(int(tkey))
-                    out["geometry"].append(to_wkb(f["geometry"]))
-                    out["properties"].append(json.dumps(f["properties"], sort_keys=True))
-            yield pd.DataFrame(out)
+    def tile_rows(tile, tile_key, arr, nodata):
+        return vector_tile_rows(tile, tile_key, arr, nodata, process, params)
 
-    return tiles.mapInPandas(gen, schema=VECTOR_SCHEMA)
+    return _tiles_rows(tiles, pyramid, tile_rows, VECTOR_SCHEMA)
 
 
 # ---- built-in processes (P1-P4) ----------------------------------------------
@@ -454,8 +484,6 @@ def run_feature_process(
     (clip semantics already applied upstream); otherwise ``process``
     is called as ``process(tile, geometry, properties, params)`` and
     returns ``(geometry, properties)`` or None to drop the feature."""
-    import json
-
     pyr_dict = pyramid.to_dict()
     params = params or {}
 

@@ -36,14 +36,23 @@ RASTER_SCHEMA = (
 )
 
 
-def encode_array(arr: np.ma.MaskedArray, nodata: float) -> Tuple[bytes, str, int, int, int]:
+def schema_columns(schema: str) -> list:
+    """Column names of a DDL schema string such as RASTER_SCHEMA."""
+    return [c.split()[0] for c in schema.split(",")]
+
+
+def filled_array(arr: np.ndarray, nodata: float) -> np.ndarray:
+    """C-contiguous (bands, h, w) array of ``arr`` with masked cells
+    set to ``nodata``."""
     a = arr if arr.ndim == 3 else arr[np.newaxis]
     if isinstance(a, np.ma.MaskedArray):
         # skip the filled() copy when nothing is masked (common case)
-        filled = a.data if not np.ma.is_masked(a) else a.filled(nodata)
-    else:
-        filled = a
-    filled = np.ascontiguousarray(filled)
+        a = a.data if not np.ma.is_masked(a) else a.filled(nodata)
+    return np.ascontiguousarray(a)
+
+
+def encode_array(arr: np.ma.MaskedArray, nodata: float) -> Tuple[bytes, str, int, int, int]:
+    filled = filled_array(arr, nodata)
     return (
         filled.tobytes(),
         str(filled.dtype),
@@ -53,15 +62,21 @@ def encode_array(arr: np.ma.MaskedArray, nodata: float) -> Tuple[bytes, str, int
     )
 
 
-def decode_array(
-    data: bytes, dtype: str, bands: int, height: int, width: int, nodata: float
-) -> np.ma.MaskedArray:
-    raw = np.frombuffer(data, dtype=dtype).reshape(bands, height, width)
-    # no-copy wrap (np.ma.masked_equal would copy); mask from equality
+def mask_nodata(raw: np.ndarray, nodata: float) -> np.ma.MaskedArray:
+    """No-copy masked wrap of a nodata-filled array; mask from equality
+    (np.ma.masked_equal would copy)."""
     mask = raw == nodata
     if not mask.any():
         mask = np.ma.nomask
     return np.ma.MaskedArray(raw, mask=mask, copy=False, fill_value=nodata)
+
+
+def decode_array(
+    data: bytes, dtype: str, bands: int, height: int, width: int, nodata: float
+) -> np.ma.MaskedArray:
+    return mask_nodata(
+        np.frombuffer(data, dtype=dtype).reshape(bands, height, width), nodata
+    )
 
 
 def row_to_array(row) -> np.ma.MaskedArray:
@@ -164,30 +179,34 @@ def aoi_tile_keys(
     return np.unique(linear_tile_key(zoom, rows, cols)).astype(np.int64)
 
 
-def tile_ids_for_ranges(spark: SparkSession, ranges, zoom: int) -> DataFrame:
+def tile_ids_for_ranges(
+    spark: SparkSession, ranges, zoom: int, num_slices: Optional[int] = None
+) -> DataFrame:
     """Codegen tile-ID table with one generated row PER TILE INSIDE the
     covering (r0, r1, c0, c1) ranges — not one per matrix cell.
 
     VERDICT r5 "What's wrong" #3: range-the-whole-matrix + filter
     generates 4^zoom rows to keep a handful (billions at z15+ for a
-    small raster). The covering ranges are already computed, so each
-    becomes its own ``spark.range(rows*cols)`` with div/mod arithmetic;
-    ranges are merged first (``merge_tile_ranges``) and disjoint ones
-    union linearly. Generated row count == covering size at any zoom."""
-    out = None
+    small raster). The ranges are merged first (``merge_tile_ranges``)
+    and laid end to end in ONE ``spark.range`` of ``num_slices``
+    partitions; div/mod arithmetic per range maps an id to its tile.
+    Generated row count == covering size at any zoom."""
+    spans, n = [], 0
     for (r0, r1, c0, c1) in merge_tile_ranges(ranges):
         w = int(c1 - c0 + 1)
-        n = int(r1 - r0 + 1) * w
-        part = spark.range(n).select(
-            (F.lit(int(r0)) + (F.col("id") / w).cast("long")).alias(
-                "tile_row"
-            ),
-            (F.lit(int(c0)) + F.col("id") % w).cast("long").alias(
-                "tile_col"
-            ),
-        )
-        out = part if out is None else out.unionAll(part)
-    return out.withColumn("zoom", F.lit(zoom))
+        spans.append((n, int(r0), int(c0), w))
+        n += int(r1 - r0 + 1) * w
+    row = col = None
+    for start, r0, c0, w in spans:
+        i = F.col("id") - F.lit(start)
+        r = F.lit(r0) + (i / w).cast("long")
+        c = (F.lit(c0) + i % w).cast("long")
+        later = F.col("id") >= F.lit(start)
+        row = r if row is None else F.when(later, r).otherwise(row)
+        col = c if col is None else F.when(later, c).otherwise(col)
+    return spark.range(0, n, numPartitions=num_slices).select(
+        row.alias("tile_row"), col.alias("tile_col"), F.lit(zoom).alias("zoom")
+    )
 
 
 def materialize_dem(

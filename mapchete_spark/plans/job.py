@@ -3,8 +3,11 @@ sequence of Spark stages.
 
 Lifecycle mapping (SURVEY.md §3.1): parse YAML -> per-zoom plan on the
 driver; then per process zoom (descending):
-    input tiles -> halo (pixelbuffer) -> process UDF -> write
+    tile ids -> buffered window read in the task -> process UDF -> write
     (output parquet) -> driver-side commit (done-manifest + metrics)
+for DEM inputs (operators/halo.py run_windowed_process: one Python
+stage, no shuffle), and for tile-table inputs
+    input tiles -> halo exchange (pixelbuffer) -> process UDF -> write
 and per overview zoom: groupBy(parent) reduce of the level above
 (lower path) or parent->children upsample (higher path) — Z1 semantics
 (mapchete/processing/tasks.py:378-450).
@@ -12,7 +15,7 @@ and per overview zoom: groupBy(parent) reduce of the level above
 Continue mode is planned on the driver (reference S11/J1/J2: an
 existence check on tiles whose ids are computed, not stored): each
 stage's todo set is its tile-grid keys (operators/rastertable.py
-aoi_tile_keys, the same ranges and area test materialize_dem uses)
+aoi_tile_keys, the same ranges and area test the DEM input set uses)
 minus the manifest's done keys. An empty todo set starts no Spark job;
 otherwise the smaller of todo and done rides into the stage as a
 KeyFilter (operators/checkpoint.py). Tiles whose process raised Empty
@@ -27,6 +30,7 @@ optional export for small outputs.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -45,7 +49,7 @@ from mapchete_spark.operators.checkpoint import (
     plan_keys,
     write_tiles,
 )
-from mapchete_spark.operators.halo import add_buffers
+from mapchete_spark.operators.halo import add_buffers, run_windowed_process
 from mapchete_spark.operators.overviews import overview_reduce_once, overview_upsample
 from mapchete_spark.operators.process import (
     process_clip,
@@ -63,6 +67,7 @@ from mapchete_spark.operators.rastertable import (
     materialize_dem,
 )
 from mapchete_spark.plans.config import JobConfig
+from mapchete_spark.raster.dem import DEM_NODATA, dem_tile
 from mapchete_spark.tilegrid.keys import (
     LINEAR_ZOOM_SHIFT,
     linear_tile_key,
@@ -175,14 +180,35 @@ def _input_tiles_multi(spark, cfg: JobConfig, zoom: int):
 
 
 def _input_tiles(spark, cfg: JobConfig, zoom: int) -> DataFrame:
-    """Materialize the input tile table for one zoom. The built-in
-    source is the synthetic DEM ('dem'); a parquet path reads an
-    existing tile table (S3/S4 analog: another job's output)."""
+    """Materialize the input tile table for one zoom: a parquet path
+    reads an existing tile table (S3/S4 analog: another job's output).
+    The process stages read a DEM input's windows in the task instead
+    (``_dem_process``)."""
     return _materialize_input(spark, cfg, zoom, cfg.input_at_zoom(zoom))
 
 
 def _is_dem(inp) -> bool:
     return inp in (None, "dem") or (isinstance(inp, dict) and inp.get("source") == "dem")
+
+
+def _dem_hole(inp) -> bool:
+    return bool(inp.get("hole", True)) if isinstance(inp, dict) else True
+
+
+def _dem_process(
+    spark, cfg: JobConfig, zoom: int, kind: str, fn, pb: int, params, target_filter
+) -> DataFrame:
+    """A process over a DEM input: every tile of the AOI, its buffered
+    window read inside the process task (no tile table, no shuffle)."""
+    return run_windowed_process(
+        spark, cfg.pyramid, zoom,
+        functools.partial(dem_tile, hole=_dem_hole(cfg.input_at_zoom(zoom))),
+        DEM_NODATA, pb, fn, params=params,
+        out_dtype=cfg.output.get("dtype"),
+        out_nodata=cfg.output.get("nodata"),
+        bounds=cfg.bounds, area=cfg.area,
+        target_filter=target_filter, vector=kind != "raster",
+    )
 
 
 def _parent_keys(keys: np.ndarray) -> np.ndarray:
@@ -208,8 +234,7 @@ def _materialize_input(spark, cfg: JobConfig, zoom: int, inp) -> DataFrame:
         # area filter applied on the ID table inside materialize_dem —
         # excluded tiles never compute a payload
         return materialize_dem(
-            spark, zoom, cfg.pyramid, bounds=cfg.bounds,
-            hole=bool((inp or {}).get("hole", True)) if isinstance(inp, dict) else True,
+            spark, zoom, cfg.pyramid, bounds=cfg.bounds, hole=_dem_hole(inp),
             area=cfg.area,
         )
     elif isinstance(inp, dict) and "path" in inp:
@@ -343,9 +368,11 @@ def execute_tile(
     reference's ``Mapchete.open(conf).execute_tile(tile)``
     (mapchete/processing/base.py:403-430), the primary single-tile
     correctness harness of its test suite. Spark rendering: the same
-    pipeline with the input ID table filtered to the target tile
-    (plus its 3x3 neighborhood when a pixelbuffer needs the halo) and
-    the output filtered back to the target."""
+    pipeline kept to the target tile. A DEM input runs the windowed
+    process with a keep filter on the target key; a tile-table input is
+    filtered to the target (plus its 3x3 neighborhood, wrapped across
+    the antimeridian on global grids, when a pixelbuffer needs the
+    halo) and the output back to the target."""
     kind, fn, min_pb = resolve_process(cfg)
     pb = max(cfg.pyramid.pixelbuffer, min_pb)
     params = dict(cfg.params_at_zoom(zoom) or {})
@@ -367,16 +394,20 @@ def execute_tile(
             cfg.pyramid,
         ).where(target)
         return run_feature_process(clipped, cfg.pyramid, fn, params=params)
+    if _is_dem(cfg.input_at_zoom(zoom)):
+        keep = KeyFilter(np.array([linear_tile_key(zoom, row, col)]), keep=True)
+        return _dem_process(spark, cfg, zoom, kind, fn, pb, params, keep)
+    # the 3x3 neighborhood, wrapped across the antimeridian on global grids
+    mw = cfg.pyramid.matrix_width(zoom)
+    cols = {col + dc for dc in ((-1, 0, 1) if pb else (0,))}
+    cols = {c % mw for c in cols} if cfg.pyramid.is_global else {c for c in cols if 0 <= c < mw}
     tiles = _input_tiles(spark, cfg, zoom).where(
         (F.col("zoom") == zoom)
         & F.col("tile_row").between(row - (1 if pb else 0),
                                     row + (1 if pb else 0))
-        & F.col("tile_col").between(col - (1 if pb else 0),
-                                    col + (1 if pb else 0))
+        & F.col("tile_col").isin(sorted(cols))
     )
     if kind == "raster":
-        from mapchete_spark.operators.process import run_raster_process
-
         out = run_raster_process(
             tiles, cfg.pyramid, fn, params=params,
             out_dtype=cfg.output.get("dtype"),
@@ -479,6 +510,11 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
 
     profiler = StageMetricsProfiler.attach(spark)
     sc = spark.sparkContext
+    @functools.lru_cache(maxsize=None)
+    def zorder():
+        """The write order, built once per execute by the first stage
+        that writes (one build is ~370 py4j calls)."""
+        return zorder_key_col(F.col("zoom"), F.col("tile_row"), F.col("tile_col"))
 
     def stage(name: str, zoom: int, candidates, build):
         """Plan on the driver, then — if anything is left to do — one
@@ -510,9 +546,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                 # physical layout: sort each partition in z-order so
                 # parquet row groups carry spatial locality (row/col
                 # min/max stats then prune spatial range scans)
-                ordered = build(todo).sortWithinPartitions(
-                    zorder_key_col(F.col("zoom"), F.col("tile_row"), F.col("tile_col"))
-                )
+                ordered = build(todo).sortWithinPartitions(zorder())
                 written = write_tiles(
                     store, ordered, tiles_path, payload, partition_by="zoom"
                 )
@@ -592,25 +626,33 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                     out_nodata=cfg.output.get("nodata"),
                     groups=groups,
                 )
-            tiles = _input_tiles(spark, cfg, zoom)
-            if kind != "raster":
-                tiles = add_buffers(tiles, cfg.pyramid, pb, target_filter=todo)
-                return run_vector_process(tiles, cfg.pyramid, fn, params=params)
             # continue-mode compute skip: done PROCESS TARGETS are dropped
             # before the process UDF (reference skip-existing semantics,
-            # processing/base.py:456-504); with a pixelbuffer they still
-            # mail strips to unfinished neighbors. An output split keys
-            # its rows by output tile, so there the filter guards the
-            # write only.
+            # processing/base.py:456-504); the tiles they read still feed
+            # unfinished neighbors.
+            if kind != "raster":
+                if _is_dem(inp_spec):
+                    return _dem_process(spark, cfg, zoom, kind, fn, pb, params, todo)
+                tiles = add_buffers(
+                    _input_tiles(spark, cfg, zoom), cfg.pyramid, pb, target_filter=todo
+                )
+                return run_vector_process(tiles, cfg.pyramid, fn, params=params)
+            # an output split keys its rows by output tile, so there the
+            # filter guards the write only
             split = out_meta < cfg.pyramid.metatiling
-            # pixelbuffer fuses the halo exchange into the process
-            out = run_raster_process(
-                tiles, cfg.pyramid, fn, params=params,
-                out_dtype=cfg.output.get("dtype"),
-                out_nodata=cfg.output.get("nodata"),
-                pixelbuffer=pb,
-                target_filter=None if split else todo,
-            )
+            if _is_dem(inp_spec):
+                out = _dem_process(
+                    spark, cfg, zoom, kind, fn, pb, params, None if split else todo
+                )
+            else:
+                # pixelbuffer fuses the halo exchange into the process
+                out = run_raster_process(
+                    _input_tiles(spark, cfg, zoom), cfg.pyramid, fn, params=params,
+                    out_dtype=cfg.output.get("dtype"),
+                    out_nodata=cfg.output.get("nodata"),
+                    pixelbuffer=pb,
+                    target_filter=None if split else todo,
+                )
             if not split:
                 return out
             # Z4: split process metatiles into output tiles
@@ -653,13 +695,14 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         # lower: reduce from the level above; compute skip drops children
         # whose PARENT is done before the reduce shuffle
         def reduce(todo, zoom):
-            parent_key = parent_tile_key_col(
-                F.col("zoom"), F.col("tile_row"), F.col("tile_col")
-            )
-            src = todo.apply(
-                level(zoom + 1).withColumn("__parent_key", parent_key),
-                "__parent_key",
-            ).drop("__parent_key")
+            src = level(zoom + 1)
+            if not todo.passes_all:
+                parent_key = parent_tile_key_col(
+                    F.col("zoom"), F.col("tile_row"), F.col("tile_col")
+                )
+                src = todo.apply(
+                    src.withColumn("__parent_key", parent_key), "__parent_key"
+                ).drop("__parent_key")
             return overview_reduce_once(
                 src, cfg.pyramid, resampling=cfg.baselevels.lower
             )

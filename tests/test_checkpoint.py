@@ -344,6 +344,40 @@ def _last_job_id(spark):
     return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_dem_process_stage_has_no_exchange(spark, tmp_path):
+    """A pixelbuffered DEM process stage reads every window inside its
+    process task. Under AQE (the shipped config) its jobs write no
+    shuffle bytes, and its query plan holds no Exchange."""
+    from mapchete_spark.plans.job import execute
+
+    out = str(tmp_path / "o")
+    runs = []
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        execute(
+            spark, _pyramid_cfg(out), mode="continue",
+            observers=[lambda run_id, **_: runs.append(run_id)],
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    [row] = (
+        JobStore(spark, os.path.join(out, "_state"))
+        .metrics()
+        .where(F.col("stage") == "process_z5")
+        .collect()
+    )
+    assert row["n_rows"] > 0 and row["shuffle_write_bytes"] == 0
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(f"{runs[0]}:process_z5")
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (executions.apply(i) for i in range(executions.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+    assert len(plans) == 1 and "Exchange" not in plans[0], plans
+
+
 @pytest.mark.parametrize("hole", [False, True])
 def test_noop_continue_starts_no_spark_job(spark, tmp_path, hole):
     """A continue run with nothing left to do is planned on the driver:

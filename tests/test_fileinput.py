@@ -673,6 +673,32 @@ def _run_execute_tile_matches_full_job(spark, tmp_path):
     got_h = got.select(F.md5("data").alias("h")).collect()
     assert [x["h"] for x in got_h] == [x["h"] for x in want]
 
+    # the whole z2 globe: the halo of the first and last column wraps
+    # across the antimeridian
+    def globe():
+        return JobConfig.from_dict(
+            dict(
+                process="hillshade",
+                zoom_levels=[2],
+                pyramid={"grid": "geodetic"},
+                input={"source": "dem", "hole": False},
+                output={"path": str(tmp_path / "globe"), "format": "parquet_tiles",
+                        "dtype": "float32", "nodata": -9999.0},
+            )
+        )
+
+    execute(spark, globe(), mode="overwrite")
+    stored = {
+        (x["tile_row"], x["tile_col"]): x["h"]
+        for x in spark.read.parquet(str(tmp_path / "globe" / "tiles"))
+        .select("tile_row", "tile_col", F.md5("data").alias("h")).collect()
+    }
+    for r, c in ((1, 0), (1, 7), (1, 3)):
+        got_g = execute_tile(spark, globe(), 2, r, c)
+        assert [x["h"] for x in got_g.select(F.md5("data").alias("h")).collect()] == [
+            stored[(r, c)]
+        ], (r, c)
+
     # vector (contours)
     cfgv = mk("contours", "parquet_features", {"interval": 200})
     execute(spark, cfgv, mode="overwrite")

@@ -177,3 +177,66 @@ def test_overview_upsample_children(spark, dem_table):
     assert len(rows) == 8  # 2 parents x 4 children
     zooms = {r["zoom"] for r in rows}
     assert zooms == {ZOOM + 1}
+
+
+HOLE_AOI = Bounds(101.25, -2.8125, 109.6875, 2.8125)  # z6: the DEM hole cuts in
+TRIANGLE = Polygon(np.array([[0.0, 20.0], [45.0, 20.0], [0.0, 50.0], [0.0, 20.0]]))
+#: name -> (pyramid, zoom, bounds, pixelbuffer, hole, area, process, filter)
+WINDOW_CASES = {
+    "pb1": (GEO, ZOOM, AOI, 1, False, None, "hillshade", None),
+    "pb2": (GEO, ZOOM, AOI, 2, False, None, "hillshade", None),
+    "pb1_hole": (GEO, 6, HOLE_AOI, 1, True, None, "hillshade", None),
+    "pb2_hole": (GEO, 6, HOLE_AOI, 2, True, None, "hillshade", None),
+    "globe_pb1": (GEO, 2, None, 1, False, None, "hillshade", None),
+    "globe_pb2_hole": (GEO, 2, None, 2, True, None, "hillshade", None),
+    "antimeridian_pb1": (GEO, ZOOM, Bounds(170.0, -10.0, 190.0, 10.0), 1, False, None, "hillshade", None),
+    "north_pole_pb1": (GEO, 4, Bounds(-30.0, 70.0, 30.0, 90.0), 1, False, None, "hillshade", None),
+    "south_pole_pb2_hole": (GEO, 4, Bounds(100.0, -90.0, 150.0, -70.0), 2, True, None, "hillshade", None),
+    "metatiling2_pb1": (TilePyramid("geodetic", metatiling=2), 4, AOI, 1, False, None, "hillshade", None),
+    "metatiling2_globe_pb2": (TilePyramid("geodetic", metatiling=2), 2, None, 2, False, None, "hillshade", None),
+    "area_pb1": (GEO, ZOOM, AOI, 1, False, TRIANGLE, "hillshade", None),
+    "area_pb2_hole": (GEO, 6, HOLE_AOI, 2, True, Polygon.regular(105.5, 0.0, 3.0), "hillshade", None),
+    "half_drop_pb1": (GEO, ZOOM, AOI, 1, False, None, "hillshade", False),
+    "half_keep_pb2": (GEO, ZOOM, AOI, 2, False, None, "hillshade", True),
+    "pb0_convert": (GEO, ZOOM, AOI, 0, True, TRIANGLE, "convert", None),
+    "pb2_convert": (GEO, ZOOM, AOI, 2, False, None, "convert", None),
+}
+
+
+def test_windowed_process_equals_halo_exchange(spark):
+    """Windows read in the process task give the halo exchange's tiles
+    byte for byte: pixelbuffer 0-2, the DEM hole, the antimeridian, the
+    pole rows, metatiling, an area and a continue-mode key filter."""
+    import functools
+
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators.checkpoint import KeyFilter
+    from mapchete_spark.operators.halo import run_windowed_process
+    from mapchete_spark.operators.rastertable import aoi_tile_keys
+
+    processes = {"hillshade": process_hillshade, "convert": process_convert}
+    windowed, halo = [], []
+    for name, (pyr, zoom, bounds, pb, hole, area, proc, keep) in WINDOW_CASES.items():
+        todo = None
+        if keep is not None:
+            todo = KeyFilter(aoi_tile_keys(pyr, zoom, bounds)[::2], keep=keep)
+        out = dict(process=processes[proc], params={"dtype": "int16"},
+                   out_dtype="uint8" if proc == "hillshade" else "int16", out_nodata=0)
+        windowed.append(run_windowed_process(
+            spark, pyr, zoom, functools.partial(dem_tile, hole=hole), DEM_NODATA,
+            pb, bounds=bounds, area=area, target_filter=todo, **out,
+        ).withColumn("case", F.lit(name)))
+        dem = materialize_dem(spark, zoom, pyr, bounds=bounds, hole=hole, area=area)
+        halo.append(run_raster_process(
+            dem, pyr, pixelbuffer=pb, target_filter=todo, **out,
+        ).withColumn("case", F.lit(name)))
+
+    got: dict = {}
+    both = [df.withColumn("side", F.lit(side)) for side, dfs in (("windowed", windowed), ("halo", halo)) for df in dfs]
+    for r in functools.reduce(lambda a, b: a.unionByName(b), both).select(
+        "side", "case", "tile_key", F.md5("data").alias("h")
+    ).collect():
+        got.setdefault((r["side"], r["case"]), {})[r["tile_key"]] = r["h"]
+    for name in WINDOW_CASES:
+        assert got.get(("windowed", name)) == got[("halo", name)], name
