@@ -2,35 +2,38 @@
 
 The reference reads each buffered tile window directly from the source
 raster (mapchete/io/raster/read.py:58-206, buffer semantics
-tile.py:260-272). Two operators render that here:
+tile.py:260-272). Two operators render that here, with one per-tile body
+(operators/process.py ``canvas_rows``: canvas -> raster or, with
+``vector``, feature rows) and one halo exchange:
 
 - ``run_windowed_process``, for inputs a task can read any tile of (the
   analytic DEM): one ``mapInPandas`` over a ``spark.range`` of tile ids.
   Each task reads its targets' neighbours itself and runs the process on
   the assembled canvas — no shuffle, one Python stage.
-- The halo exchange, for tile-table inputs (another job's output): a
-  buffered read becomes a shuffle. Every tile mails the <= pixelbuffer
-  wide edge strips its neighbors need (keyed by the NEIGHBOR's tile
-  key), and a group by target assembles the buffered array — the strips
-  are O(pixelbuffer * tile_edge) bytes per neighbor; only the center
-  piece (the tile's own array) shuffles at full size (SURVEY.md §7
-  step 6). ``add_buffers`` returns the buffered tile table;
-  ``run_buffered_process`` assembles and runs the raster process in one
-  streamed-group mapInPandas.
+- ``run_buffered_process``, for tile-table inputs (another job's output,
+  or any DataFrame of tiles): a buffered read becomes a shuffle. Every
+  tile mails the <= pixelbuffer wide edge strips its neighbours need
+  (keyed by the NEIGHBOUR's tile key), and one streamed-group
+  mapInPandas assembles each target's canvas and runs the process on it
+  — the strips are O(pixelbuffer * tile_edge) bytes per neighbour; only
+  the centre piece (the tile's own array) shuffles at full size
+  (SURVEY.md §7 step 6). Without a pixelbuffer it is one mapInPandas
+  over the table.
 
 Both place pieces by one rule (``_canvas``) and give the same canvas:
 only neighbours in the input set fill it, the rest stays nodata.
 Antimeridian: neighbours wrap across the x edge on global grids (the
 reference splits such reads into up to 3 parts and stitches,
 io/raster/read.py:168-183,209-258 — here the wrap is just modular key
-arithmetic). North/south: no neighbors beyond the pole rows; the
-buffered window is clipped there exactly like Tile.bounds/shape.
+arithmetic). North/south, and left/right on a non-global grid: no
+neighbours beyond the grid edge; the buffered window is clipped there
+exactly like Tile.bounds/shape.
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
-from typing import Callable, Iterator, Optional, Tuple
+from typing import Callable, Iterator, Optional
 
 import numpy as np
 import pandas as pd
@@ -39,13 +42,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapchete_spark.functions.geo import tile_key_col
+from mapchete_spark.operators.process import VECTOR_SCHEMA, canvas_rows
 from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
     aoi_tile_ranges,
     decode_array,
     encode_array,
     filled_array,
-    mask_nodata,
     schema_columns,
     tile_ids_for_ranges,
     tiles_in_area,
@@ -82,19 +85,16 @@ def _canvas(me: Tile, pb: int, pieces, nodata: float) -> np.ndarray:
     nodata, with each ``(dr, dc, piece)`` placed where the neighbour at
     offset (dr, dc) from ``me`` sits — (0, 0) is ``me``'s own array,
     the others are ``_strip``s. Pieces reaching past the canvas (it is
-    clipped at the pole rows) are clipped with it."""
+    clipped at the grid edge) are clipped with it."""
     bh, bw = me.shape(pixelbuffer=pb)
     th, tw = me.shape(pixelbuffer=0)
-    # rows added above = pb unless clipped at the north pyramid edge
-    bb = me.bounds(pixelbuffer=pb)
-    tb = me.bounds(pixelbuffer=0)
-    up = int(round((bb.top - tb.top) / me.pixel_y_size))
+    up, left = me.window_offset(pb)
     canvas = None
     for dr, dc, piece in pieces:
         if canvas is None:
             canvas = np.full((piece.shape[0], bh, bw), nodata, dtype=piece.dtype)
         r0 = up if dr == 0 else (up - piece.shape[1] if dr == -1 else up + th)
-        c0 = pb if dc == 0 else (pb - piece.shape[2] if dc == -1 else pb + tw)
+        c0 = left if dc == 0 else (left - piece.shape[2] if dc == -1 else left + tw)
         r0c, c0c = max(r0, 0), max(c0, 0)
         r1c = min(r0 + piece.shape[1], bh)
         c1c = min(c0 + piece.shape[2], bw)
@@ -104,13 +104,6 @@ def _canvas(me: Tile, pb: int, pieces, nodata: float) -> np.ndarray:
             :, r0c - r0 : r1c - r0, c0c - c0 : c1c - c0
         ]
     return canvas
-
-
-def _buffered_array(canvas: np.ndarray, nodata: float) -> np.ma.MaskedArray:
-    """What a raster process gets for a buffered canvas."""
-    arr = np.ma.masked_equal(canvas, nodata)
-    arr.set_fill_value(nodata)
-    return arr
 
 
 def run_windowed_process(
@@ -138,11 +131,9 @@ def run_windowed_process(
     The input set is the tiles of ``bounds`` that intersect ``area``, as
     ``materialize_dem`` would generate them: a neighbour outside it
     leaves its part of the canvas nodata, so the output equals the halo
-    exchange over that table (``run_buffered_process``; with
-    ``vector``, ``add_buffers`` + ``run_vector_process``) byte for byte.
-    A bounded per-task cache keeps each neighbour read once per task."""
-    from mapchete_spark.operators.process import VECTOR_SCHEMA
-
+    exchange over that table (``run_buffered_process``, with the same
+    ``vector`` flag) byte for byte. A bounded per-task cache keeps each
+    neighbour read once per task."""
     ranges = aoi_tile_ranges(pyramid, zoom, bounds)
     schema = VECTOR_SCHEMA if vector else RASTER_SCHEMA
     if not ranges:
@@ -166,8 +157,6 @@ def run_windowed_process(
     columns = schema_columns(schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mapchete_spark.operators.process import raster_tile_row, vector_tile_rows
-
         p = TilePyramid(**pyr_dict)
         mh, mw = p.matrix_height(zoom), p.matrix_width(zoom)
         is_input: dict = {}
@@ -214,17 +203,10 @@ def run_windowed_process(
                             pieces.append((dr, dc, _strip(window(nr, nc), -dr, -dc, pb)))
                 me = Tile(p, zoom, r, c)
                 canvas = _canvas(me, pb, pieces, nodata)
-                if vector:
-                    rows = vector_tile_rows(
-                        me, int(key), mask_nodata(canvas, nodata), nodata, process, params
-                    )
-                else:
-                    rows = [raster_tile_row(
-                        me, int(key),
-                        _buffered_array(canvas, nodata) if pb else mask_nodata(canvas, nodata),
-                        nodata, process, params, out_dtype, out_nodata, crop=pb > 0,
-                    )]
-                for row in filter(None, rows):
+                for row in canvas_rows(
+                    me, int(key), canvas, nodata, process, params,
+                    out_dtype, out_nodata, vector,
+                ):
                     for k, v in row.items():
                         out[k].append(v)
             yield pd.DataFrame(out)
@@ -289,7 +271,7 @@ def _parts_stage(tiles: DataFrame, pyramid: TilePyramid, pb: int) -> DataFrame:
 
 def _assemble_canvas(p: TilePyramid, pb: int, target_key: int, pdf: pd.DataFrame):
     """Stage 2 core: place pieces into the buffered canvas.
-    Returns (tile, canvas ndarray, nodata, dtype), or ``None`` when the
+    Returns (tile, canvas ndarray, nodata), or ``None`` when the
     group carries no center piece — i.e. the target tile was NOT in the
     input set and only exists because neighbors mailed it strips.  Such
     phantom targets must not produce output (the reference only
@@ -312,59 +294,7 @@ def _assemble_canvas(p: TilePyramid, pb: int, target_key: int, pdf: pd.DataFrame
             pdf["src_dr"].values, pdf["src_dc"].values,
         )
     )
-    canvas = _canvas(me, pb, pieces, nodata)
-    return me, canvas, nodata, str(canvas.dtype)
-
-
-def _drop_skipped_targets(parts: DataFrame, target_filter) -> DataFrame:
-    """Continue-mode compute skip for halo consumers: drop every strip
-    destined for an already-done target BEFORE the shuffle — done tiles
-    are neither assembled nor processed, while their own strips still
-    reach not-yet-done neighbors (pre-filtering the INPUT would starve
-    neighbor canvases instead)."""
-    if target_filter is None:
-        return parts
-    return target_filter.apply(parts, "target_key")
-
-
-def add_buffers(
-    tiles: DataFrame, pyramid: TilePyramid, pixelbuffer: int,
-    target_filter=None,
-) -> DataFrame:
-    """Tile raster table -> same table with each tile's array replaced
-    by its pixel-buffered window (shape per Tile.shape(pixelbuffer));
-    ``target_filter`` as in run_buffered_process."""
-    if pixelbuffer <= 0:
-        return tiles if target_filter is None else target_filter.apply(tiles)
-    pb = int(pixelbuffer)
-    pyr_dict = pyramid.to_dict()
-    parts = _drop_skipped_targets(_parts_stage(tiles, pyramid, pb), target_filter)
-
-    def assemble(key: Tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        p = TilePyramid(**pyr_dict)
-        assembled = _assemble_canvas(p, pb, int(key[0]), pdf)
-        if assembled is None:  # phantom target (not an input tile)
-            return pd.DataFrame({k: [] for k in (
-                "zoom", "tile_row", "tile_col", "tile_key", "bands",
-                "height", "width", "dtype", "nodata", "data",
-            )})
-        me, canvas, nodata, dtype = assembled
-        return pd.DataFrame(
-            {
-                "zoom": [me.zoom],
-                "tile_row": [me.row],
-                "tile_col": [me.col],
-                "tile_key": [int(key[0])],
-                "bands": [canvas.shape[0]],
-                "height": [canvas.shape[1]],
-                "width": [canvas.shape[2]],
-                "dtype": [dtype],
-                "nodata": [nodata],
-                "data": [canvas.tobytes()],
-            }
-        )
-
-    return parts.groupBy("target_key").applyInPandas(assemble, schema=RASTER_SCHEMA)
+    return me, _canvas(me, pb, pieces, nodata), nodata
 
 
 def streamed_groupby(
@@ -442,28 +372,66 @@ def run_buffered_process(
     out_dtype: Optional[str] = None,
     out_nodata: Optional[float] = None,
     target_filter=None,
+    vector: bool = False,
 ) -> DataFrame:
-    """Fused halo + process for tile-table inputs: one strip shuffle,
-    then assemble AND run the raster process inside one streamed-group
-    mapInPandas.
+    """Run a process on every tile of a tile raster table, on its
+    buffered window: with a pixelbuffer, one strip shuffle, then ONE
+    streamed-group mapInPandas that assembles each target's canvas and
+    runs the process on it; without one, one mapInPandas over the table.
+    Raster rows, or feature rows with ``vector``.
     ``target_filter`` (continue mode, a checkpoint.KeyFilter) drops the
-    strips of targets it excludes before the shuffle."""
+    targets it excludes — with a pixelbuffer it drops their strips
+    before the shuffle, so those tiles are neither assembled nor
+    processed while their own strips still reach unfinished neighbours
+    (filtering the input would starve neighbour canvases instead)."""
     pb = int(pixelbuffer)
     pyr_dict = pyramid.to_dict()
     params = params or {}
-    parts = _drop_skipped_targets(_parts_stage(tiles, pyramid, pb), target_filter)
+    schema = VECTOR_SCHEMA if vector else RASTER_SCHEMA
+    columns = schema_columns(schema)
+
+    def rows(tile: Tile, tile_key: int, canvas: np.ndarray, nodata: float):
+        return canvas_rows(
+            tile, tile_key, canvas, nodata, process, params,
+            out_dtype, out_nodata, vector,
+        )
+
+    if pb <= 0:
+        if target_filter is not None:
+            tiles = target_filter.apply(tiles)
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            p = TilePyramid(**pyr_dict)
+            for pdf in batches:
+                out = {k: [] for k in columns}
+                for z, r, c, key, data, dtype, bands, h, w, nodata in zip(
+                    pdf["zoom"].values, pdf["tile_row"].values,
+                    pdf["tile_col"].values, pdf["tile_key"].values,
+                    pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
+                    pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
+                ):
+                    canvas = np.frombuffer(data, dtype=dtype).reshape(
+                        int(bands), int(h), int(w)
+                    )
+                    for row in rows(
+                        Tile(p, int(z), int(r), int(c)), int(key), canvas, float(nodata)
+                    ):
+                        for k, v in row.items():
+                            out[k].append(v)
+                yield pd.DataFrame(out)
+
+        return tiles.mapInPandas(run, schema=schema)
+
+    parts = _parts_stage(tiles, pyramid, pb)
+    if target_filter is not None:
+        parts = target_filter.apply(parts, "target_key")
 
     def assemble_and_run(target_key: int, pdf: pd.DataFrame):
-        from mapchete_spark.operators.process import raster_tile_row
-
         assembled = _assemble_canvas(TilePyramid(**pyr_dict), pb, target_key, pdf)
         if assembled is None:  # phantom target (not an input tile)
             return None
-        me, canvas, nodata, _ = assembled
-        row = raster_tile_row(
-            me, target_key, _buffered_array(canvas, nodata), nodata, process,
-            params, out_dtype, out_nodata, crop=True,
-        )
-        return row and {k: [v] for k, v in row.items()}
+        me, canvas, nodata = assembled
+        out = rows(me, target_key, canvas, nodata)
+        return {k: [r[k] for r in out] for k in columns} if out else None
 
-    return streamed_groupby(parts, "target_key", assemble_and_run, RASTER_SCHEMA)
+    return streamed_groupby(parts, "target_key", assemble_and_run, schema)

@@ -6,12 +6,15 @@ process), a list of feature dicts (vector process), or ``Empty`` /
 None (skip tile — nothing is written, mirroring the write-skip-on-empty
 rewrite, mapchete/formats/base.py:450-460).
 
-Spark mapping: ``raster_tile_row`` / ``vector_tile_rows`` run a process
-on one tile's array; the operators call them inside one mapInPandas per
-stage — over a tile raster table here, over windows read at the source
-in operators/halo.py. A process that needs a pixelbuffer (hillshade
-needs >= 1, mapchete/processes/hillshade.py:54-205) gets the buffered
-window. Whole Arrow batches stay in one Python call; per-tile numpy
+Spark mapping: ``canvas_rows`` is the one per-tile body: it runs a
+single-input process on one tile's canvas (its window, buffered when
+the process needs a pixelbuffer — hillshade needs >= 1,
+mapchete/processes/hillshade.py:54-205) and returns raster or feature
+rows. The two operators in operators/halo.py call it inside one
+mapInPandas per stage: over windows read at the source, or over a tile
+raster table (assembled by the halo exchange when buffered);
+``run_raster_process`` / ``run_vector_process`` are that table
+operator. Whole Arrow batches stay in one Python call; per-tile numpy
 does the math.  No per-row Python at the DataFrame level.
 
 Built-in processes (P1-P4): convert, hillshade, contours, clip.
@@ -35,6 +38,7 @@ from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
     decode_array,
     encode_array,
+    mask_nodata,
     schema_columns,
 )
 from mapchete_spark.raster.array import clip_array_with_vector
@@ -65,23 +69,22 @@ class TileContext:
         # translation terms are the window's left/top, mirroring
         # Tile.affine and the reference's tile.affine contract
         # (mapchete/tile.py affine semantics)
-        if self.array is not None:
-            tw = self.tile.shape(pixelbuffer=0)[1]
-            pb = (self.array.shape[-1] - tw) // 2
-        else:
-            pb = 0
-        b = self.tile.bounds(pixelbuffer=pb)
-        return (
-            self.tile.pixel_x_size,
-            0.0,
-            b.left,
-            0.0,
-            -self.tile.pixel_y_size,
-            b.top,
-        )
+        pb = 0 if self.array is None else self.tile.window_pixelbuffer(self.array.shape)
+        return self.tile.affine(pixelbuffer=pb)
 
 
 RasterProcess = Callable[[TileContext], np.ma.MaskedArray]
+
+
+def _crop_to_tile(tile: Tile, arr: np.ndarray) -> np.ndarray:
+    """``arr`` (..., height, width), a buffered window of ``tile``, cut
+    to the tile by the window's bounds (the reference crops at write
+    time by affine and bounds, io/raster/write.py)."""
+    th, tw = tile.shape(pixelbuffer=0)
+    if arr.shape[-2:] == (th, tw):
+        return arr
+    up, left = tile.window_offset(tile.window_pixelbuffer(arr.shape))
+    return arr[..., up : up + th, left : left + tw]
 
 
 def raster_tile_row(
@@ -93,15 +96,15 @@ def raster_tile_row(
     params: dict,
     out_dtype: Optional[str] = None,
     out_nodata: Optional[float] = None,
-    crop: bool = False,
+    inputs: Optional[dict] = None,
 ) -> Optional[dict]:
     """Run a raster process on one tile's array: its output row
     (column -> value), or None when the process raises Empty, returns
-    None or a fully masked array (write-skip on empty). ``crop`` cuts a
-    buffered result to the unbuffered tile window (the reference crops
-    at write time, io/raster/write.py) — processes that self-crop (e.g.
-    hillshade) pass through unchanged."""
-    ctx = TileContext(tile=tile, array=arr, nodata=nodata, params=params)
+    None or a fully masked array (write-skip on empty). The result of a
+    buffered ``arr`` is cut to the tile window (processes that self-crop,
+    e.g. hillshade, pass through unchanged). ``inputs`` becomes
+    ``TileContext.inputs``."""
+    ctx = TileContext(tile=tile, array=arr, nodata=nodata, params=params, inputs=inputs or {})
     try:
         result = process(ctx)
     except Empty:
@@ -114,14 +117,8 @@ def raster_tile_row(
     if isinstance(result, np.ma.MaskedArray) and result.mask.all():
         return None
     result = result if result.ndim == 3 else result[np.newaxis]
-    th, tw = tile.shape(pixelbuffer=0)
-    rh, rw = result.shape[-2:]
-    if crop and (rh, rw) != (th, tw):
-        cb = tile.bounds(pixelbuffer=(rw - tw) // 2)
-        tb = tile.bounds(pixelbuffer=0)
-        up = int(round((cb.top - tb.top) / tile.pixel_y_size))
-        left = (rw - tw) // 2
-        result = result[:, up : up + th, left : left + tw]
+    if arr.shape[-2:] != tile.shape(pixelbuffer=0):
+        result = _crop_to_tile(tile, result)
     data, dtype, bands, h, w = encode_array(result, nd)
     return {
         "zoom": tile.zoom, "tile_row": tile.row, "tile_col": tile.col,
@@ -130,16 +127,30 @@ def raster_tile_row(
     }
 
 
-def vector_tile_rows(
+def canvas_rows(
     tile: Tile,
     tile_key: int,
-    arr: np.ma.MaskedArray,
+    canvas: np.ndarray,
     nodata: float,
-    process: Callable[[TileContext], List[dict]],
+    process: Callable,
     params: dict,
+    out_dtype: Optional[str] = None,
+    out_nodata: Optional[float] = None,
+    vector: bool = False,
 ) -> List[dict]:
-    """Run a vector process on one tile's array: one output row per
-    feature; none when the process raises Empty."""
+    """The one per-tile body of every single-input process operator: run
+    ``process`` on ``canvas``, the tile's (bands, h, w) window per
+    Tile.shape(pixelbuffer) with nodata where no source pixel is, and
+    return its output rows. A raster process gives one row (see
+    raster_tile_row); a ``vector`` process one row per feature, with WKB
+    geometry and JSON properties. No rows when the process skips the
+    tile."""
+    arr = mask_nodata(canvas, nodata)
+    if not vector:
+        row = raster_tile_row(
+            tile, tile_key, arr, nodata, process, params, out_dtype, out_nodata
+        )
+        return [row] if row else []
     ctx = TileContext(tile=tile, array=arr, nodata=nodata, params=params)
     try:
         feats = process(ctx)
@@ -153,34 +164,6 @@ def vector_tile_rows(
         }
         for f in feats or []
     ]
-
-
-def _tiles_rows(tiles: DataFrame, pyramid: TilePyramid, tile_rows, schema: str) -> DataFrame:
-    """mapInPandas ``tile_rows(tile, tile_key, array, nodata)`` (a list
-    of output rows) over every row of a tile raster table."""
-    pyr_dict = pyramid.to_dict()
-    columns = schema_columns(schema)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = TilePyramid(**pyr_dict)
-        for pdf in batches:
-            out = {k: [] for k in columns}
-            for z, trow, tcol, tkey, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-                pdf["tile_key"].values, pdf["data"].values, pdf["dtype"].values,
-                pdf["bands"].values, pdf["height"].values, pdf["width"].values,
-                pdf["nodata"].values,
-            ):
-                arr = decode_array(
-                    rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
-                )
-                tile = Tile(p, int(z), int(trow), int(tcol))
-                for row in tile_rows(tile, int(tkey), arr, float(rnodata)):
-                    for k, v in row.items():
-                        out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(gen, schema=schema)
 
 
 def run_raster_process(
@@ -208,25 +191,12 @@ def run_raster_process(
     drops are neither assembled nor processed; with a pixelbuffer their
     strips still feed neighbors.
     """
-    if pixelbuffer > 0:
-        from mapchete_spark.operators.halo import run_buffered_process
+    from mapchete_spark.operators.halo import run_buffered_process
 
-        return run_buffered_process(
-            tiles, pyramid, pixelbuffer, process, params=params,
-            out_dtype=out_dtype, out_nodata=out_nodata,
-            target_filter=target_filter,
-        )
-    if target_filter is not None:
-        tiles = target_filter.apply(tiles)
-    params = params or {}
-
-    def tile_rows(tile, tile_key, arr, nodata):
-        row = raster_tile_row(
-            tile, tile_key, arr, nodata, process, params, out_dtype, out_nodata
-        )
-        return [row] if row else []
-
-    return _tiles_rows(tiles, pyramid, tile_rows, RASTER_SCHEMA)
+    return run_buffered_process(
+        tiles, pyramid, pixelbuffer, process, params=params,
+        out_dtype=out_dtype, out_nodata=out_nodata, target_filter=target_filter,
+    )
 
 
 VECTOR_SCHEMA = (
@@ -240,15 +210,19 @@ def run_vector_process(
     pyramid: TilePyramid,
     process: Callable[[TileContext], List[dict]],
     params: Optional[dict] = None,
+    pixelbuffer: int = 0,
+    target_filter=None,
 ) -> DataFrame:
-    """Raster-in, features-out process (e.g. contours). Output rows:
-    one per feature with WKB geometry + JSON properties."""
-    params = params or {}
+    """Raster-in, features-out process (e.g. contours) over a tile
+    raster table. Output rows: one per feature with WKB geometry + JSON
+    properties. ``pixelbuffer`` and ``target_filter`` as in
+    run_raster_process."""
+    from mapchete_spark.operators.halo import run_buffered_process
 
-    def tile_rows(tile, tile_key, arr, nodata):
-        return vector_tile_rows(tile, tile_key, arr, nodata, process, params)
-
-    return _tiles_rows(tiles, pyramid, tile_rows, VECTOR_SCHEMA)
+    return run_buffered_process(
+        tiles, pyramid, pixelbuffer, process, params=params,
+        target_filter=target_filter, vector=True,
+    )
 
 
 # ---- built-in processes (P1-P4) ----------------------------------------------
@@ -293,16 +267,7 @@ def process_hillshade(ctx: TileContext) -> np.ma.MaskedArray:
         z=ctx.params.get("z", 1.0),
         scale=ctx.params.get("scale", 1.0),
     )
-    th, tw = ctx.tile.shape(pixelbuffer=0)
-    bh, bw = hs.shape[-2:]
-    if (bh, bw) != (th, tw):
-        # crop buffer: x is symmetric, y top offset from bounds
-        b = ctx.tile.bounds(pixelbuffer=(bw - tw) // 2)
-        tb = ctx.tile.bounds(pixelbuffer=0)
-        up = int(round((b.top - tb.top) / ctx.tile.pixel_y_size))
-        left = (bw - tw) // 2
-        hs = hs[up : up + th, left : left + tw]
-    return hs[np.newaxis]
+    return _crop_to_tile(ctx.tile, hs)[np.newaxis]
 
 
 def process_contours(ctx: TileContext) -> List[dict]:
@@ -311,14 +276,11 @@ def process_contours(ctx: TileContext) -> List[dict]:
     which clips at write time)."""
     if ctx.array.mask.all():
         raise Empty
-    pb_h = ctx.array.shape[-2]
-    th, tw = ctx.tile.shape(pixelbuffer=0)
-    pb = (ctx.array.shape[-1] - tw) // 2
-    b = ctx.tile.bounds(pixelbuffer=pb)
+    _, _, left, _, _, top = ctx.affine
     return generate_contours(
         ctx.array,
-        tile_left=b.left,
-        tile_top=b.top,
+        tile_left=left,
+        tile_top=top,
         pixel_x_size=ctx.tile.pixel_x_size,
         pixel_y_size=ctx.tile.pixel_y_size,
         interval=ctx.params.get("interval", 100),
@@ -374,8 +336,8 @@ def run_multi_raster_process(
 
     ``ctx.array`` is the first non-None input (reading order of
     ``named_tiles``); output nodata/dtype default to that input's.
-    Pixelbuffered multi-input is not implemented (apply
-    operators/halo.add_buffers per input upstream if needed)."""
+    Pixelbuffered multi-input is not implemented: the halo exchange
+    (operators/halo.py) assembles the window of one input table."""
     import functools
 
     params = params or {}
@@ -398,10 +360,7 @@ def run_multi_raster_process(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = TilePyramid(**pyr_dict)
         for pdf in batches:
-            out = {k: [] for k in (
-                "zoom", "tile_row", "tile_col", "tile_key", "bands",
-                "height", "width", "dtype", "nodata", "data",
-            )}
+            out = {k: [] for k in schema_columns(RASTER_SCHEMA)}
             cols = {c: pdf[c].values for c in pdf.columns}
             for ridx in range(len(pdf)):
                 row = {c: cols[c][ridx] for c in cols}
@@ -432,39 +391,14 @@ def run_multi_raster_process(
                     g: [(short, inputs.get(flat)) for short, flat in members]
                     for g, members in groups.items()
                 }
-                ctx = TileContext(
-                    tile=tile,
-                    array=primary,
-                    nodata=primary_nodata,
-                    params={**params, **inputs, **group_params},
+                res = raster_tile_row(
+                    tile, int(row["tile_key"]), primary, primary_nodata, process,
+                    {**params, **inputs, **group_params}, out_dtype, out_nodata,
                     inputs=inputs,
                 )
-                try:
-                    result = process(ctx)
-                except Empty:
-                    continue
-                if result is None:
-                    continue
-                nodata = (
-                    out_nodata if out_nodata is not None else primary_nodata
-                )
-                if out_dtype:
-                    result = result.astype(out_dtype)
-                if isinstance(result, np.ma.MaskedArray) and result.mask.all():
-                    continue
-                enc_data, enc_dtype, enc_bands, enc_h, enc_w = encode_array(
-                    result, nodata
-                )
-                out["zoom"].append(tile.zoom)
-                out["tile_row"].append(tile.row)
-                out["tile_col"].append(tile.col)
-                out["tile_key"].append(int(row["tile_key"]))
-                out["bands"].append(enc_bands)
-                out["height"].append(enc_h)
-                out["width"].append(enc_w)
-                out["dtype"].append(enc_dtype)
-                out["nodata"].append(float(nodata))
-                out["data"].append(enc_data)
+                if res:
+                    for k, v in res.items():
+                        out[k].append(v)
             yield pd.DataFrame(out)
 
     return joined.mapInPandas(gen, schema=RASTER_SCHEMA)

@@ -8,7 +8,10 @@ driver; then per process zoom (descending):
 for DEM inputs (operators/halo.py run_windowed_process: one Python
 stage, no shuffle), and for tile-table inputs
     input tiles -> halo exchange (pixelbuffer) -> process UDF -> write
-and per overview zoom: groupBy(parent) reduce of the level above
+(run_buffered_process: one strip shuffle, one Python stage after it).
+Raster and vector processes take the same path, with one per-tile body
+(operators/process.py canvas_rows); only an output split is
+raster-only. Per overview zoom: groupBy(parent) reduce of the level above
 (lower path) or parent->children upsample (higher path) — Z1 semantics
 (mapchete/processing/tasks.py:378-450).
 
@@ -49,16 +52,14 @@ from mapchete_spark.operators.checkpoint import (
     plan_keys,
     write_tiles,
 )
-from mapchete_spark.operators.halo import add_buffers, run_windowed_process
+from mapchete_spark.operators.halo import run_buffered_process, run_windowed_process
 from mapchete_spark.operators.overviews import overview_reduce_once, overview_upsample
 from mapchete_spark.operators.process import (
     process_clip,
     process_contours,
     process_convert,
     process_hillshade,
-    run_raster_process,
     run_multi_raster_process,
-    run_vector_process,
 )
 from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
@@ -195,20 +196,31 @@ def _dem_hole(inp) -> bool:
     return bool(inp.get("hole", True)) if isinstance(inp, dict) else True
 
 
-def _dem_process(
-    spark, cfg: JobConfig, zoom: int, kind: str, fn, pb: int, params, target_filter
+def _tile_process(
+    spark, cfg: JobConfig, zoom: int, kind: str, fn, pb: int, params,
+    target_filter, tiles: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """A process over a DEM input: every tile of the AOI, its buffered
-    window read inside the process task (no tile table, no shuffle)."""
-    return run_windowed_process(
-        spark, cfg.pyramid, zoom,
-        functools.partial(dem_tile, hole=_dem_hole(cfg.input_at_zoom(zoom))),
-        DEM_NODATA, pb, fn, params=params,
+    """A single-input process at ``zoom``: raster rows, or feature rows
+    for a vector ``kind``. Over a DEM input, every tile of the AOI with
+    its buffered window read inside the process task (no tile table, no
+    shuffle); over a tile table (``tiles``, by default the configured
+    input), the halo exchange when ``pb`` asks for a buffer."""
+    common = dict(
+        params=params,
         out_dtype=cfg.output.get("dtype"),
         out_nodata=cfg.output.get("nodata"),
-        bounds=cfg.bounds, area=cfg.area,
-        target_filter=target_filter, vector=kind != "raster",
+        target_filter=target_filter,
+        vector=kind != "raster",
     )
+    inp = cfg.input_at_zoom(zoom)
+    if _is_dem(inp):
+        return run_windowed_process(
+            spark, cfg.pyramid, zoom, functools.partial(dem_tile, hole=_dem_hole(inp)),
+            DEM_NODATA, pb, fn, bounds=cfg.bounds, area=cfg.area, **common,
+        )
+    if tiles is None:
+        tiles = _input_tiles(spark, cfg, zoom)
+    return run_buffered_process(tiles, cfg.pyramid, pb, fn, **common)
 
 
 def _parent_keys(keys: np.ndarray) -> np.ndarray:
@@ -368,11 +380,10 @@ def execute_tile(
     reference's ``Mapchete.open(conf).execute_tile(tile)``
     (mapchete/processing/base.py:403-430), the primary single-tile
     correctness harness of its test suite. Spark rendering: the same
-    pipeline kept to the target tile. A DEM input runs the windowed
-    process with a keep filter on the target key; a tile-table input is
-    filtered to the target (plus its 3x3 neighborhood, wrapped across
+    pipeline with a keep filter on the target key; a tile-table input is
+    first cut to the target (plus its 3x3 neighborhood, wrapped across
     the antimeridian on global grids, when a pixelbuffer needs the
-    halo) and the output back to the target."""
+    halo)."""
     kind, fn, min_pb = resolve_process(cfg)
     pb = max(cfg.pyramid.pixelbuffer, min_pb)
     params = dict(cfg.params_at_zoom(zoom) or {})
@@ -380,7 +391,6 @@ def execute_tile(
     prep = run_preprocessing_tasks(spark, cfg)
     if prep:
         params = {**params, "preprocessing": prep}
-    target = (F.col("tile_row") == row) & (F.col("tile_col") == col)
     if kind == "features":
         from mapchete_spark.operators.process import run_feature_process
         from mapchete_spark.operators.vector import (
@@ -392,32 +402,23 @@ def execute_tile(
         clipped = clip_features_to_tiles(
             explode_features_to_tiles(feats, zoom, pyramid=cfg.pyramid),
             cfg.pyramid,
-        ).where(target)
+        ).where((F.col("tile_row") == row) & (F.col("tile_col") == col))
         return run_feature_process(clipped, cfg.pyramid, fn, params=params)
-    if _is_dem(cfg.input_at_zoom(zoom)):
-        keep = KeyFilter(np.array([linear_tile_key(zoom, row, col)]), keep=True)
-        return _dem_process(spark, cfg, zoom, kind, fn, pb, params, keep)
-    # the 3x3 neighborhood, wrapped across the antimeridian on global grids
-    mw = cfg.pyramid.matrix_width(zoom)
-    cols = {col + dc for dc in ((-1, 0, 1) if pb else (0,))}
-    cols = {c % mw for c in cols} if cfg.pyramid.is_global else {c for c in cols if 0 <= c < mw}
-    tiles = _input_tiles(spark, cfg, zoom).where(
-        (F.col("zoom") == zoom)
-        & F.col("tile_row").between(row - (1 if pb else 0),
-                                    row + (1 if pb else 0))
-        & F.col("tile_col").isin(sorted(cols))
-    )
-    if kind == "raster":
-        out = run_raster_process(
-            tiles, cfg.pyramid, fn, params=params,
-            out_dtype=cfg.output.get("dtype"),
-            out_nodata=cfg.output.get("nodata"),
-            pixelbuffer=pb,
+    keep = KeyFilter(np.array([linear_tile_key(zoom, row, col)]), keep=True)
+    tiles = None
+    if not _is_dem(cfg.input_at_zoom(zoom)):
+        # the 3x3 neighborhood, wrapped across the antimeridian on
+        # global grids
+        mw = cfg.pyramid.matrix_width(zoom)
+        cols = {col + dc for dc in ((-1, 0, 1) if pb else (0,))}
+        cols = {c % mw for c in cols} if cfg.pyramid.is_global else {c for c in cols if 0 <= c < mw}
+        tiles = _input_tiles(spark, cfg, zoom).where(
+            (F.col("zoom") == zoom)
+            & F.col("tile_row").between(row - (1 if pb else 0),
+                                        row + (1 if pb else 0))
+            & F.col("tile_col").isin(sorted(cols))
         )
-    else:
-        buffered = add_buffers(tiles, cfg.pyramid, pb)
-        out = run_vector_process(buffered, cfg.pyramid, fn, params=params)
-    return out.where(target)
+    return _tile_process(spark, cfg, zoom, kind, fn, pb, params, keep, tiles)
 
 
 def run_preprocessing_tasks(spark: SparkSession, cfg: JobConfig) -> Dict[str, object]:
@@ -615,8 +616,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                     )
                 if pb > 0:
                     raise ValueError(
-                        "named multi-inputs do not support a pixelbuffer "
-                        "yet; apply operators/halo.add_buffers per input"
+                        "named multi-inputs do not support a pixelbuffer"
                     )
                 tables, groups = _input_tiles_multi(spark, cfg, zoom)
                 return run_multi_raster_process(
@@ -629,30 +629,12 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
             # continue-mode compute skip: done PROCESS TARGETS are dropped
             # before the process UDF (reference skip-existing semantics,
             # processing/base.py:456-504); the tiles they read still feed
-            # unfinished neighbors.
-            if kind != "raster":
-                if _is_dem(inp_spec):
-                    return _dem_process(spark, cfg, zoom, kind, fn, pb, params, todo)
-                tiles = add_buffers(
-                    _input_tiles(spark, cfg, zoom), cfg.pyramid, pb, target_filter=todo
-                )
-                return run_vector_process(tiles, cfg.pyramid, fn, params=params)
-            # an output split keys its rows by output tile, so there the
-            # filter guards the write only
-            split = out_meta < cfg.pyramid.metatiling
-            if _is_dem(inp_spec):
-                out = _dem_process(
-                    spark, cfg, zoom, kind, fn, pb, params, None if split else todo
-                )
-            else:
-                # pixelbuffer fuses the halo exchange into the process
-                out = run_raster_process(
-                    _input_tiles(spark, cfg, zoom), cfg.pyramid, fn, params=params,
-                    out_dtype=cfg.output.get("dtype"),
-                    out_nodata=cfg.output.get("nodata"),
-                    pixelbuffer=pb,
-                    target_filter=None if split else todo,
-                )
+            # unfinished neighbors. An output split (raster only) keys its
+            # rows by output tile, so there the filter guards the write only
+            split = kind == "raster" and out_meta < cfg.pyramid.metatiling
+            out = _tile_process(
+                spark, cfg, zoom, kind, fn, pb, params, None if split else todo
+            )
             if not split:
                 return out
             # Z4: split process metatiles into output tiles

@@ -348,6 +348,31 @@ class Tile:
         width = int(round(b.width / px))
         return (height, width)
 
+    def window_offset(self, pixelbuffer: int) -> Tuple[int, int]:
+        """(rows, columns) of the buffered window above and left of the
+        tile: ``pixelbuffer``, or fewer where bounds() clips the buffer
+        at the pyramid edge (north/south, and left/right on a non-global
+        grid)."""
+        bb = self.bounds(pixelbuffer=pixelbuffer)
+        tb = self.bounds(pixelbuffer=0)
+        return (
+            int(round((bb.top - tb.top) / self.pixel_y_size)),
+            int(round((tb.left - bb.left) / self.pixel_x_size)),
+        )
+
+    def window_pixelbuffer(self, shape) -> int:
+        """The pixelbuffer of a window of this tile whose last two axes
+        are ``shape``'s: the smallest one whose shape() is (height,
+        width). A clipped buffer adds fewer than 2 * pixelbuffer columns,
+        so the width alone does not give it; (width - tile width) // 2
+        when no pixelbuffer fits."""
+        th, tw = self.shape(pixelbuffer=0)
+        h, w = shape[-2:]
+        for pb in sorted({(w - tw) // 2, w - tw, (h - th) // 2, h - th}):
+            if pb >= 0 and self.shape(pixelbuffer=pb) == (h, w):
+                return pb
+        return (w - tw) // 2
+
     @property
     def pixel_x_size(self) -> float:
         return self.pyramid.pixel_x_size(self.zoom)

@@ -344,38 +344,71 @@ def _last_job_id(spark):
     return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_dem_process_stage_has_no_exchange(spark, tmp_path):
-    """A pixelbuffered DEM process stage reads every window inside its
-    process task. Under AQE (the shipped config) its jobs write no
-    shuffle bytes, and its query plan holds no Exchange."""
+def _stage_under_aqe(spark, cfg, stage):
+    """Run ``cfg`` with AQE on (the shipped config): ``stage``'s metrics
+    row and the physical plan descriptions of the queries its jobs ran."""
     from mapchete_spark.plans.job import execute
 
-    out = str(tmp_path / "o")
     runs = []
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try:
         execute(
-            spark, _pyramid_cfg(out), mode="continue",
+            spark, cfg, mode="continue",
             observers=[lambda run_id, **_: runs.append(run_id)],
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     [row] = (
-        JobStore(spark, os.path.join(out, "_state"))
+        JobStore(spark, os.path.join(cfg.output["path"], "_state"))
         .metrics()
-        .where(F.col("stage") == "process_z5")
+        .where(F.col("stage") == stage)
         .collect()
     )
-    assert row["n_rows"] > 0 and row["shuffle_write_bytes"] == 0
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(f"{runs[0]}:process_z5")
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(f"{runs[0]}:{stage}")
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
     plans = [
         e.physicalPlanDescription()
         for e in (executions.apply(i) for i in range(executions.size()))
         if any(e.jobs().contains(j) for j in jobs)
     ]
+    return row, plans
+
+
+def test_dem_process_stage_has_no_exchange(spark, tmp_path):
+    """A pixelbuffered DEM process stage reads every window inside its
+    process task. Under AQE (the shipped config) its jobs write no
+    shuffle bytes, and its query plan holds no Exchange."""
+    row, plans = _stage_under_aqe(spark, _pyramid_cfg(str(tmp_path / "o")), "process_z5")
+    assert row["n_rows"] > 0 and row["shuffle_write_bytes"] == 0
     assert len(plans) == 1 and "Exchange" not in plans[0], plans
+
+
+def test_table_vector_stage_has_one_exchange(spark, tmp_path):
+    """A vector process over a tile table with a pixelbuffer runs the
+    halo exchange and nothing else: under AQE its query plan holds one
+    Exchange (the strip shuffle), two MapInPandas (strips out; assemble
+    and process) and no grouped-map Python operator."""
+    from mapchete_spark.plans.config import JobConfig
+
+    table = str(tmp_path / "dem")
+    _dem(spark).write.parquet(table)
+    cfg = JobConfig.from_dict(dict(
+        process="contours",
+        zoom_levels=[5],
+        pyramid=dict(grid="geodetic", pixelbuffer=1),
+        input=dict(path=table),
+        process_parameters=dict(interval=200),
+        output=dict(format="parquet_features", path=str(tmp_path / "o")),
+    ))
+    row, plans = _stage_under_aqe(spark, cfg, "process_z5")
+    assert row["n_rows"] > 0 and row["shuffle_write_bytes"] > 0
+    assert len(plans) == 1, plans
+    # the operator tree; under AQE the final plan's
+    tree = plans[0].split("\n\n")[0].split("== Initial Plan ==")[0]
+    assert tree.count("Exchange (") == 1, tree
+    assert tree.count("MapInPandas (") == 2, tree
+    assert "FlatMapGroupsInPandas" not in plans[0], tree
 
 
 @pytest.mark.parametrize("hole", [False, True])

@@ -721,6 +721,73 @@ def _run_execute_tile_matches_full_job(spark, tmp_path):
     assert gotv == wantv and len(gotv) > 0
 
 
+def _run_tile_table_input_with_pixelbuffer(spark, tmp_path):
+    """A tile-table input with a pixelbuffer goes through the halo
+    exchange end to end: hillshade (raster) and contours (vector,
+    pyramid pixelbuffer 1) over the z4 DEM tile table written to parquet
+    store the bytes of the same config over the DEM input, and
+    execute_tile returns the stored rows of an edge and an interior
+    tile."""
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators.rastertable import materialize_dem
+    from mapchete_spark.plans.config import JobConfig
+    from mapchete_spark.plans.job import execute, execute_tile
+
+    aoi = [0.0, 20.0, 45.0, 50.0]
+    table = str(tmp_path / "dem_z4")
+    materialize_dem(
+        spark, 4, TilePyramid("geodetic"), bounds=Bounds(*aoi), hole=False
+    ).write.parquet(table)
+    tiles = {
+        (r["tile_row"], r["tile_col"])
+        for r in spark.read.parquet(table).select("tile_row", "tile_col").collect()
+    }
+    # a corner tile of the table and one whose 8 neighbours are all in it
+    edge = min(tiles)
+    inner = next(
+        rc for rc in sorted(tiles)
+        if all((rc[0] + dr, rc[1] + dc) in tiles for dr in (-1, 0, 1) for dc in (-1, 0, 1))
+    )
+    inputs = {"dem": {"source": "dem", "hole": False}, "table": {"path": table}}
+
+    def mk(process, inp, fmt, pyramid, params):
+        return JobConfig.from_dict(dict(
+            process=process, zoom_levels=[4], pyramid=pyramid, input=inputs[inp],
+            bounds=aoi, process_parameters=params,
+            output={"path": str(tmp_path / f"{process}_{inp}"), "format": fmt,
+                    "dtype": "float32", "nodata": -9999.0},
+        ))
+
+    def digests(df, payload):
+        h = F.md5("data") if payload == "data" else F.md5(
+            F.concat("geometry", F.encode("properties", "utf-8"))
+        )
+        out = {}
+        for r in df.select("tile_row", "tile_col", h.alias("h")).collect():
+            out.setdefault((r["tile_row"], r["tile_col"]), []).append(r["h"])
+        return {k: sorted(v) for k, v in out.items()}
+
+    for process, fmt, pyramid, params, payload in (
+        ("hillshade", "parquet_tiles", {"grid": "geodetic"}, {}, "data"),
+        ("contours", "parquet_features", {"grid": "geodetic", "pixelbuffer": 1},
+         {"interval": 200}, "geometry"),
+    ):
+        stored = {}
+        for inp in inputs:
+            cfg = mk(process, inp, fmt, pyramid, params)
+            execute(spark, cfg, mode="overwrite")
+            stored[inp] = digests(
+                spark.read.parquet(os.path.join(cfg.output["path"], "tiles")), payload
+            )
+        want = stored["dem"]
+        assert want and stored["table"] == want, process
+        for rc in (edge, inner):
+            cfg = mk(process, "table", fmt, pyramid, params)
+            got = digests(execute_tile(spark, cfg, 4, *rc), payload)
+            assert got == {rc: want[rc]}, (process, rc)
+
+
 import pytest as _pytest
 
 
@@ -749,6 +816,7 @@ def fi_jobs(spark, tmp_path_factory):
         files_single=_run_files_equals_single,
         files_overlap=_run_files_first_valid_overlap,
         files_mixed=_run_files_mixed_crs,
+        tile_table_pixelbuffer=_run_tile_table_input_with_pixelbuffer,
     )
     return run_concurrently(
         {k: mk(k, fn) for k, fn in scenarios.items()}, max_workers=8
@@ -783,6 +851,12 @@ def test_execute_tile_matches_full_job(fi_jobs):
     from tests.conftest import assert_ok
 
     assert_ok(fi_jobs, "execute_tile")
+
+
+def test_tile_table_input_with_pixelbuffer(fi_jobs):
+    from tests.conftest import assert_ok
+
+    assert_ok(fi_jobs, "tile_table_pixelbuffer")
 
 
 def test_raster_warp_polar_source_covers_pole(spark, tmp_path):

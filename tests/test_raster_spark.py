@@ -2,13 +2,13 @@
 buffered reads -> hillshade/contours/convert processes -> overview
 reduction. Goldens computed directly from the analytic DEM."""
 
+import functools
 import json
 
 import numpy as np
 import pytest
 
 from mapchete_spark.geometry.core import Polygon
-from mapchete_spark.operators.halo import add_buffers
 from mapchete_spark.operators.overviews import (
     build_overviews,
     overview_upsample,
@@ -34,6 +34,15 @@ from mapchete_spark.tilegrid import Bounds, TilePyramid
 GEO = TilePyramid("geodetic")
 AOI = Bounds(0.0, 20.0, 45.0, 50.0)
 ZOOM = 5
+#: a non-global grid: Tile.bounds clips a buffer at its left and right
+#: edge too, not only at the top and bottom rows
+EDGE = TilePyramid(
+    {"shape": [1, 2], "bounds": [-180, -90, 180, 90], "srs": "EPSG:4326", "is_global": False}
+)
+EDGE_ZOOM = 3
+#: tiles of EDGE whose neighbours are all in ``edge_table``: the left-
+#: and right-edge tile of the second row
+EDGE_TILES = ((1, 0), (1, 15))
 
 
 @pytest.fixture(scope="module")
@@ -42,6 +51,46 @@ def dem_table(spark):
     df.count()
     yield df
     df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def edge_table(spark):
+    """The DEM tiles of EDGE's two left and two right columns, rows 0-2."""
+    df = functools.reduce(lambda a, b: a.unionByName(b), (
+        materialize_dem(spark, EDGE_ZOOM, EDGE, bounds=b, hole=False)
+        for b in (Bounds(-180.0, 30.0, -140.0, 90.0), Bounds(140.0, 30.0, 180.0, 90.0))
+    )).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def _interior(keys):
+    """A tile of ``keys`` whose 8 neighbours are all in ``keys``."""
+    inner = next(
+        (rc for rc in sorted(keys)
+         if all((rc[0] + dr, rc[1] + dc) in keys for dr in (-1, 0, 1) for dc in (-1, 0, 1))),
+        None,
+    )
+    assert inner, "no interior tile in AOI"
+    return inner
+
+
+def _probe(report):
+    """A raster process whose tile holds ``report(ctx)`` in every pixel."""
+    def probe(ctx):
+        return np.ma.masked_array(
+            np.full((1,) + ctx.tile.shape(pixelbuffer=0), float(report(ctx)))
+        )
+    return probe
+
+
+def _reported(out):
+    """(row, col) -> what a ``_probe`` reported for that tile."""
+    return {
+        (r["tile_row"], r["tile_col"]): float(row_to_array(r.asDict())[0, 0, 0])
+        for r in out.collect()
+    }
 
 
 def test_materialize_matches_direct(dem_table):
@@ -54,57 +103,69 @@ def test_materialize_matches_direct(dem_table):
         np.testing.assert_allclose(got.data, direct.filled(DEM_NODATA), atol=1e-5)
 
 
-def test_halo_buffered_equals_direct_window(spark, dem_table):
+def test_halo_buffered_equals_direct_window(spark, dem_table, edge_table):
+    """The halo exchange gives a tile whose neighbours are all in its
+    table the DEM window read directly: an interior AOI tile, and the
+    edge tiles of a non-global grid, where Tile.bounds clips the
+    buffer."""
     pb = 2
-    buffered = add_buffers(dem_table, GEO, pb)
-    rows = {(r["tile_row"], r["tile_col"]): r for r in buffered.collect()}
-    # pick an interior tile of the AOI (all 8 neighbors present)
-    inner = None
-    keys = set(rows)
-    for (rr, cc) in keys:
-        if all((rr + dr, cc + dc) in keys for dr in (-1, 0, 1) for dc in (-1, 0, 1)):
-            inner = (rr, cc)
-            break
-    assert inner, "no interior tile in AOI"
-    r = rows[inner]
-    t = GEO.tile(ZOOM, *inner)
-    assert (r["height"], r["width"]) == t.shape(pixelbuffer=pb)
-    direct = dem_tile(t, pixelbuffer=pb, hole=False)
-    got = row_to_array(r.asDict())
-    np.testing.assert_allclose(got.data, direct.filled(DEM_NODATA), atol=1e-5)
+
+    def window_error(ctx):
+        # largest difference from the direct window; inf for another shape
+        direct = dem_tile(ctx.tile, pixelbuffer=pb, hole=False).filled(DEM_NODATA)
+        if ctx.array.shape != direct.shape:
+            return np.inf
+        return np.abs(ctx.array.filled(DEM_NODATA) - direct).max()
+
+    for table, pyr, tiles in (
+        (dem_table, GEO, None),
+        (edge_table, EDGE, EDGE_TILES),
+    ):
+        errors = _reported(
+            run_raster_process(table, pyr, _probe(window_error), pixelbuffer=pb)
+        )
+        for rc in tiles or [_interior(set(errors))]:
+            assert errors[rc] <= 1e-5, (pyr, rc, errors[rc])
 
 
 def test_halo_edge_tile_nodata_outside_aoi(spark, dem_table):
     pb = 2
-    buffered = add_buffers(dem_table, GEO, pb)
-    rows = {(r["tile_row"], r["tile_col"]): r for r in buffered.collect()}
-    # corner tile of the AOI: missing neighbors -> masked strips
-    corner = min(rows)
-    arr = row_to_array(rows[corner].asDict())
-    assert arr.mask[:, 0, 0].all()  # top-left buffer corner has no source
+    # corner tile of the AOI: missing neighbors -> masked strips; the
+    # probe reports whether the top-left buffer corner is masked
+    corner_masked = _reported(run_raster_process(
+        dem_table, GEO,
+        _probe(lambda ctx: np.ma.getmaskarray(ctx.array)[:, 0, 0].all()),
+        pixelbuffer=pb,
+    ))
+    assert corner_masked[min(corner_masked)] == 1.0
 
 
-def test_hillshade_pipeline_matches_direct(spark, dem_table):
-    pb = 1
-    buffered = add_buffers(dem_table, GEO, pb)
-    hs = run_raster_process(
-        buffered, GEO, process_hillshade, params={"azimuth": 315.0, "altitude": 45.0}
-    )
-    rows = {(r["tile_row"], r["tile_col"]): r for r in hs.collect()}
-    keys = set(rows)
-    inner = next(
-        (rc for rc in keys
-         if all((rc[0] + dr, rc[1] + dc) in keys for dr in (-1, 0, 1) for dc in (-1, 0, 1))),
-        None,
-    )
-    assert inner
-    t = GEO.tile(ZOOM, *inner)
-    got = row_to_array(rows[inner].asDict())
-    assert got.shape == (1,) + t.shape(pixelbuffer=0)
-    direct_dem = dem_tile(t, pixelbuffer=pb, hole=False)
-    direct_hs = np_hillshade(direct_dem, (t.pixel_x_size, 0, 0, 0, -t.pixel_y_size, 0))
-    th, tw = t.shape(pixelbuffer=0)
-    np.testing.assert_array_equal(got[0].data, direct_hs.data[pb : pb + th, pb : pb + tw])
+def test_hillshade_pipeline_matches_direct(spark, dem_table, edge_table):
+    """Hillshade of the assembled window equals the hillshade of the
+    direct window cut to the tile by the window's bounds: an interior
+    AOI tile, and the edge tiles of a non-global grid."""
+    for table, pyr, zoom, pb, tiles in (
+        (dem_table, GEO, ZOOM, 1, None),
+        (edge_table, EDGE, EDGE_ZOOM, 2, EDGE_TILES),
+    ):
+        hs = run_raster_process(
+            table, pyr, process_hillshade,
+            params={"azimuth": 315.0, "altitude": 45.0}, pixelbuffer=pb,
+        )
+        rows = {(r["tile_row"], r["tile_col"]): r for r in hs.collect()}
+        for rc in tiles or [_interior(set(rows))]:
+            t = pyr.tile(zoom, *rc)
+            got = row_to_array(rows[rc].asDict())
+            assert got.shape == (1,) + t.shape(pixelbuffer=0)
+            direct_dem = dem_tile(t, pixelbuffer=pb, hole=False)
+            direct_hs = np_hillshade(direct_dem, (t.pixel_x_size, 0, 0, 0, -t.pixel_y_size, 0))
+            bb, tb = t.bounds(pixelbuffer=pb), t.bounds(pixelbuffer=0)
+            up = round((bb.top - tb.top) / t.pixel_y_size)
+            left = round((tb.left - bb.left) / t.pixel_x_size)
+            th, tw = t.shape(pixelbuffer=0)
+            np.testing.assert_array_equal(
+                got[0].data, direct_hs.data[up : up + th, left : left + tw], err_msg=str(rc)
+            )
 
 
 def test_convert_scale(spark, dem_table):
@@ -200,15 +261,17 @@ WINDOW_CASES = {
     "half_keep_pb2": (GEO, ZOOM, AOI, 2, False, None, "hillshade", True),
     "pb0_convert": (GEO, ZOOM, AOI, 0, True, TRIANGLE, "convert", None),
     "pb2_convert": (GEO, ZOOM, AOI, 2, False, None, "convert", None),
+    "contours_pb1": (GEO, ZOOM, AOI, 1, False, None, "contours", None),
+    "contours_globe_pb2": (GEO, 2, None, 2, False, None, "contours", None),
+    "contours_antimeridian_pb1": (GEO, ZOOM, Bounds(170.0, -10.0, 190.0, 10.0), 1, False, None, "contours", None),
 }
 
 
 def test_windowed_process_equals_halo_exchange(spark):
     """Windows read in the process task give the halo exchange's tiles
     byte for byte: pixelbuffer 0-2, the DEM hole, the antimeridian, the
-    pole rows, metatiling, an area and a continue-mode key filter."""
-    import functools
-
+    pole rows, metatiling, an area, a continue-mode key filter, and
+    vector (contours) rows, compared by md5 of geometry and properties."""
     from pyspark.sql import functions as F
 
     from mapchete_spark.operators.checkpoint import KeyFilter
@@ -216,27 +279,38 @@ def test_windowed_process_equals_halo_exchange(spark):
     from mapchete_spark.operators.rastertable import aoi_tile_keys
 
     processes = {"hillshade": process_hillshade, "convert": process_convert}
-    windowed, halo = [], []
+    frames = []
     for name, (pyr, zoom, bounds, pb, hole, area, proc, keep) in WINDOW_CASES.items():
         todo = None
         if keep is not None:
             todo = KeyFilter(aoi_tile_keys(pyr, zoom, bounds)[::2], keep=keep)
-        out = dict(process=processes[proc], params={"dtype": "int16"},
-                   out_dtype="uint8" if proc == "hillshade" else "int16", out_nodata=0)
-        windowed.append(run_windowed_process(
+        vector = proc == "contours"
+        if vector:
+            out = dict(process=process_contours, params={"interval": 200})
+            digest = F.md5(F.concat("geometry", F.encode("properties", "utf-8")))
+        else:
+            out = dict(process=processes[proc], params={"dtype": "int16"},
+                       out_dtype="uint8" if proc == "hillshade" else "int16", out_nodata=0)
+            digest = F.md5("data")
+        windowed = run_windowed_process(
             spark, pyr, zoom, functools.partial(dem_tile, hole=hole), DEM_NODATA,
-            pb, bounds=bounds, area=area, target_filter=todo, **out,
-        ).withColumn("case", F.lit(name)))
+            pb, bounds=bounds, area=area, target_filter=todo, vector=vector, **out,
+        )
         dem = materialize_dem(spark, zoom, pyr, bounds=bounds, hole=hole, area=area)
-        halo.append(run_raster_process(
-            dem, pyr, pixelbuffer=pb, target_filter=todo, **out,
-        ).withColumn("case", F.lit(name)))
+        run = run_vector_process if vector else run_raster_process
+        halo = run(dem, pyr, pixelbuffer=pb, target_filter=todo, **out)
+        frames += [
+            df.select(F.lit(side).alias("side"), F.lit(name).alias("case"), "tile_key",
+                      digest.alias("h"))
+            for side, df in (("windowed", windowed), ("halo", halo))
+        ]
 
     got: dict = {}
-    both = [df.withColumn("side", F.lit(side)) for side, dfs in (("windowed", windowed), ("halo", halo)) for df in dfs]
-    for r in functools.reduce(lambda a, b: a.unionByName(b), both).select(
-        "side", "case", "tile_key", F.md5("data").alias("h")
-    ).collect():
-        got.setdefault((r["side"], r["case"]), {})[r["tile_key"]] = r["h"]
+    for r in functools.reduce(lambda a, b: a.unionByName(b), frames).collect():
+        got.setdefault((r["side"], r["case"]), {}).setdefault(r["tile_key"], []).append(r["h"])
     for name in WINDOW_CASES:
-        assert got.get(("windowed", name)) == got[("halo", name)], name
+        windowed, halo = (
+            {k: sorted(v) for k, v in got.get((side, name), {}).items()}
+            for side in ("windowed", "halo")
+        )
+        assert halo and windowed == halo, name

@@ -113,6 +113,27 @@ class TestBounds:
         assert b.left < -180.0  # overflow allowed (wrapped by readers)
         assert t.shape() == (260, 260)
 
+    def test_window_offset_and_pixelbuffer(self):
+        """Where the buffered window puts the tile, and which buffer a
+        window shape stands for: a clipped side adds no pixels, so on a
+        non-global grid the edge columns' windows are one-sided."""
+        edge = TilePyramid(
+            {"shape": [1, 2], "bounds": [-180, -90, 180, 90], "srs": "EPSG:4326",
+             "is_global": False}
+        )
+        geo = TilePyramid("geodetic")
+        for tile, pb, shape, offset in (
+            (geo.tile(2, 1, 2), 2, (260, 260), (2, 2)),
+            (geo.tile(2, 0, 0), 2, (258, 260), (0, 2)),  # north pole row
+            (edge.tile(3, 1, 0), 2, (260, 258), (2, 0)),  # left edge
+            (edge.tile(3, 1, 15), 2, (260, 258), (2, 2)),  # right edge
+            (edge.tile(3, 0, 0), 1, (257, 257), (0, 0)),  # top-left corner
+            (edge.tile(3, 1, 3), 0, (256, 256), (0, 0)),
+        ):
+            assert tile.shape(pixelbuffer=pb) == shape
+            assert tile.window_offset(pb) == offset
+            assert tile.window_pixelbuffer((1,) + shape) == pb
+
     def test_metatile_cropped_at_edge(self):
         # geodetic metatiling 8 at zoom 2: 4x8 base tiles -> 1x1 metatile
         tp = TilePyramid("geodetic", metatiling=8)
