@@ -1825,7 +1825,9 @@ def q_job_stage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 metrics table + Z3/Z5 stage ordering: a baselevels job
     (process z5, then overview z4, then z3) records one metrics row per
     stage; sequence (by timestamp) and per-stage tile counts re-derived
-    from parent-range arithmetic."""
+    from parent-range arithmetic. The process stage writes the z4
+    parents in its own task, so the overview z4 stage counts them but
+    runs no Spark job of its own."""
     import tempfile
 
     from pyspark.sql import Window
@@ -1861,17 +1863,21 @@ def q_job_stage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             # J6 task-metrics profile (operators/profilers, pulled from
             # Spark's status store by each stage's job group):
             # executor run time and peak execution memory must be
-            # measured for every stage...
-            (
-                (F.col("task_run_ms") > 0) & (F.col("peak_mem_bytes") > 0)
+            # measured for every stage that ran a Spark job (a stage
+            # without one has no profile: false)...
+            F.coalesce(
+                (F.col("task_run_ms") > 0) & (F.col("peak_mem_bytes") > 0),
+                F.lit(False),
             ).alias("profiled"),
-            # ...and the overview stages shuffle (they reduce child
-            # payloads), so their measured shuffle bytes are positive,
-            # while the process stage reads each DEM window inside its
-            # task and shuffles nothing
-            (
+            # ...and the overview z3 stage shuffles (it reduces stored
+            # child payloads), so its measured shuffle bytes are
+            # positive, while the process stage reads each DEM window
+            # and reduces the z4 parents inside its task and shuffles
+            # nothing
+            F.coalesce(
                 (F.col("shuffle_read_bytes") > 0)
-                & (F.col("shuffle_write_bytes") > 0)
+                & (F.col("shuffle_write_bytes") > 0),
+                F.lit(False),
             ).alias("shuffled"),
         )
         .orderBy("seq")
@@ -1893,7 +1899,7 @@ def o_job_stage_metrics() -> str:
     return f"""
     SELECT 1 AS seq, 'process_z5' AS stage, CAST({n5} AS BIGINT) AS n_tiles,
            TRUE AS profiled, FALSE AS shuffled
-    UNION ALL SELECT 2, 'overview_z4', {n4}, TRUE, TRUE
+    UNION ALL SELECT 2, 'overview_z4', {n4}, FALSE, FALSE
     UNION ALL SELECT 3, 'overview_z3', {n3}, TRUE, TRUE
     ORDER BY seq
     """

@@ -115,7 +115,10 @@ class KeyFilter:
 
     The keys become a local relation (built from Arrow, so its size costs
     no per-key Python call) that a broadcast semi/anti join applies at
-    any size; broadcasting it is one Spark job of the filtered query."""
+    any size; broadcasting it is one Spark job of the filtered query.
+    A Python task can apply the filter itself (``passes``): then the keys
+    ride in its closure, which PySpark ships as a broadcast variable once
+    it is large, and no Spark job is added."""
 
     keys: np.ndarray
     keep: bool = False
@@ -123,6 +126,12 @@ class KeyFilter:
     @property
     def passes_all(self) -> bool:
         return not self.keep and not len(self.keys)
+
+    def passes(self, keys: np.ndarray) -> np.ndarray:
+        """Mask of the ``keys`` this filter lets through."""
+        if self.passes_all:
+            return np.ones(len(keys), dtype=bool)
+        return np.isin(keys, self.keys) == self.keep
 
     def apply(self, df: DataFrame, col: str = "tile_key") -> DataFrame:
         if self.passes_all:

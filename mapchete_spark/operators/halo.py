@@ -7,9 +7,12 @@ tile.py:260-272). Two operators render that here, with one per-tile body
 ``vector``, feature rows) and one halo exchange:
 
 - ``run_windowed_process``, for inputs a task can read any tile of (the
-  analytic DEM): one ``mapInPandas`` over a ``spark.range`` of tile ids.
-  Each task reads its targets' neighbours itself and runs the process on
-  the assembled canvas — no shuffle, one Python stage.
+  analytic DEM): one ``mapInPandas`` over a ``spark.range`` of 2x2
+  block ids. Each task reads its tiles' neighbours itself and runs the
+  process on the assembled canvas — no shuffle, one Python stage — and
+  can reduce each block's tiles into their parent right away (the
+  reference builds an overview tile as soon as its four children are
+  done, processing/tasks.py:570-617).
 - ``run_buffered_process``, for tile-table inputs (another job's output,
   or any DataFrame of tiles): a buffered read becomes a shuffle. Every
   tile mails the <= pixelbuffer wide edge strips its neighbours need
@@ -39,9 +42,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from mapchete_spark.functions.geo import tile_key_col
+from mapchete_spark.operators.checkpoint import PASS_ALL, KeyFilter
+from mapchete_spark.operators.overviews import reduce_children
 from mapchete_spark.operators.process import VECTOR_SCHEMA, canvas_rows
 from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
@@ -49,6 +52,7 @@ from mapchete_spark.operators.rastertable import (
     decode_array,
     encode_array,
     filled_array,
+    merge_tile_ranges,
     schema_columns,
     tile_ids_for_ranges,
     tiles_in_area,
@@ -119,14 +123,25 @@ def run_windowed_process(
     out_nodata: Optional[float] = None,
     bounds: Optional[Bounds] = None,
     area=None,
-    target_filter=None,
+    target_filter: Optional[KeyFilter] = None,
     vector: bool = False,
+    parents: Optional[KeyFilter] = None,
+    resampling: str = "nearest",
 ) -> DataFrame:
     """Run a process on every tile of ``bounds`` (and ``area``) at
-    ``zoom`` with its buffered window read at the source: a
-    ``spark.range`` of tile ids, ``target_filter`` (a checkpoint
-    KeyFilter), then ONE mapInPandas that builds each target's canvas
-    from ``read_tile(neighbour)`` strips and runs the process on it.
+    ``zoom`` with its buffered window read at the source, walking 2x2
+    blocks: a ``spark.range`` of block ids (the tiles' parents at
+    ``zoom - 1``; at zoom 0 just their row and column halved), then ONE
+    mapInPandas. Per block, the task takes the block's tiles that are in
+    the input set and pass ``target_filter`` (a checkpoint KeyFilter,
+    applied in the task), builds each one's canvas from
+    ``read_tile(neighbour)`` strips and runs the process on it.
+
+    ``parents`` (raster only, a KeyFilter of keys at ``zoom - 1``): a
+    block whose parent passes it and whose tiles gave rows also emits
+    the parent, reduced from those rows by
+    ``overviews.reduce_children`` with ``resampling`` — the first
+    overview zoom, in the same task.
 
     The input set is the tiles of ``bounds`` that intersect ``area``, as
     ``materialize_dem`` would generate them: a neighbour outside it
@@ -134,23 +149,22 @@ def run_windowed_process(
     exchange over that table (``run_buffered_process``, with the same
     ``vector`` flag) byte for byte. A bounded per-task cache keeps each
     neighbour read once per task."""
+    if parents is not None and (vector or zoom < 1):
+        raise ValueError("only a raster process above zoom 0 can reduce its parents")
     ranges = aoi_tile_ranges(pyramid, zoom, bounds)
     schema = VECTOR_SCHEMA if vector else RASTER_SCHEMA
     if not ranges:
         return spark.createDataFrame([], schema)
-    n = sum((r1 - r0 + 1) * (c1 - c0 + 1) for r0, r1, c0, c1 in ranges)
+    blocks = merge_tile_ranges((r0 // 2, r1 // 2, c0 // 2, c1 // 2) for r0, r1, c0, c1 in ranges)
+    n = sum((r1 - r0 + 1) * (c1 - c0 + 1) for r0, r1, c0, c1 in blocks)
     # one slice per core but one: the core left over serves the JVM
     # threads that write each task's output and, early in a session, the
     # JIT compiler. With a Python worker on every core of a 4-vCPU host,
     # their bursts slowed the whole stage, so a fresh execute's wall time
     # varied more from one session to the next.
     slices = min(n, max(1, spark.sparkContext.defaultParallelism - 1))
-    ids = tile_ids_for_ranges(spark, ranges, zoom, slices)
-    ids = ids.withColumn(
-        "tile_key", tile_key_col(F.col("zoom"), F.col("tile_row"), F.col("tile_col"))
-    )
-    if target_filter is not None:
-        ids = target_filter.apply(ids)
+    ids = tile_ids_for_ranges(spark, blocks, zoom - 1, slices)
+    target_filter = target_filter or PASS_ALL
     pb = int(pixelbuffer)
     pyr_dict = pyramid.to_dict()
     params = params or {}
@@ -181,32 +195,64 @@ def run_windowed_process(
             windows[(r, c)] = arr
             return arr
 
+        def tile_rows(r: int, c: int, key: int) -> list:
+            pieces = []
+            for dr in (-1, 0, 1):
+                for dc in (-1, 0, 1):
+                    nr, nc = r + dr, c + dc
+                    if nr < 0 or nr >= mh:
+                        continue
+                    if nc < 0 or nc >= mw:
+                        if not p.is_global:
+                            continue
+                        nc %= mw
+                    if in_input_set(nr, nc):
+                        pieces.append((dr, dc, _strip(window(nr, nc), -dr, -dc, pb)))
+            me = Tile(p, zoom, r, c)
+            return canvas_rows(
+                me, key, _canvas(me, pb, pieces, nodata), nodata, process, params,
+                out_dtype, out_nodata, vector,
+            )
+
+        def parent_row(br: int, bc: int, children: list) -> dict:
+            arrays = [
+                (
+                    Tile(p, zoom, ch["tile_row"], ch["tile_col"]),
+                    decode_array(
+                        ch["data"], ch["dtype"], ch["bands"], ch["height"],
+                        ch["width"], float(ch["nodata"]),
+                    ),
+                )
+                for ch in children
+            ]
+            return reduce_children(
+                Tile(p, zoom - 1, br, bc), arrays, float(children[0]["nodata"]), resampling
+            )
+
         for pdf in batches:
             out = {k: [] for k in columns}
-            for r, c, key in zip(
-                pdf["tile_row"].values, pdf["tile_col"].values, pdf["tile_key"].values
-            ):
-                r, c = int(r), int(c)
-                if not in_input_set(r, c):
-                    continue
-                pieces = []
-                for dr in (-1, 0, 1):
-                    for dc in (-1, 0, 1):
-                        nr, nc = r + dr, c + dc
-                        if nr < 0 or nr >= mh:
-                            continue
-                        if nc < 0 or nc >= mw:
-                            if not p.is_global:
-                                continue
-                            nc %= mw
-                        if in_input_set(nr, nc):
-                            pieces.append((dr, dc, _strip(window(nr, nc), -dr, -dc, pb)))
-                me = Tile(p, zoom, r, c)
-                canvas = _canvas(me, pb, pieces, nodata)
-                for row in canvas_rows(
-                    me, int(key), canvas, nodata, process, params,
-                    out_dtype, out_nodata, vector,
-                ):
+            brs = pdf["tile_row"].values.astype(np.int64)
+            bcs = pdf["tile_col"].values.astype(np.int64)
+            # the block's four tiles, row-major; tiles off the matrix fail
+            # the input-set test below
+            rows = (2 * brs[:, None] + np.array([0, 0, 1, 1])).ravel()
+            cols = (2 * bcs[:, None] + np.array([0, 1, 0, 1])).ravel()
+            keys = linear_tile_key(zoom, rows, cols)
+            todo = target_filter.passes(keys).reshape(-1, 4)
+            emit = (
+                parents.passes(linear_tile_key(zoom - 1, brs, bcs))
+                if parents is not None
+                else np.zeros(len(brs), dtype=bool)
+            )
+            for i, (br, bc) in enumerate(zip(brs.tolist(), bcs.tolist())):
+                children = []
+                for j in range(4):
+                    r, c = int(rows[4 * i + j]), int(cols[4 * i + j])
+                    if todo[i, j] and in_input_set(r, c):
+                        children += tile_rows(r, c, int(keys[4 * i + j]))
+                if emit[i] and children:
+                    children.append(parent_row(br, bc, children))
+                for row in children:
                     for k, v in row.items():
                         out[k].append(v)
             yield pd.DataFrame(out)

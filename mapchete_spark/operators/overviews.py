@@ -3,7 +3,11 @@
 Lower-zoom overview tiles are interpolated from their 4 children:
 mosaic the child arrays and resample onto the parent grid
 (mapchete/processing/tasks.py:378-450, lower path :408-448; default
-resampling 'nearest', config/base.py:535-536).  Spark shape: one
+resampling 'nearest', config/base.py:535-536). ``reduce_children`` is
+that one body. The first overview zoom below a DEM process zoom is
+reduced inside the process task, from the children it just computed
+(operators/halo.py ``run_windowed_process``); below that level, and for
+parents whose children were stored earlier, the Spark shape is one
 ``groupBy(parent_key).applyInPandas`` per zoom step, iterating
 max -> min (the reference's zoom-descending batches,
 processing/base.py:799-845); each step shuffles only the previous
@@ -16,13 +20,15 @@ The higher-zoom path (children from parent, tasks.py:398-406) is
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import Iterator, List, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapchete_spark.operators.checkpoint import PASS_ALL, KeyFilter
 from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
     decode_array,
@@ -35,60 +41,69 @@ from mapchete_spark.tilegrid.keys import linear_tile_key, split_linear_tile_key
 from mapchete_spark.functions.geo import parent_tile_key_col
 
 
+def reduce_children(
+    parent: Tile, children: Sequence[Tuple[Tile, np.ndarray]], nodata: float,
+    resampling: str,
+) -> dict:
+    """The overview row (column -> value) of ``parent`` from its
+    children, (Tile, masked array) pairs at the zoom below: their mosaic
+    resampled onto the parent's grid."""
+    mosaic, mbounds = create_mosaic(children, nodata=nodata)
+    out = resample_from_array(
+        mosaic,
+        mbounds,
+        parent.bounds(pixelbuffer=0),
+        parent.shape(pixelbuffer=0),
+        resampling=resampling,
+        nodata=nodata,
+    )
+    data, dtype, bands, h, w = encode_array(out, nodata)
+    return {
+        "zoom": parent.zoom, "tile_row": parent.row, "tile_col": parent.col,
+        "tile_key": linear_tile_key(parent.zoom, parent.row, parent.col),
+        "bands": bands, "height": h, "width": w, "dtype": dtype,
+        "nodata": nodata, "data": data,
+    }
+
+
 def overview_reduce_once(
-    tiles: DataFrame, pyramid: TilePyramid, resampling: str = "nearest"
+    tiles: DataFrame,
+    pyramid: TilePyramid,
+    resampling: str = "nearest",
+    parents: KeyFilter = PASS_ALL,
 ) -> DataFrame:
-    """One pyramid step: children at zoom z -> parents at zoom z-1."""
+    """One pyramid step: children at zoom z -> parents at zoom z-1.
+    ``parents`` (continue mode, a checkpoint.KeyFilter of parent keys)
+    drops the children of the parents it excludes before the shuffle."""
     pyr_dict = pyramid.to_dict()
 
-    with_parent = tiles.withColumn(
-        "parent_key",
-        parent_tile_key_col(
-            F.col("zoom"), F.col("tile_row"), F.col("tile_col")
+    with_parent = parents.apply(
+        tiles.withColumn(
+            "parent_key",
+            parent_tile_key_col(F.col("zoom"), F.col("tile_row"), F.col("tile_col")),
         ),
+        "parent_key",
     )
 
     def reduce_group(key: Tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         p = TilePyramid(**pyr_dict)
-        parent_key = int(key[0])
-        z, prow, pcol = split_linear_tile_key(parent_key)
-        parent = Tile(p, int(z), int(prow), int(pcol))
-        children_arrays = []
-        for cz, crow, ccol, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-            pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-            pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-            pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
-        ):
-            t = Tile(p, int(cz), int(crow), int(ccol))
-            arr = decode_array(
-                rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
+        z, prow, pcol = split_linear_tile_key(int(key[0]))
+        children = [
+            (
+                Tile(p, int(cz), int(crow), int(ccol)),
+                decode_array(rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)),
             )
-            children_arrays.append((t, arr))
-        nodata = float(pdf.iloc[0]["nodata"])
-        mosaic, mbounds = create_mosaic(children_arrays, nodata=nodata)
-        out = resample_from_array(
-            mosaic,
-            mbounds,
-            parent.bounds(pixelbuffer=0),
-            parent.shape(pixelbuffer=0),
-            resampling=resampling,
-            nodata=nodata,
+            for cz, crow, ccol, rdata, rdtype, rbands, rh, rw, rnodata in zip(
+                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
+                pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
+                pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
+            )
+        ]
+        row = reduce_children(
+            Tile(p, int(z), int(prow), int(pcol)), children,
+            float(pdf.iloc[0]["nodata"]), resampling,
         )
-        data, dtype, bands, h, w = encode_array(out, nodata)
-        return pd.DataFrame(
-            {
-                "zoom": [int(z)],
-                "tile_row": [int(prow)],
-                "tile_col": [int(pcol)],
-                "tile_key": [parent_key],
-                "bands": [bands],
-                "height": [h],
-                "width": [w],
-                "dtype": [dtype],
-                "nodata": [nodata],
-                "data": [data],
-            }
-        )
+        return pd.DataFrame({k: [v] for k, v in row.items()})
 
     return with_parent.groupBy("parent_key").applyInPandas(
         reduce_group, schema=RASTER_SCHEMA

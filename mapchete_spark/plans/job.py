@@ -6,14 +6,19 @@ driver; then per process zoom (descending):
     tile ids -> buffered window read in the task -> process UDF -> write
     (output parquet) -> driver-side commit (done-manifest + metrics)
 for DEM inputs (operators/halo.py run_windowed_process: one Python
-stage, no shuffle), and for tile-table inputs
+stage over 2x2 blocks, no shuffle), and for tile-table inputs
     input tiles -> halo exchange (pixelbuffer) -> process UDF -> write
 (run_buffered_process: one strip shuffle, one Python stage after it).
 Raster and vector processes take the same path, with one per-tile body
 (operators/process.py canvas_rows); only an output split is
-raster-only. Per overview zoom: groupBy(parent) reduce of the level above
-(lower path) or parent->children upsample (higher path) — Z1 semantics
-(mapchete/processing/tasks.py:378-450).
+raster-only. A raster DEM process zoom right above a lower overview
+zoom also reduces each block into its parent in the same task, and
+both zooms go out in the stage's one write (the reference starts an
+overview tile once its four children are done, processing/tasks.py:
+570-617). Per overview zoom, for the rest: groupBy(parent) reduce of the
+stored level above (lower path) or parent->children upsample (higher
+path) — Z1 semantics (mapchete/processing/tasks.py:378-450); a zoom
+whose parents were all reduced in the process task starts no job.
 
 Continue mode is planned on the driver (reference S11/J1/J2: an
 existence check on tiles whose ids are computed, not stored): each
@@ -43,10 +48,9 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapchete_spark.functions.geo import parent_tile_key_col, zorder_key_col
+from mapchete_spark.functions.geo import zorder_key_col
 from mapchete_spark.operators.checkpoint import (
     NO_KEYS,
-    PASS_ALL,
     JobStore,
     KeyFilter,
     plan_keys,
@@ -199,12 +203,15 @@ def _dem_hole(inp) -> bool:
 def _tile_process(
     spark, cfg: JobConfig, zoom: int, kind: str, fn, pb: int, params,
     target_filter, tiles: Optional[DataFrame] = None,
+    parents: Optional[KeyFilter] = None,
 ) -> DataFrame:
     """A single-input process at ``zoom``: raster rows, or feature rows
     for a vector ``kind``. Over a DEM input, every tile of the AOI with
     its buffered window read inside the process task (no tile table, no
-    shuffle); over a tile table (``tiles``, by default the configured
-    input), the halo exchange when ``pb`` asks for a buffer."""
+    shuffle), plus the ``parents`` at ``zoom - 1`` that pass that filter
+    reduced from their children in the same task; over a tile table
+    (``tiles``, by default the configured input), the halo exchange when
+    ``pb`` asks for a buffer."""
     common = dict(
         params=params,
         out_dtype=cfg.output.get("dtype"),
@@ -216,11 +223,19 @@ def _tile_process(
     if _is_dem(inp):
         return run_windowed_process(
             spark, cfg.pyramid, zoom, functools.partial(dem_tile, hole=_dem_hole(inp)),
-            DEM_NODATA, pb, fn, bounds=cfg.bounds, area=cfg.area, **common,
+            DEM_NODATA, pb, fn, bounds=cfg.bounds, area=cfg.area, parents=parents,
+            resampling=cfg.baselevels.lower if parents is not None else "nearest",
+            **common,
         )
     if tiles is None:
         tiles = _input_tiles(spark, cfg, zoom)
     return run_buffered_process(tiles, cfg.pyramid, pb, fn, **common)
+
+
+def _by_zoom(keys: np.ndarray) -> Dict[int, np.ndarray]:
+    """Tile ``keys`` split by zoom."""
+    zooms = keys >> LINEAR_ZOOM_SHIFT
+    return {int(z): keys[zooms == z] for z in np.unique(zooms)}
 
 
 def _parent_keys(keys: np.ndarray) -> np.ndarray:
@@ -277,7 +292,8 @@ def _read_path_input(spark, cfg: JobConfig, zoom: int, path: str, spec: dict):
             cfg.pyramid,
             resampling=spec.get("resampling", "nearest"),
         )
-    return spark.read.parquet(path).where(F.col("zoom") == zoom)
+    # the known schema: no schema-inference job per read
+    return spark.read.schema(RASTER_SCHEMA).parquet(path).where(F.col("zoom") == zoom)
 
 
 _VECTOR_FILE_EXTS = (".geojson", ".json", ".gpkg", ".fgb", ".shp")
@@ -489,21 +505,31 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         raise
     notify("initializing")
     payload = "data" if kind == "raster" else "geometry"
-    # continue mode: the manifest's done keys per zoom, read once on the
-    # driver after committing the files of a run that crashed mid-stage
-    done: Dict[int, np.ndarray] = {}
+    # the manifest's keys per zoom, read once on the driver (in continue
+    # mode after committing the files of a run that crashed mid-stage);
+    # ``done`` starts from them in continue mode and empty otherwise, and
+    # gains every key a stage writes or finds Empty
+    stored: Dict[int, np.ndarray] = {}
     try:
         prep = run_preprocessing_tasks(spark, cfg)
         store.compact()
         if mode == "continue":
             store.adopt_orphans(tiles_path, payload)
-            keys = store.done_keys()
-            zooms = keys >> LINEAR_ZOOM_SHIFT
-            done = {int(z): keys[zooms == z] for z in np.unique(zooms)}
+        if mode != "readonly":
+            stored = _by_zoom(store.done_keys())
     except Exception as exc:
         notify("failed", f"{type(exc).__name__}: {exc}")
         raise
+    done = dict(stored) if mode == "continue" else {}
     counts: Dict[str, int] = {}
+    # zoom -> rows this run wrote there; a stage counts those of its zoom,
+    # so an overview stage also counts the parents the process stage
+    # above it reduced in its task
+    wrote: Dict[int, int] = {}
+
+    def add_done(keys: np.ndarray) -> None:
+        for z, k in _by_zoom(keys).items():
+            done[z] = np.union1d(done.get(z, NO_KEYS), k)
 
     # J6: per-stage Spark TaskMetrics (peak memory, shuffle bytes, spill)
     # pulled from Spark's status store by the stage's job group
@@ -517,14 +543,22 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         that writes (one build is ~370 py4j calls)."""
         return zorder_key_col(F.col("zoom"), F.col("tile_row"), F.col("tile_col"))
 
-    def stage(name: str, zoom: int, candidates, build):
+    def stage(name: str, zoom: int, candidates, build, fuse: bool = False):
         """Plan on the driver, then — if anything is left to do — one
         Spark write and a manifest commit. ``candidates(limit)`` gives
         the keys the stage would write, or None when they are unknown or
         would take more than ``limit`` keys to enumerate; ``build(todo)``
         the stage's rows, with the ``todo`` KeyFilter applied. Candidates
         the stage did not write raised Empty: they are recorded as done
-        too, so a no-op run skips them."""
+        too, so a no-op run skips them.
+
+        With ``fuse`` the stage also writes parents at ``zoom - 1``,
+        reduced in its task from the children it computes:
+        ``build(todo, parents)`` gets the KeyFilter of those it may
+        reduce. They are the parents none of whose children is stored
+        and which are not done themselves, so the per-zoom reduce would
+        have read exactly the children this stage writes. Every other
+        todo parent is left to that reduce."""
         t0 = time.time()
         if mode == "readonly":
             counts[name] = 0
@@ -535,8 +569,16 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         # so todo is not empty and dropping the done keys is the smaller
         # filter
         cand = candidates(2 * done_z.size)
-        todo = plan_keys(cand, done_z) if mode == "continue" else PASS_ALL
-        n, profile = 0, None
+        # in overwrite mode ``done`` holds this run's keys only
+        todo = plan_keys(cand, done_z)
+        parents = None
+        if fuse:
+            parents = KeyFilter(
+                np.union1d(
+                    _parent_keys(stored.get(zoom, NO_KEYS)), done.get(zoom - 1, NO_KEYS)
+                )
+            )
+        profile = None
         if todo is not None:
             group = f"{store.run_id}:{name}"
             # the caller's job group comes back after the stage, so its
@@ -547,7 +589,8 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                 # physical layout: sort each partition in z-order so
                 # parquet row groups carry spatial locality (row/col
                 # min/max stats then prune spatial range scans)
-                ordered = build(todo).sortWithinPartitions(zorder())
+                rows = build(todo, parents) if fuse else build(todo)
+                ordered = rows.sortWithinPartitions(zorder())
                 written = write_tiles(
                     store, ordered, tiles_path, payload, partition_by="zoom"
                 )
@@ -557,16 +600,26 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
             finally:
                 for k, v in caller.items():
                     sc.setLocalProperty(k, v)
-            n = len(written)
-            done_z = np.union1d(done_z, written)
+            for z, k in _by_zoom(written).items():
+                wrote[z] = wrote.get(z, 0) + k.size
+            add_done(written)
             if cand is None:
-                cand = candidates(2 * done_z.size)
+                cand = candidates(2 * done.get(zoom, NO_KEYS).size)
             if cand is not None:
-                empty = np.setdiff1d(cand, done_z)
+                if fuse:
+                    # the parents of the blocks the task walked (those
+                    # with a todo tile) that it was to reduce
+                    cand = np.union1d(
+                        cand,
+                        np.setdiff1d(
+                            _parent_keys(np.setdiff1d(cand, done_z)), parents.keys
+                        ),
+                    )
+                empty = np.setdiff1d(cand, np.union1d(done.get(zoom, NO_KEYS), written))
                 store.record_empty(empty)
-                done_z = np.union1d(done_z, empty)
-            done[zoom] = done_z
+                add_done(empty)
             profile = profiler.profile_for(group)
+        n = wrote.get(zoom, 0)
         store.record_metric(name, n, (time.time() - t0) * 1000, profile)
         counts[name] = n
 
@@ -575,6 +628,11 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
     notify("running")
 
     # ---- process zooms (descending; one Spark action per zoom = Z5) ----
+    # a raster DEM process zoom right above a lower overview zoom reduces
+    # that zoom's parents in its own task
+    lower = (
+        cfg.overview_zooms_lower() if cfg.baselevels and kind == "raster" else []
+    )
     _vector_param_cache: Dict[str, list] = {}
     for zoom in cfg.process_zooms():
         params = cfg.params_at_zoom(zoom)
@@ -588,7 +646,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         # inputs define their own tiles, and an output split re-keys them
         plannable = _is_dem(inp_spec) and out_meta == cfg.pyramid.metatiling
 
-        def build(todo, zoom=zoom, params=params, inp_spec=inp_spec):
+        def build(todo, parents=None, zoom=zoom, params=params, inp_spec=inp_spec):
             if kind == "features":
                 from mapchete_spark.operators.process import (
                     run_feature_process,
@@ -633,7 +691,8 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
             # rows by output tile, so there the filter guards the write only
             split = kind == "raster" and out_meta < cfg.pyramid.metatiling
             out = _tile_process(
-                spark, cfg, zoom, kind, fn, pb, params, None if split else todo
+                spark, cfg, zoom, kind, fn, pb, params, None if split else todo,
+                parents=parents,
             )
             if not split:
                 return out
@@ -661,6 +720,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
             if plannable
             else (lambda limit: None),
             build,
+            fuse=plannable and zoom - 1 in lower,
         )
 
     # ---- overview zooms ----
@@ -674,22 +734,16 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
                 .where(F.col("zoom") == zoom)
             )
 
-        # lower: reduce from the level above; compute skip drops children
-        # whose PARENT is done before the reduce shuffle
+        # lower: reduce from the stored level above the parents the
+        # process stage did not reduce in its task; compute skip drops
+        # children whose PARENT is done before the reduce shuffle
         def reduce(todo, zoom):
-            src = level(zoom + 1)
-            if not todo.passes_all:
-                parent_key = parent_tile_key_col(
-                    F.col("zoom"), F.col("tile_row"), F.col("tile_col")
-                )
-                src = todo.apply(
-                    src.withColumn("__parent_key", parent_key), "__parent_key"
-                ).drop("__parent_key")
             return overview_reduce_once(
-                src, cfg.pyramid, resampling=cfg.baselevels.lower
+                level(zoom + 1), cfg.pyramid, resampling=cfg.baselevels.lower,
+                parents=todo,
             )
 
-        for zoom in cfg.overview_zooms_lower():
+        for zoom in lower:
             stage(
                 f"overview_z{zoom}",
                 zoom,
@@ -738,8 +792,10 @@ def tile_index(spark: SparkSession, out_path: str, zoom: int) -> DataFrame:
     bounds (a small query over the output table, not a filesystem walk)."""
     from mapchete_spark.plans.config import JobConfig  # noqa: F401
 
-    tiles = spark.read.parquet(os.path.join(out_path, "tiles")).where(
-        F.col("zoom") == zoom
+    tiles = (
+        spark.read.schema(RASTER_SCHEMA)
+        .parquet(os.path.join(out_path, "tiles"))
+        .where(F.col("zoom") == zoom)
     )
     with open(os.path.join(out_path, "metadata.json")) as f:
         meta = json.load(f)

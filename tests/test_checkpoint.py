@@ -30,6 +30,11 @@ from mapchete_spark.operators.checkpoint import (
 )
 from mapchete_spark.operators.rastertable import materialize_dem
 from mapchete_spark.tilegrid import Bounds, TilePyramid
+from mapchete_spark.tilegrid.keys import (
+    LINEAR_ZOOM_SHIFT,
+    linear_tile_key,
+    split_linear_tile_key,
+)
 
 GEO = TilePyramid("geodetic")
 AOI = Bounds(0.0, 20.0, 45.0, 50.0)
@@ -310,6 +315,81 @@ def _pyramid_cfg(out, hole=False):
     )
 
 
+def _strip_cfg(out, c0, c1, overviews=True):
+    """Zoom-5 hillshade over tile columns c0..c1 of rows 8-9, with the
+    zoom-4 overview when ``overviews``."""
+    from mapchete_spark.plans.config import JobConfig
+
+    d = 180.0 / 2**5
+    conf = dict(
+        process="hillshade",
+        zoom_levels=[4, 5] if overviews else [5],
+        pyramid=dict(grid="geodetic", pixelbuffer=1),
+        input=dict(source="dem", hole=False),
+        output=dict(format="parquet_tiles", dtype="uint8", nodata=0, path=out),
+        bounds=[-180.0 + c0 * d, 90.0 - 10 * d, -180.0 + (c1 + 1) * d, 90.0 - 8 * d],
+    )
+    if overviews:
+        conf["baselevels"] = dict(min=5, max=5, lower="average")
+    return JobConfig.from_dict(conf)
+
+
+#: name -> (first run: columns, overviews; second run: columns, mode;
+#: parents the second run writes)
+STRIP_RUNS = {
+    # a 1-column strip: the block it adds to holds a stored tile, and
+    # its parent is done already
+    "one_column_strip": ((32, 36), True, (32, 37), "continue", 0),
+    # an earlier, wider run without overviews stored tiles left of the
+    # second run's AOI: their parents are todo, and so is the parent of
+    # the block holding one stored and one new tile; one block is new
+    "wider_earlier_run": ((33, 38), False, (34, 41), "continue", 5),
+    "overwrite_over_wider_run": ((33, 38), False, (34, 41), "overwrite", 5),
+}
+
+
+@pytest.mark.parametrize("name", sorted(STRIP_RUNS))
+def test_fused_parents_leave_stored_children_to_the_reduce(spark, tmp_path, name):
+    """The process stage reduces a parent in its task only when none of
+    its children was stored before; every other todo parent is reduced
+    by the overview stage from the stored level. Every parent the second
+    run writes equals ``overview_reduce_once`` over the stored process
+    level by md5, and no key is stored twice."""
+    from mapchete_spark.operators.overviews import overview_reduce_once
+    from mapchete_spark.operators.rastertable import RASTER_SCHEMA
+    from mapchete_spark.plans.job import execute
+
+    (a0, a1), overviews, (b0, b1), mode, n_new = STRIP_RUNS[name]
+    out = str(tmp_path / "o")
+    execute(spark, _strip_cfg(out, a0, a1, overviews), mode="continue")
+    before = {k for k, _ in _stored(out)}
+    cfg = _strip_cfg(out, b0, b1)
+    counts = execute(spark, cfg, mode=mode)
+
+    stored = _stored(out)
+    keys = [k for k, _ in stored]
+    z4 = {k: h for k, h in stored if k >> LINEAR_ZOOM_SHIFT == 4}
+    z5 = {k for k in keys if k >> LINEAR_ZOOM_SHIFT == 5}
+    if mode == "continue":
+        assert len(keys) == len(set(keys)), "a tile is stored twice"
+    else:  # overwrite appends the process zoom again, each parent once
+        assert len(z4) == sum(k >> LINEAR_ZOOM_SHIFT == 4 for k in keys)
+    assert set(z4) == {linear_tile_key(4, r // 2, c // 2) for r, c in (
+        split_linear_tile_key(k)[1:] for k in z5)}
+    new = set(z4) - before if mode == "continue" else set(z4)
+    assert counts["overview_z4"] == len(new) == n_new
+    level = (
+        spark.read.schema(RASTER_SCHEMA).parquet(os.path.join(out, "tiles"))
+        .where(F.col("zoom") == 5)
+    )
+    want = {
+        r[0]: r[1]
+        for r in overview_reduce_once(level, cfg.pyramid, "average")
+        .select("tile_key", F.md5("data")).collect()
+    }
+    assert {k: z4[k] for k in new} == {k: want[k] for k in new}
+
+
 def _stored(out):
     """(tile_key, payload md5) of every stored row."""
     t = pads.dataset(os.path.join(out, "tiles"), format="parquet").to_table(
@@ -344,9 +424,10 @@ def _last_job_id(spark):
     return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _stage_under_aqe(spark, cfg, stage):
-    """Run ``cfg`` with AQE on (the shipped config): ``stage``'s metrics
-    row and the physical plan descriptions of the queries its jobs ran."""
+def _stages_under_aqe(spark, cfg, *stages):
+    """Run ``cfg`` with AQE on (the shipped config): per stage, its
+    metrics row, its Spark job ids and the physical plan descriptions of
+    the queries its jobs ran."""
     from mapchete_spark.plans.job import execute
 
     runs = []
@@ -359,19 +440,25 @@ def _stage_under_aqe(spark, cfg, stage):
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    [row] = (
-        JobStore(spark, os.path.join(cfg.output["path"], "_state"))
-        .metrics()
-        .where(F.col("stage") == stage)
-        .collect()
-    )
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(f"{runs[0]}:{stage}")
+    metrics = JobStore(spark, os.path.join(cfg.output["path"], "_state")).metrics()
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = [
-        e.physicalPlanDescription()
-        for e in (executions.apply(i) for i in range(executions.size()))
-        if any(e.jobs().contains(j) for j in jobs)
-    ]
+    executions = [executions.apply(i) for i in range(executions.size())]
+    out = []
+    for stage in stages:
+        [row] = metrics.where(F.col("stage") == stage).collect()
+        jobs = list(spark.sparkContext.statusTracker().getJobIdsForGroup(f"{runs[0]}:{stage}"))
+        plans = [
+            e.physicalPlanDescription()
+            for e in executions
+            if any(e.jobs().contains(j) for j in jobs)
+        ]
+        out.append((row, jobs, plans))
+    return out
+
+
+def _stage_under_aqe(spark, cfg, stage):
+    """``stage``'s metrics row and query plans (``_stages_under_aqe``)."""
+    [(row, _jobs, plans)] = _stages_under_aqe(spark, cfg, stage)
     return row, plans
 
 
@@ -382,6 +469,42 @@ def test_dem_process_stage_has_no_exchange(spark, tmp_path):
     row, plans = _stage_under_aqe(spark, _pyramid_cfg(str(tmp_path / "o")), "process_z5")
     assert row["n_rows"] > 0 and row["shuffle_write_bytes"] == 0
     assert len(plans) == 1 and "Exchange" not in plans[0], plans
+
+
+def test_dem_process_stage_writes_first_overview(spark, tmp_path):
+    """The DEM process stage reduces the first overview zoom in its own
+    task: under AQE it is one Spark job whose query holds one
+    MapInPandas and no Exchange, and the overview stage starts no job
+    while its metrics row counts the parents written."""
+    (proc, proc_jobs, plans), (over, over_jobs, _) = _stages_under_aqe(
+        spark, _pyramid_cfg(str(tmp_path / "o")), "process_z5", "overview_z4"
+    )
+    assert proc["n_rows"] > 0 and len(proc_jobs) == 1
+    assert len(plans) == 1 and "Exchange" not in plans[0], plans
+    tree = plans[0].split("\n\n")[0].split("== Initial Plan ==")[0]
+    assert tree.count("MapInPandas (") == 1, tree
+    assert over["n_rows"] > 0 and over_jobs == []
+    assert over["task_run_ms"] is None
+
+
+def test_table_stage_reads_input_with_its_schema(spark, tmp_path):
+    """A process stage over a parquet tile table reads the table with
+    the raster schema, so Spark starts no schema-inference job: under
+    AQE its job group holds the strip shuffle's job and the write's."""
+    from mapchete_spark.plans.config import JobConfig
+
+    table = str(tmp_path / "dem")
+    _dem(spark).write.parquet(table)
+    cfg = JobConfig.from_dict(dict(
+        process="hillshade",
+        zoom_levels=[5],
+        pyramid=dict(grid="geodetic", pixelbuffer=1),
+        input=dict(path=table),
+        output=dict(format="parquet_tiles", path=str(tmp_path / "o")),
+    ))
+    [(row, jobs, _plans)] = _stages_under_aqe(spark, cfg, "process_z5")
+    assert row["n_rows"] > 0
+    assert len(jobs) == 2, jobs
 
 
 def test_table_vector_stage_has_one_exchange(spark, tmp_path):

@@ -20,7 +20,7 @@ import pytest
 
 # queries that can't interleave with the pooled phase: cli_execute
 # forks a spark-submit subprocess. job_stage_metrics runs in the pool,
-# so its every-stage-profiled expectation also checks that stage
+# so its profiled expectation also checks that stage
 # profiles pulled by run_id-prefixed job group stay apart under the
 # pool's concurrent queries.
 _SEQUENTIAL = {"cli_execute"}

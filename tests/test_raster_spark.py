@@ -314,3 +314,97 @@ def test_windowed_process_equals_halo_exchange(spark):
             for side in ("windowed", "halo")
         )
         assert halo and windowed == halo, name
+
+
+#: name -> (pyramid, zoom, bounds, pixelbuffer, hole, area, resampling, keep)
+FUSED_CASES = {
+    **{
+        # AOI rows 7-12: odd top and bottom edges, half-filled blocks
+        r: (GEO, ZOOM, AOI, 1, False, None, r, None)
+        for r in (
+            "nearest", "average", "bilinear", "cubic", "cubic_spline",
+            "lanczos", "max", "min", "mode",
+        )
+    },
+    "hole_average": (GEO, 6, HOLE_AOI, 2, True, None, "average", None),
+    "area_average": (GEO, ZOOM, AOI, 1, False, TRIANGLE, "average", None),
+    "antimeridian_bilinear": (GEO, ZOOM, Bounds(170.0, -10.0, 190.0, 10.0), 1, False, None, "bilinear", None),
+    "north_pole_cubic": (GEO, 4, Bounds(-30.0, 70.0, 30.0, 90.0), 1, False, None, "cubic", None),
+    "south_pole_mode_hole": (GEO, 4, Bounds(100.0, -90.0, 150.0, -70.0), 2, True, None, "mode", None),
+    # the fused level is zoom 0: both pole rows, wrapped canvases
+    "globe_z1_average": (GEO, 1, None, 1, False, None, "average", None),
+    "metatiling2_average": (TilePyramid("geodetic", metatiling=2), 4, AOI, 1, False, None, "average", None),
+    "half_drop_max": (GEO, ZOOM, AOI, 1, False, None, "max", False),
+}
+
+
+def test_fused_parents_equal_overview_reduce(spark):
+    """The parents ``run_windowed_process`` reduces in its task equal
+    ``overview_reduce_once`` over the tiles it writes, by md5: every
+    lower resampling, Empty tiles of the DEM hole, odd AOI edges and an
+    area (parents with fewer than four children), the antimeridian,
+    both pole rows, zoom 0 as the parent level, metatiling and a
+    continue-mode key filter. Its tiles are those of the walk without
+    parents."""
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators.checkpoint import PASS_ALL, KeyFilter
+    from mapchete_spark.operators.halo import run_windowed_process
+    from mapchete_spark.operators.overviews import overview_reduce_once
+    from mapchete_spark.operators.rastertable import aoi_tile_keys
+
+    frames = []
+    for name, (pyr, zoom, bounds, pb, hole, area, resampling, keep) in FUSED_CASES.items():
+        todo = None
+        if keep is not None:
+            todo = KeyFilter(aoi_tile_keys(pyr, zoom, bounds)[::2], keep=keep)
+
+        def walk(**kw):
+            return run_windowed_process(
+                spark, pyr, zoom, functools.partial(dem_tile, hole=hole), DEM_NODATA, pb,
+                process_hillshade, params={"dtype": "int16"}, out_dtype="uint8",
+                out_nodata=0, bounds=bounds, area=area, target_filter=todo, **kw,
+            )
+
+        tiles = walk()
+        sides = (
+            ("fused", walk(parents=PASS_ALL, resampling=resampling)),
+            ("tiles", tiles),
+            ("reduced", overview_reduce_once(tiles, pyr, resampling)),
+        )
+        frames += [
+            df.select(F.lit(side).alias("side"), F.lit(name).alias("case"), "zoom",
+                      "tile_key", F.md5("data").alias("h"))
+            for side, df in sides
+        ]
+
+    got: dict = {}
+    for r in functools.reduce(lambda a, b: a.unionByName(b), frames).collect():
+        got.setdefault((r["side"], r["case"]), []).append((r["zoom"], r["tile_key"], r["h"]))
+    for name, (_, zoom, *_rest) in FUSED_CASES.items():
+        fused = sorted(got.get(("fused", name), []))
+        want = sorted(got[("tiles", name)] + got[("reduced", name)])
+        assert any(z == zoom - 1 for z, _, _ in want), name
+        assert fused == want, name
+
+
+def test_zoom0_walk_has_no_parent_level(spark):
+    """At zoom 0 the blocks have no parent tile: the walk gives the halo
+    exchange's tiles, and asking it for parents raises."""
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators.checkpoint import PASS_ALL
+    from mapchete_spark.operators.halo import run_windowed_process
+
+    dem = functools.partial(dem_tile, hole=False)
+    out = dict(process=process_hillshade, params={"dtype": "int16"},
+               out_dtype="uint8", out_nodata=0)
+    windowed = run_windowed_process(spark, GEO, 0, dem, DEM_NODATA, 1, **out)
+    halo = run_raster_process(materialize_dem(spark, 0, GEO, hole=False), GEO, pixelbuffer=1, **out)
+
+    def md5s(df):
+        return sorted(tuple(r) for r in df.select("tile_key", F.md5("data")).collect())
+
+    assert len(md5s(windowed)) == 2 and md5s(windowed) == md5s(halo)
+    with pytest.raises(ValueError):
+        run_windowed_process(spark, GEO, 0, dem, DEM_NODATA, 1, parents=PASS_ALL, **out)
