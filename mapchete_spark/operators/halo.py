@@ -49,10 +49,12 @@ from mapchete_spark.operators.process import VECTOR_SCHEMA, canvas_rows
 from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
     aoi_tile_ranges,
-    decode_array,
-    encode_array,
+    decode_rows,
     filled_array,
+    mask_nodata,
     merge_tile_ranges,
+    raster_row,
+    row_to_array,
     schema_columns,
     tile_ids_for_ranges,
     tiles_in_area,
@@ -61,11 +63,10 @@ from mapchete_spark.tilegrid.grid import Bounds
 from mapchete_spark.tilegrid.pyramid import Tile, TilePyramid
 from mapchete_spark.tilegrid.keys import linear_tile_key, split_linear_tile_key
 
-_PART_SCHEMA = (
-    "target_key long, zoom int, tile_row long, tile_col long, "
-    "src_dr int, src_dc int, bands int, height int, width int, "
-    "dtype string, nodata double, data binary"
-)
+#: a strip of a tile's array, mailed to the neighbour ``target_key``;
+#: ``src_dr``/``src_dc`` is the target's offset from the tile
+_PART_SCHEMA = RASTER_SCHEMA + ", target_key long, src_dr int, src_dc int"
+_PART_COLUMNS = schema_columns(_PART_SCHEMA)
 
 #: bytes of neighbour arrays a windowed task keeps (least recently used
 #: go first); targets run in row order, so at 256 px float32 tiles the
@@ -84,12 +85,13 @@ def _strip(arr: np.ndarray, dr: int, dc: int, pb: int) -> np.ndarray:
     return arr[:, rs, cs]
 
 
-def _canvas(me: Tile, pb: int, pieces, nodata: float) -> np.ndarray:
-    """The pixel-buffered canvas of ``me`` (shape per Tile.shape(pb)):
-    nodata, with each ``(dr, dc, piece)`` placed where the neighbour at
-    offset (dr, dc) from ``me`` sits — (0, 0) is ``me``'s own array,
-    the others are ``_strip``s. Pieces reaching past the canvas (it is
-    clipped at the grid edge) are clipped with it."""
+def _canvas(me: Tile, pb: int, pieces, nodata: float) -> np.ma.MaskedArray:
+    """The pixel-buffered canvas of ``me`` (shape per Tile.shape(pb)),
+    masked where it is nodata: nodata, with each ``(dr, dc, piece)``
+    placed where the neighbour at offset (dr, dc) from ``me`` sits —
+    (0, 0) is ``me``'s own array, the others are ``_strip``s. Pieces
+    reaching past the canvas (it is clipped at the grid edge) are
+    clipped with it."""
     bh, bw = me.shape(pixelbuffer=pb)
     th, tw = me.shape(pixelbuffer=0)
     up, left = me.window_offset(pb)
@@ -107,7 +109,7 @@ def _canvas(me: Tile, pb: int, pieces, nodata: float) -> np.ndarray:
         canvas[:, r0c:r1c, c0c:c1c] = piece[
             :, r0c - r0 : r1c - r0, c0c - c0 : c1c - c0
         ]
-    return canvas
+    return mask_nodata(canvas, nodata)
 
 
 def run_windowed_process(
@@ -195,7 +197,7 @@ def run_windowed_process(
             windows[(r, c)] = arr
             return arr
 
-        def tile_rows(r: int, c: int, key: int) -> list:
+        def tile_rows(r: int, c: int) -> list:
             pieces = []
             for dr in (-1, 0, 1):
                 for dc in (-1, 0, 1):
@@ -210,23 +212,17 @@ def run_windowed_process(
                         pieces.append((dr, dc, _strip(window(nr, nc), -dr, -dc, pb)))
             me = Tile(p, zoom, r, c)
             return canvas_rows(
-                me, key, _canvas(me, pb, pieces, nodata), nodata, process, params,
+                me, _canvas(me, pb, pieces, nodata), nodata, process, params,
                 out_dtype, out_nodata, vector,
             )
 
         def parent_row(br: int, bc: int, children: list) -> dict:
             arrays = [
-                (
-                    Tile(p, zoom, ch["tile_row"], ch["tile_col"]),
-                    decode_array(
-                        ch["data"], ch["dtype"], ch["bands"], ch["height"],
-                        ch["width"], float(ch["nodata"]),
-                    ),
-                )
+                (Tile(p, zoom, ch["tile_row"], ch["tile_col"]), row_to_array(ch))
                 for ch in children
             ]
             return reduce_children(
-                Tile(p, zoom - 1, br, bc), arrays, float(children[0]["nodata"]), resampling
+                Tile(p, zoom - 1, br, bc), arrays, children[0]["nodata"], resampling
             )
 
         for pdf in batches:
@@ -249,7 +245,7 @@ def run_windowed_process(
                 for j in range(4):
                     r, c = int(rows[4 * i + j]), int(cols[4 * i + j])
                     if todo[i, j] and in_input_set(r, c):
-                        children += tile_rows(r, c, int(keys[4 * i + j]))
+                        children += tile_rows(r, c)
                 if emit[i] and children:
                     children.append(parent_row(br, bc, children))
                 for row in children:
@@ -268,25 +264,14 @@ def _parts_stage(tiles: DataFrame, pyramid: TilePyramid, pb: int) -> DataFrame:
     def emit_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = TilePyramid(**pyr_dict)
         for pdf in batches:
-            rows = {k: [] for k in (
-                "target_key", "zoom", "tile_row", "tile_col", "src_dr", "src_dc",
-                "bands", "height", "width", "dtype", "nodata", "data",
-            )}
-            for z, row, col, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-                pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-                pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
-            ):
-                z, row, col = int(z), int(row), int(col)
-                arr = decode_array(
-                    rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
-                )
-                mh = p.matrix_height(z)
-                mw = p.matrix_width(z)
+            parts = []
+            for tile, _, arr, nodata in decode_rows(pdf, p):
+                mh = p.matrix_height(tile.zoom)
+                mw = p.matrix_width(tile.zoom)
                 for dr in (-1, 0, 1):
                     for dc in (-1, 0, 1):
-                        tr = row + dr
-                        tc = col + dc
+                        tr = tile.row + dr
+                        tc = tile.col + dc
                         if tr < 0 or tr >= mh:
                             continue
                         if tc < 0 or tc >= mw:
@@ -295,29 +280,20 @@ def _parts_stage(tiles: DataFrame, pyramid: TilePyramid, pb: int) -> DataFrame:
                             else:
                                 continue
                         # strip of MY array the target at offset (dr, dc) needs
-                        data, dtype, bands, h, w = encode_array(
-                            _strip(arr, dr, dc, pb), float(rnodata)
+                        part = raster_row(tile, _strip(arr, dr, dc, pb), nodata)
+                        part.update(
+                            target_key=linear_tile_key(tile.zoom, tr, tc),
+                            src_dr=dr, src_dc=dc,
                         )
-                        rows["target_key"].append(linear_tile_key(z, tr, tc))
-                        rows["zoom"].append(z)
-                        rows["tile_row"].append(row)
-                        rows["tile_col"].append(col)
-                        rows["src_dr"].append(dr)
-                        rows["src_dc"].append(dc)
-                        rows["bands"].append(bands)
-                        rows["height"].append(h)
-                        rows["width"].append(w)
-                        rows["dtype"].append(dtype)
-                        rows["nodata"].append(float(rnodata))
-                        rows["data"].append(data)
-            yield pd.DataFrame(rows)
+                        parts.append(part)
+            yield pd.DataFrame(parts, columns=_PART_COLUMNS)
 
     return tiles.mapInPandas(emit_parts, schema=_PART_SCHEMA)
 
 
 def _assemble_canvas(p: TilePyramid, pb: int, target_key: int, pdf: pd.DataFrame):
     """Stage 2 core: place pieces into the buffered canvas.
-    Returns (tile, canvas ndarray, nodata), or ``None`` when the
+    Returns (tile, masked canvas, nodata), or ``None`` when the
     group carries no center piece — i.e. the target tile was NOT in the
     input set and only exists because neighbors mailed it strips.  Such
     phantom targets must not produce output (the reference only
@@ -326,19 +302,12 @@ def _assemble_canvas(p: TilePyramid, pb: int, target_key: int, pdf: pd.DataFrame
         return None
     z, trow, tcol = split_linear_tile_key(target_key)
     me = Tile(p, int(z), int(trow), int(tcol))
-    nodata = float(pdf["nodata"].values[0])
+    decoded = list(decode_rows(pdf, p))
+    nodata = decoded[0][3]
     # a piece came from the neighbor at offset (-src_dr, -src_dc)
     pieces = (
-        (
-            -int(rsdr),
-            -int(rsdc),
-            np.frombuffer(rdata, dtype=rdtype).reshape(int(rbands), int(rh), int(rw)),
-        )
-        for rdata, rdtype, rbands, rh, rw, rsdr, rsdc in zip(
-            pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-            pdf["height"].values, pdf["width"].values,
-            pdf["src_dr"].values, pdf["src_dc"].values,
-        )
+        (-int(sdr), -int(sdc), arr.data)
+        for (_, _, arr, _), sdr, sdc in zip(decoded, pdf["src_dr"].values, pdf["src_dc"].values)
     )
     return me, _canvas(me, pb, pieces, nodata), nodata
 
@@ -436,10 +405,9 @@ def run_buffered_process(
     schema = VECTOR_SCHEMA if vector else RASTER_SCHEMA
     columns = schema_columns(schema)
 
-    def rows(tile: Tile, tile_key: int, canvas: np.ndarray, nodata: float):
+    def rows(tile: Tile, arr: np.ma.MaskedArray, nodata: float):
         return canvas_rows(
-            tile, tile_key, canvas, nodata, process, params,
-            out_dtype, out_nodata, vector,
+            tile, arr, nodata, process, params, out_dtype, out_nodata, vector,
         )
 
     if pb <= 0:
@@ -449,22 +417,8 @@ def run_buffered_process(
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             p = TilePyramid(**pyr_dict)
             for pdf in batches:
-                out = {k: [] for k in columns}
-                for z, r, c, key, data, dtype, bands, h, w, nodata in zip(
-                    pdf["zoom"].values, pdf["tile_row"].values,
-                    pdf["tile_col"].values, pdf["tile_key"].values,
-                    pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-                    pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
-                ):
-                    canvas = np.frombuffer(data, dtype=dtype).reshape(
-                        int(bands), int(h), int(w)
-                    )
-                    for row in rows(
-                        Tile(p, int(z), int(r), int(c)), int(key), canvas, float(nodata)
-                    ):
-                        for k, v in row.items():
-                            out[k].append(v)
-                yield pd.DataFrame(out)
+                out = [row for t, _, arr, nd in decode_rows(pdf, p) for row in rows(t, arr, nd)]
+                yield pd.DataFrame(out, columns=columns)
 
         return tiles.mapInPandas(run, schema=schema)
 
@@ -477,7 +431,7 @@ def run_buffered_process(
         if assembled is None:  # phantom target (not an input tile)
             return None
         me, canvas, nodata = assembled
-        out = rows(me, target_key, canvas, nodata)
+        out = rows(me, canvas, nodata)
         return {k: [r[k] for r in out] for k in columns} if out else None
 
     return streamed_groupby(parts, "target_key", assemble_and_run, schema)

@@ -20,13 +20,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from mapchete_spark.operators.rastertable import (
+    RASTER_COLUMNS,
     RASTER_SCHEMA,
-    decode_array,
-    encode_array,
+    decode_rows,
+    raster_row,
 )
 from mapchete_spark.raster.array import extract_from_array
-from mapchete_spark.tilegrid.pyramid import Tile, TilePyramid
-from mapchete_spark.tilegrid.keys import linear_tile_key
+from mapchete_spark.tilegrid.pyramid import TilePyramid
 
 
 def split_to_output_tiles(
@@ -51,37 +51,14 @@ def split_to_output_tiles(
         pp = TilePyramid(**p_dict)
         op = TilePyramid(**o_dict)
         for pdf in batches:
-            out = {k: [] for k in (
-                "zoom", "tile_row", "tile_col", "tile_key", "bands",
-                "height", "width", "dtype", "nodata", "data",
-            )}
-            for z, trow, tcol, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-                pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-                pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
-            ):
-                ptile = Tile(pp, int(z), int(trow), int(tcol))
-                arr = decode_array(
-                    rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
-                )
+            out = []
+            for ptile, _, arr, nodata in decode_rows(pdf, pp):
                 pbounds = ptile.bounds(pixelbuffer=0)
-                for otile in op.tiles_from_bounds(pbounds, int(z)):
+                for otile in op.tiles_from_bounds(pbounds, ptile.zoom):
                     window = extract_from_array(arr, pbounds, otile.bounds())
                     if isinstance(window, np.ma.MaskedArray) and window.mask.all():
                         continue  # write-skip on empty output tile
-                    data, dtype, bands, h, w = encode_array(window, float(rnodata))
-                    out["zoom"].append(otile.zoom)
-                    out["tile_row"].append(otile.row)
-                    out["tile_col"].append(otile.col)
-                    out["tile_key"].append(
-                        linear_tile_key(otile.zoom, otile.row, otile.col)
-                    )
-                    out["bands"].append(bands)
-                    out["height"].append(h)
-                    out["width"].append(w)
-                    out["dtype"].append(dtype)
-                    out["nodata"].append(float(rnodata))
-                    out["data"].append(data)
-            yield pd.DataFrame(out)
+                    out.append(raster_row(otile, window, nodata))
+            yield pd.DataFrame(out, columns=RASTER_COLUMNS)
 
     return process_tiles.mapInPandas(gen, schema=RASTER_SCHEMA)

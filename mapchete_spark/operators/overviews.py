@@ -30,14 +30,15 @@ from pyspark.sql import functions as F
 
 from mapchete_spark.operators.checkpoint import PASS_ALL, KeyFilter
 from mapchete_spark.operators.rastertable import (
+    RASTER_COLUMNS,
     RASTER_SCHEMA,
-    decode_array,
-    encode_array,
+    decode_rows,
+    raster_row,
 )
 from mapchete_spark.raster.array import resample_from_array
 from mapchete_spark.raster.mosaic import create_mosaic
 from mapchete_spark.tilegrid.pyramid import Tile, TilePyramid
-from mapchete_spark.tilegrid.keys import linear_tile_key, split_linear_tile_key
+from mapchete_spark.tilegrid.keys import split_linear_tile_key
 from mapchete_spark.functions.geo import parent_tile_key_col
 
 
@@ -57,13 +58,7 @@ def reduce_children(
         resampling=resampling,
         nodata=nodata,
     )
-    data, dtype, bands, h, w = encode_array(out, nodata)
-    return {
-        "zoom": parent.zoom, "tile_row": parent.row, "tile_col": parent.col,
-        "tile_key": linear_tile_key(parent.zoom, parent.row, parent.col),
-        "bands": bands, "height": h, "width": w, "dtype": dtype,
-        "nodata": nodata, "data": data,
-    }
+    return raster_row(parent, out, nodata)
 
 
 def overview_reduce_once(
@@ -88,22 +83,12 @@ def overview_reduce_once(
     def reduce_group(key: Tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         p = TilePyramid(**pyr_dict)
         z, prow, pcol = split_linear_tile_key(int(key[0]))
-        children = [
-            (
-                Tile(p, int(cz), int(crow), int(ccol)),
-                decode_array(rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)),
-            )
-            for cz, crow, ccol, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-                pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-                pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
-            )
-        ]
+        decoded = list(decode_rows(pdf, p))
         row = reduce_children(
-            Tile(p, int(z), int(prow), int(pcol)), children,
-            float(pdf.iloc[0]["nodata"]), resampling,
+            Tile(p, int(z), int(prow), int(pcol)),
+            [(tile, arr) for tile, _, arr, _ in decoded], decoded[0][3], resampling,
         )
-        return pd.DataFrame({k: [v] for k, v in row.items()})
+        return pd.DataFrame([row], columns=RASTER_COLUMNS)
 
     return with_parent.groupBy("parent_key").applyInPandas(
         reduce_group, schema=RASTER_SCHEMA
@@ -139,20 +124,8 @@ def overview_upsample(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = TilePyramid(**pyr_dict)
         for pdf in batches:
-            out = {k: [] for k in (
-                "zoom", "tile_row", "tile_col", "tile_key", "bands",
-                "height", "width", "dtype", "nodata", "data",
-            )}
-            for pz, prow, pcol, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-                pdf["zoom"].values, pdf["tile_row"].values, pdf["tile_col"].values,
-                pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-                pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
-            ):
-                parent = Tile(p, int(pz), int(prow), int(pcol))
-                arr = decode_array(
-                    rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
-                )
-                nodata = float(rnodata)
+            out = []
+            for parent, _, arr, nodata in decode_rows(pdf, p):
                 for child in parent.get_children():
                     sub = resample_from_array(
                         arr,
@@ -162,19 +135,7 @@ def overview_upsample(
                         resampling=resampling,
                         nodata=nodata,
                     )
-                    data, dtype, bands, h, w = encode_array(sub, nodata)
-                    out["zoom"].append(child.zoom)
-                    out["tile_row"].append(child.row)
-                    out["tile_col"].append(child.col)
-                    out["tile_key"].append(
-                        linear_tile_key(child.zoom, child.row, child.col)
-                    )
-                    out["bands"].append(bands)
-                    out["height"].append(h)
-                    out["width"].append(w)
-                    out["dtype"].append(dtype)
-                    out["nodata"].append(nodata)
-                    out["data"].append(data)
-            yield pd.DataFrame(out)
+                    out.append(raster_row(child, sub, nodata))
+            yield pd.DataFrame(out, columns=RASTER_COLUMNS)
 
     return parents.mapInPandas(gen, schema=RASTER_SCHEMA)

@@ -15,7 +15,10 @@ mapInPandas per stage: over windows read at the source, or over a tile
 raster table (assembled by the halo exchange when buffered);
 ``run_raster_process`` / ``run_vector_process`` are that table
 operator. Whole Arrow batches stay in one Python call; per-tile numpy
-does the math.  No per-row Python at the DataFrame level.
+does the math.  No per-row Python at the DataFrame level. Rows are read
+and built through the raster row codec (operators/rastertable.py
+``decode_rows`` / ``raster_row``), also by ``run_multi_raster_process``,
+which decodes each named input of a joined row with it.
 
 Built-in processes (P1-P4): convert, hillshade, contours, clip.
 """
@@ -35,14 +38,16 @@ from pyspark.sql import functions as F
 from mapchete_spark.geometry.core import Polygon
 from mapchete_spark.geometry.wkb import to_wkb
 from mapchete_spark.operators.rastertable import (
+    ID_COLUMNS,
+    PAYLOAD_COLUMNS,
+    RASTER_COLUMNS,
     RASTER_SCHEMA,
-    decode_array,
-    encode_array,
-    mask_nodata,
-    schema_columns,
+    decode_rows,
+    raster_row,
 )
 from mapchete_spark.raster.array import clip_array_with_vector
 from mapchete_spark.raster.terrain import generate_contours, hillshade
+from mapchete_spark.tilegrid.keys import linear_tile_key
 from mapchete_spark.tilegrid.pyramid import Tile, TilePyramid
 
 
@@ -89,7 +94,6 @@ def _crop_to_tile(tile: Tile, arr: np.ndarray) -> np.ndarray:
 
 def raster_tile_row(
     tile: Tile,
-    tile_key: int,
     arr: np.ma.MaskedArray,
     nodata: float,
     process: RasterProcess,
@@ -119,18 +123,12 @@ def raster_tile_row(
     result = result if result.ndim == 3 else result[np.newaxis]
     if arr.shape[-2:] != tile.shape(pixelbuffer=0):
         result = _crop_to_tile(tile, result)
-    data, dtype, bands, h, w = encode_array(result, nd)
-    return {
-        "zoom": tile.zoom, "tile_row": tile.row, "tile_col": tile.col,
-        "tile_key": tile_key, "bands": bands, "height": h, "width": w,
-        "dtype": dtype, "nodata": nd, "data": data,
-    }
+    return raster_row(tile, result, nd)
 
 
 def canvas_rows(
     tile: Tile,
-    tile_key: int,
-    canvas: np.ndarray,
+    arr: np.ma.MaskedArray,
     nodata: float,
     process: Callable,
     params: dict,
@@ -139,16 +137,15 @@ def canvas_rows(
     vector: bool = False,
 ) -> List[dict]:
     """The one per-tile body of every single-input process operator: run
-    ``process`` on ``canvas``, the tile's (bands, h, w) window per
-    Tile.shape(pixelbuffer) with nodata where no source pixel is, and
-    return its output rows. A raster process gives one row (see
+    ``process`` on ``arr``, the tile's masked (bands, h, w) window per
+    Tile.shape(pixelbuffer), masked where no source pixel is, and return
+    its output rows. A raster process gives one row (see
     raster_tile_row); a ``vector`` process one row per feature, with WKB
     geometry and JSON properties. No rows when the process skips the
     tile."""
-    arr = mask_nodata(canvas, nodata)
     if not vector:
         row = raster_tile_row(
-            tile, tile_key, arr, nodata, process, params, out_dtype, out_nodata
+            tile, arr, nodata, process, params, out_dtype, out_nodata
         )
         return [row] if row else []
     ctx = TileContext(tile=tile, array=arr, nodata=nodata, params=params)
@@ -156,6 +153,7 @@ def canvas_rows(
         feats = process(ctx)
     except Empty:
         return []
+    tile_key = linear_tile_key(tile.zoom, tile.row, tile.col)
     return [
         {
             "zoom": tile.zoom, "tile_row": tile.row, "tile_col": tile.col,
@@ -307,10 +305,6 @@ def process_clip(ctx: TileContext) -> np.ma.MaskedArray:
     return out
 
 
-_TILE_ID_COLS = ["zoom", "tile_row", "tile_col", "tile_key"]
-_PAYLOAD_COLS = ["bands", "height", "width", "dtype", "nodata", "data"]
-
-
 def run_multi_raster_process(
     named_tiles: "dict[str, DataFrame]",
     pyramid: TilePyramid,
@@ -348,58 +342,37 @@ def run_multi_raster_process(
     # access
     renamed = []
     for i, (name, df) in enumerate(named_tiles.items()):
-        sel = [F.col(c) for c in _TILE_ID_COLS] + [
-            F.col(c).alias(f"in{i}__{c}") for c in _PAYLOAD_COLS
+        sel = [F.col(c) for c in ID_COLUMNS] + [
+            F.col(c).alias(f"in{i}__{c}") for c in PAYLOAD_COLUMNS
         ]
         renamed.append(df.select(*sel))
     joined = functools.reduce(
-        lambda a, b: a.join(b, on=_TILE_ID_COLS, how="full_outer"), renamed
+        lambda a, b: a.join(b, on=list(ID_COLUMNS), how="full_outer"), renamed
     )
     pyr_dict = pyramid.to_dict()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = TilePyramid(**pyr_dict)
         for pdf in batches:
-            out = {k: [] for k in schema_columns(RASTER_SCHEMA)}
-            cols = {c: pdf[c].values for c in pdf.columns}
-            for ridx in range(len(pdf)):
-                row = {c: cols[c][ridx] for c in cols}
-                tile = Tile(p, int(row["zoom"]), int(row["tile_row"]), int(row["tile_col"]))
-                inputs = {}
-                primary = None
-                primary_nodata = None
-                for i, name in enumerate(names):
-                    data = row[f"in{i}__data"]
-                    if data is None:
-                        inputs[name] = None
-                        continue
-                    arr = decode_array(
-                        data,
-                        row[f"in{i}__dtype"],
-                        int(row[f"in{i}__bands"]),
-                        int(row[f"in{i}__height"]),
-                        int(row[f"in{i}__width"]),
-                        float(row[f"in{i}__nodata"]),
-                    )
-                    inputs[name] = arr
-                    if primary is None:
-                        primary = arr
-                        primary_nodata = float(row[f"in{i}__nodata"])
-                if primary is None:
+            out = []
+            for decoded in zip(*(decode_rows(pdf, p, f"in{i}__") for i in range(len(names)))):
+                inputs = {name: arr for name, (_, _, arr, _) in zip(names, decoded)}
+                present = [(arr, nodata) for _, _, arr, nodata in decoded if arr is not None]
+                if not present:
                     continue
+                primary, primary_nodata = present[0]
                 group_params = {
                     g: [(short, inputs.get(flat)) for short, flat in members]
                     for g, members in groups.items()
                 }
                 res = raster_tile_row(
-                    tile, int(row["tile_key"]), primary, primary_nodata, process,
+                    decoded[0][0], primary, primary_nodata, process,
                     {**params, **inputs, **group_params}, out_dtype, out_nodata,
                     inputs=inputs,
                 )
                 if res:
-                    for k, v in res.items():
-                        out[k].append(v)
-            yield pd.DataFrame(out)
+                    out.append(res)
+            yield pd.DataFrame(out, columns=RASTER_COLUMNS)
 
     return joined.mapInPandas(gen, schema=RASTER_SCHEMA)
 

@@ -6,8 +6,11 @@ Schema (SURVEY.md §1.1 'Raster payload'):
   data binary  -- nodata-filled C-order (bands, h, w) buffer
 
 The mask is implicit (data == nodata), which keeps rows compact and
-lets Spark shuffle plain binary. Encode/decode are numpy-only and run
-inside Arrow-batched UDFs.
+lets Spark shuffle plain binary. This module is the one codec of that
+row: ``raster_row`` builds a row from (Tile, array, nodata) and
+``decode_rows`` walks an Arrow batch of rows back into them, both over
+the byte codec ``encode_array`` / ``decode_array``; they are numpy-only
+and run inside Arrow-batched UDFs.
 
 ``materialize_dem`` builds a distributed tile table from the analytic
 DEM (FIXTURES.md F2) — the stand-in for the reference's raster_file
@@ -39,6 +42,13 @@ RASTER_SCHEMA = (
 def schema_columns(schema: str) -> list:
     """Column names of a DDL schema string such as RASTER_SCHEMA."""
     return [c.split()[0] for c in schema.split(",")]
+
+
+RASTER_COLUMNS = schema_columns(RASTER_SCHEMA)
+#: the columns that name a tile
+ID_COLUMNS = ("zoom", "tile_row", "tile_col", "tile_key")
+#: the payload columns, in decode_array's argument order
+PAYLOAD_COLUMNS = ("data", "dtype", "bands", "height", "width", "nodata")
 
 
 def filled_array(arr: np.ndarray, nodata: float) -> np.ndarray:
@@ -75,20 +85,49 @@ def decode_array(
     data: bytes, dtype: str, bands: int, height: int, width: int, nodata: float
 ) -> np.ma.MaskedArray:
     return mask_nodata(
-        np.frombuffer(data, dtype=dtype).reshape(bands, height, width), nodata
+        np.frombuffer(data, dtype=dtype).reshape(int(bands), int(height), int(width)),
+        float(nodata),
     )
+
+
+def raster_row(tile: Tile, arr: np.ndarray, nodata: float) -> dict:
+    """The RASTER_SCHEMA row (column -> value) of ``tile`` holding
+    ``arr``, a (bands, h, w) or (h, w) array, masked or nodata-filled."""
+    data, dtype, bands, height, width = encode_array(arr, nodata)
+    return {
+        "zoom": tile.zoom, "tile_row": tile.row, "tile_col": tile.col,
+        "tile_key": linear_tile_key(tile.zoom, tile.row, tile.col),
+        "bands": bands, "height": height, "width": width, "dtype": dtype,
+        "nodata": float(nodata), "data": data,
+    }
+
+
+def _decode_payload(data, dtype, bands, height, width, nodata):
+    return None if data is None else decode_array(data, dtype, bands, height, width, nodata)
+
+
+def decode_rows(
+    pdf: pd.DataFrame, pyramid: TilePyramid, prefix: str = ""
+) -> Iterator[Tuple[Tile, int, Optional[np.ma.MaskedArray], float]]:
+    """(Tile, tile_key, masked array, nodata) per row of an Arrow batch
+    of RASTER_SCHEMA rows, walking its columns. ``prefix`` reads the
+    payload from the columns ``prefix + name`` (the tile id columns keep
+    their names); a row whose payload is null (the missing side of an
+    outer join) gives array None."""
+    for z, r, c, key, *payload in zip(
+        *(pdf[col].values for col in ID_COLUMNS),
+        *(pdf[prefix + col].values for col in PAYLOAD_COLUMNS),
+    ):
+        yield (
+            Tile(pyramid, int(z), int(r), int(c)), int(key),
+            _decode_payload(*payload), float(payload[-1]),
+        )
 
 
 def row_to_array(row) -> np.ma.MaskedArray:
-    """Decode from a pandas row / namedtuple with the raster columns."""
-    return decode_array(
-        row["data"], row["dtype"], int(row["bands"]), int(row["height"]),
-        int(row["width"]), float(row["nodata"]),
-    )
-
-
-def tile_of_row(pyramid: TilePyramid, row) -> Tile:
-    return Tile(pyramid, int(row["zoom"]), int(row["tile_row"]), int(row["tile_col"]))
+    """Decode one row (a mapping: pandas row, Spark Row, dict) with the
+    raster columns."""
+    return _decode_payload(*(row[col] for col in PAYLOAD_COLUMNS))
 
 
 def merge_tile_ranges(ranges) -> list:
@@ -238,25 +277,17 @@ def materialize_dem(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = TilePyramid(**pyr_dict)
         for pdf in batches:
-            out = {k: [] for k in (
-                "zoom", "tile_row", "tile_col", "tile_key", "bands",
-                "height", "width", "dtype", "nodata", "data",
-            )}
-            for z, r, c in zip(pdf["zoom"], pdf["tile_row"], pdf["tile_col"]):
-                t = Tile(p, int(z), int(r), int(c))
-                arr = dem_tile(t, pixelbuffer=pixelbuffer, hole=hole)
-                data, dtype, bands, h, w = encode_array(arr, DEM_NODATA)
-                out["zoom"].append(int(z))
-                out["tile_row"].append(int(r))
-                out["tile_col"].append(int(c))
-                out["tile_key"].append(linear_tile_key(int(z), int(r), int(c)))
-                out["bands"].append(bands)
-                out["height"].append(h)
-                out["width"].append(w)
-                out["dtype"].append(dtype)
-                out["nodata"].append(DEM_NODATA)
-                out["data"].append(data)
-            yield pd.DataFrame(out)
+            tiles = (
+                Tile(p, int(z), int(r), int(c))
+                for z, r, c in zip(pdf["zoom"], pdf["tile_row"], pdf["tile_col"])
+            )
+            yield pd.DataFrame(
+                [
+                    raster_row(t, dem_tile(t, pixelbuffer=pixelbuffer, hole=hole), DEM_NODATA)
+                    for t in tiles
+                ],
+                columns=RASTER_COLUMNS,
+            )
 
     return ids.repartition(max(spark.sparkContext.defaultParallelism, 8)).mapInPandas(
         gen, schema=RASTER_SCHEMA

@@ -24,9 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapchete_spark.operators.rastertable import (
+    RASTER_COLUMNS,
     RASTER_SCHEMA,
-    decode_array,
-    encode_array,
+    decode_rows,
+    raster_row,
 )
 from mapchete_spark.raster.mosaic import create_mosaic
 from mapchete_spark.tilegrid.pyramid import Tile, TilePyramid
@@ -125,19 +126,11 @@ def read_tiledir(
         target_key = int(key[0])
         z, row, col = split_linear_tile_key(target_key)
         t = Tile(dst, int(z), int(row), int(col))
-        tiles_arrays = []
-        for sz_, srow, scol, rdata, rdtype, rbands, rh, rw, rnodata in zip(
-            pdf["src_zoom"].values, pdf["src_row"].values, pdf["src_col"].values,
-            pdf["data"].values, pdf["dtype"].values, pdf["bands"].values,
-            pdf["height"].values, pdf["width"].values, pdf["nodata"].values,
-        ):
-            s = Tile(src, int(sz_), int(srow), int(scol))
-            arr = decode_array(
-                rdata, rdtype, int(rbands), int(rh), int(rw), float(rnodata)
-            )
-            tiles_arrays.append((s, arr))
-        nodata = float(pdf.iloc[0]["nodata"])
-        mosaic, mbounds = create_mosaic(tiles_arrays, nodata=nodata)
+        decoded = list(decode_rows(pdf, src))
+        nodata = decoded[0][3]
+        mosaic, mbounds = create_mosaic(
+            [(s, arr) for s, _, arr, _ in decoded], nodata=nodata
+        )
 
         # sample target pixel centers through the CRS transform
         th, tw = t.shape(pixelbuffer=0)
@@ -156,21 +149,10 @@ def read_tiledir(
         ci = np.clip(((sx - mbounds.left) / mpx).astype(int), 0, sh[1] - 1)
         ri = np.clip(((mbounds.top - sy) / mpy).astype(int), 0, sh[0] - 1)
         out = mosaic[:, ri, ci].reshape(mosaic.shape[0], th, tw)
-        if isinstance(out, np.ma.MaskedArray) and out.mask.all():
-            return pd.DataFrame(
-                {k: [] for k in (
-                    "zoom", "tile_row", "tile_col", "tile_key", "bands",
-                    "height", "width", "dtype", "nodata", "data",
-                )}
-            )
-        data, dtype, bands, h, w = encode_array(out, nodata)
-        return pd.DataFrame(
-            {
-                "zoom": [int(z)], "tile_row": [int(row)], "tile_col": [int(col)],
-                "tile_key": [target_key], "bands": [bands], "height": [h],
-                "width": [w], "dtype": [dtype], "nodata": [nodata], "data": [data],
-            }
-        )
+        rows = []
+        if not (isinstance(out, np.ma.MaskedArray) and out.mask.all()):
+            rows.append(raster_row(t, out, nodata))
+        return pd.DataFrame(rows, columns=RASTER_COLUMNS)
 
     rounds = max_fallback_rounds if fallback_to_higher_zoom else 1
     remaining = targets
@@ -182,12 +164,9 @@ def read_tiledir(
             remaining, dst_pyramid, src_pyramid,
             matching_method=matching_method, zoom_offset=offset,
         )
-        joined = pairs.join(
-            src_table.withColumnRenamed("tile_key", "src_key")
-            .withColumnRenamed("zoom", "src_zoom_data")
-            .withColumnRenamed("tile_row", "src_row_data")
-            .withColumnRenamed("tile_col", "src_col_data"),
-            on="src_key",
+        # each pair with the source tile's row
+        joined = pairs.select("target_key", F.col("src_key").alias("tile_key")).join(
+            src_table, on="tile_key"
         )
         warped = joined.groupBy("target_key").applyInPandas(
             warp_group, schema=RASTER_SCHEMA

@@ -8,7 +8,8 @@ driver; then per process zoom (descending):
 for DEM inputs (operators/halo.py run_windowed_process: one Python
 stage over 2x2 blocks, no shuffle), and for tile-table inputs
     input tiles -> halo exchange (pixelbuffer) -> process UDF -> write
-(run_buffered_process: one strip shuffle, one Python stage after it).
+(run_buffered_process: one strip shuffle, one Python stage after it;
+the input tiles are those of the job's bounds, as for a DEM input).
 Raster and vector processes take the same path, with one per-tile body
 (operators/process.py canvas_rows); only an output split is
 raster-only. A raster DEM process zoom right above a lower overview
@@ -51,6 +52,7 @@ from pyspark.sql import functions as F
 from mapchete_spark.functions.geo import zorder_key_col
 from mapchete_spark.operators.checkpoint import (
     NO_KEYS,
+    PASS_ALL,
     JobStore,
     KeyFilter,
     plan_keys,
@@ -68,6 +70,7 @@ from mapchete_spark.operators.process import (
 from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
     aoi_tile_keys,
+    aoi_tile_ranges,
     filter_tiles_to_area,
     materialize_dem,
 )
@@ -162,7 +165,7 @@ def _is_multi_input(inp) -> bool:
     )
 
 
-def _input_tiles_multi(spark, cfg: JobConfig, zoom: int):
+def _input_tiles_multi(spark, cfg: JobConfig, zoom: int, cut=None):
     """(flat name -> tile table, group map) for a named-input config.
     One level of nesting = a group: its members flatten to
     ``group.member`` and the group name later injects as a list of
@@ -179,17 +182,9 @@ def _input_tiles_multi(spark, cfg: JobConfig, zoom: int):
                 flat[fname] = sub
                 groups[name].append((short, fname))
     tables = {
-        n: _materialize_input(spark, cfg, zoom, spec) for n, spec in flat.items()
+        n: _materialize_input(spark, cfg, zoom, spec, cut) for n, spec in flat.items()
     }
     return tables, groups
-
-
-def _input_tiles(spark, cfg: JobConfig, zoom: int) -> DataFrame:
-    """Materialize the input tile table for one zoom: a parquet path
-    reads an existing tile table (S3/S4 analog: another job's output).
-    The process stages read a DEM input's windows in the task instead
-    (``_dem_process``)."""
-    return _materialize_input(spark, cfg, zoom, cfg.input_at_zoom(zoom))
 
 
 def _is_dem(inp) -> bool:
@@ -200,26 +195,50 @@ def _dem_hole(inp) -> bool:
     return bool(inp.get("hole", True)) if isinstance(inp, dict) else True
 
 
-def _tile_process(
+def _zoom_rows(
     spark, cfg: JobConfig, zoom: int, kind: str, fn, pb: int, params,
-    target_filter, tiles: Optional[DataFrame] = None,
-    parents: Optional[KeyFilter] = None,
+    todo: KeyFilter, parents: Optional[KeyFilter] = None, cut=None,
 ) -> DataFrame:
-    """A single-input process at ``zoom``: raster rows, or feature rows
-    for a vector ``kind``. Over a DEM input, every tile of the AOI with
+    """The rows of the process at ``zoom`` whose keys pass ``todo``,
+    before any output split: raster rows, or feature rows for a vector
+    or features ``kind``. Over a DEM input, every tile of the AOI with
     its buffered window read inside the process task (no tile table, no
     shuffle), plus the ``parents`` at ``zoom - 1`` that pass that filter
-    reduced from their children in the same task; over a tile table
-    (``tiles``, by default the configured input), the halo exchange when
-    ``pb`` asks for a buffer."""
+    reduced from their children in the same task; over a tile table, the
+    halo exchange when ``pb`` asks for a buffer; over named inputs, their
+    tables joined on the tile id. ``cut`` (a row/col predicate) narrows
+    the tile tables read."""
+    if kind == "features":
+        from mapchete_spark.operators.process import run_feature_process
+        from mapchete_spark.operators.vector import (
+            clip_features_to_tiles,
+            explode_features_to_tiles,
+        )
+
+        feats = _input_features(spark, cfg, zoom)
+        clipped = clip_features_to_tiles(
+            explode_features_to_tiles(feats, zoom, pyramid=cfg.pyramid), cfg.pyramid
+        )
+        return run_feature_process(todo.apply(clipped), cfg.pyramid, fn, params=params)
     common = dict(
         params=params,
         out_dtype=cfg.output.get("dtype"),
         out_nodata=cfg.output.get("nodata"),
-        target_filter=target_filter,
-        vector=kind != "raster",
     )
     inp = cfg.input_at_zoom(zoom)
+    if _is_multi_input(inp):
+        if kind != "raster":
+            raise ValueError(
+                "named multi-inputs are implemented for raster processes only"
+            )
+        if pb > 0:
+            raise ValueError("named multi-inputs do not support a pixelbuffer")
+        tables, groups = _input_tiles_multi(spark, cfg, zoom, cut)
+        return run_multi_raster_process(
+            {n: todo.apply(t) for n, t in tables.items()}, cfg.pyramid, fn,
+            groups=groups, **common,
+        )
+    common.update(target_filter=todo, vector=kind != "raster")
     if _is_dem(inp):
         return run_windowed_process(
             spark, cfg.pyramid, zoom, functools.partial(dem_tile, hole=_dem_hole(inp)),
@@ -227,9 +246,9 @@ def _tile_process(
             resampling=cfg.baselevels.lower if parents is not None else "nearest",
             **common,
         )
-    if tiles is None:
-        tiles = _input_tiles(spark, cfg, zoom)
-    return run_buffered_process(tiles, cfg.pyramid, pb, fn, **common)
+    return run_buffered_process(
+        _materialize_input(spark, cfg, zoom, inp, cut), cfg.pyramid, pb, fn, **common
+    )
 
 
 def _by_zoom(keys: np.ndarray) -> Dict[int, np.ndarray]:
@@ -256,7 +275,26 @@ def _child_keys(keys: np.ndarray, pyramid) -> np.ndarray:
     return np.unique(linear_tile_key(zc, rows[ok], cols[ok]))
 
 
-def _materialize_input(spark, cfg: JobConfig, zoom: int, inp) -> DataFrame:
+def _in_ranges(ranges):
+    """Predicate of the tiles in (r0, r1, c0, c1) ranges, on the row and
+    column columns, so a parquet scan can push it down."""
+    return functools.reduce(
+        lambda a, b: a | b,
+        (
+            F.col("tile_row").between(r0, r1) & F.col("tile_col").between(c0, c1)
+            for r0, r1, c0, c1 in ranges
+        ),
+        F.lit(False),
+    )
+
+
+def _materialize_input(spark, cfg: JobConfig, zoom: int, inp, cut=None) -> DataFrame:
+    """The input tile table of ``inp`` at ``zoom``: a parquet path reads
+    an existing tile table (S3/S4 analog: another job's output), cut to
+    the tiles of the AOI, the same input set for every input kind.
+    ``cut`` (a row/col predicate) narrows a table read further. The
+    process stages read a DEM input's windows in the task instead
+    (``_zoom_rows``)."""
     if _is_dem(inp):
         # area filter applied on the ID table inside materialize_dem —
         # excluded tiles never compute a payload
@@ -270,9 +308,17 @@ def _materialize_input(spark, cfg: JobConfig, zoom: int, inp) -> DataFrame:
         df = _read_path_input(spark, cfg, zoom, inp, {})
     else:
         raise ValueError(f"unsupported input spec: {inp!r}")
+    keep = _in_ranges(aoi_tile_ranges(cfg.pyramid, zoom, cfg.bounds))
+    df = df.where(keep if cut is None else keep & cut)
     if cfg.area is not None:
         df = filter_tiles_to_area(df, cfg.pyramid, cfg.area)
     return df
+
+
+def _read_tiles(spark, path: str, zoom: int) -> DataFrame:
+    """The tiles at ``zoom`` of the tile table at ``path``, read with the
+    raster schema (no schema-inference job per read)."""
+    return spark.read.schema(RASTER_SCHEMA).parquet(path).where(F.col("zoom") == zoom)
 
 
 def _read_path_input(spark, cfg: JobConfig, zoom: int, path: str, spec: dict):
@@ -292,8 +338,7 @@ def _read_path_input(spark, cfg: JobConfig, zoom: int, path: str, spec: dict):
             cfg.pyramid,
             resampling=spec.get("resampling", "nearest"),
         )
-    # the known schema: no schema-inference job per read
-    return spark.read.schema(RASTER_SCHEMA).parquet(path).where(F.col("zoom") == zoom)
+    return _read_tiles(spark, path, zoom)
 
 
 _VECTOR_FILE_EXTS = (".geojson", ".json", ".gpkg", ".fgb", ".shp")
@@ -388,6 +433,14 @@ def _resolve_vector_file_params(
     return out
 
 
+def _zoom_params(spark, cfg: JobConfig, zoom: int, prep: dict, cache: Dict[str, list]) -> dict:
+    """The process parameters at ``zoom``: the configured ones, with
+    vector files loaded as geometries and the preprocessing results
+    under ``preprocessing``."""
+    params = _resolve_vector_file_params(spark, cfg, cfg.params_at_zoom(zoom) or {}, cache)
+    return {**params, "preprocessing": prep} if prep else params
+
+
 def execute_tile(
     spark: SparkSession, cfg: JobConfig, zoom: int, row: int, col: int
 ) -> DataFrame:
@@ -395,46 +448,21 @@ def execute_tile(
     return its output rows — no writes, no checkpoint, no state. The
     reference's ``Mapchete.open(conf).execute_tile(tile)``
     (mapchete/processing/base.py:403-430), the primary single-tile
-    correctness harness of its test suite. Spark rendering: the same
-    pipeline with a keep filter on the target key; a tile-table input is
-    first cut to the target (plus its 3x3 neighborhood, wrapped across
-    the antimeridian on global grids, when a pixelbuffer needs the
-    halo)."""
+    correctness harness of its test suite: the process tile, with no
+    output split. Spark rendering: ``execute``'s per-zoom body with a
+    keep filter on the target key; tile-table inputs are first cut to
+    the target (plus its 3x3 neighborhood, wrapped across the
+    antimeridian on global grids, when a pixelbuffer needs the halo)."""
     kind, fn, min_pb = resolve_process(cfg)
     pb = max(cfg.pyramid.pixelbuffer, min_pb)
-    params = dict(cfg.params_at_zoom(zoom) or {})
-    params = _resolve_vector_file_params(spark, cfg, params, {})
-    prep = run_preprocessing_tasks(spark, cfg)
-    if prep:
-        params = {**params, "preprocessing": prep}
-    if kind == "features":
-        from mapchete_spark.operators.process import run_feature_process
-        from mapchete_spark.operators.vector import (
-            clip_features_to_tiles,
-            explode_features_to_tiles,
-        )
-
-        feats = _input_features(spark, cfg, zoom)
-        clipped = clip_features_to_tiles(
-            explode_features_to_tiles(feats, zoom, pyramid=cfg.pyramid),
-            cfg.pyramid,
-        ).where((F.col("tile_row") == row) & (F.col("tile_col") == col))
-        return run_feature_process(clipped, cfg.pyramid, fn, params=params)
+    params = _zoom_params(spark, cfg, zoom, run_preprocessing_tasks(spark, cfg), {})
     keep = KeyFilter(np.array([linear_tile_key(zoom, row, col)]), keep=True)
-    tiles = None
-    if not _is_dem(cfg.input_at_zoom(zoom)):
-        # the 3x3 neighborhood, wrapped across the antimeridian on
-        # global grids
-        mw = cfg.pyramid.matrix_width(zoom)
-        cols = {col + dc for dc in ((-1, 0, 1) if pb else (0,))}
-        cols = {c % mw for c in cols} if cfg.pyramid.is_global else {c for c in cols if 0 <= c < mw}
-        tiles = _input_tiles(spark, cfg, zoom).where(
-            (F.col("zoom") == zoom)
-            & F.col("tile_row").between(row - (1 if pb else 0),
-                                        row + (1 if pb else 0))
-            & F.col("tile_col").isin(sorted(cols))
-        )
-    return _tile_process(spark, cfg, zoom, kind, fn, pb, params, keep, tiles)
+    d = 1 if pb else 0
+    mw = cfg.pyramid.matrix_width(zoom)
+    cols = {col + dc for dc in range(-d, d + 1)}
+    cols = {c % mw for c in cols} if cfg.pyramid.is_global else {c for c in cols if 0 <= c < mw}
+    cut = _in_ranges((row - d, row + d, c, c) for c in sorted(cols))
+    return _zoom_rows(spark, cfg, zoom, kind, fn, pb, params, keep, cut=cut)
 
 
 def run_preprocessing_tasks(spark: SparkSession, cfg: JobConfig) -> Dict[str, object]:
@@ -633,81 +661,33 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
     lower = (
         cfg.overview_zooms_lower() if cfg.baselevels and kind == "raster" else []
     )
+    # an output split (raster only) keys its rows by output tile, so
+    # there the todo filter guards the write only
+    split = kind == "raster" and out_meta < cfg.pyramid.metatiling
+    if split:
+        from mapchete_spark.operators.outputsplit import split_to_output_tiles
+        from mapchete_spark.tilegrid.pyramid import TilePyramid
+
+        out_pyr = TilePyramid(
+            grid=cfg.pyramid.grid, metatiling=out_meta, tile_size=cfg.pyramid.tile_size,
+        )
     _vector_param_cache: Dict[str, list] = {}
     for zoom in cfg.process_zooms():
-        params = cfg.params_at_zoom(zoom)
-        if prep:
-            params = {**params, "preprocessing": prep}
-        params = _resolve_vector_file_params(
-            spark, cfg, params, _vector_param_cache
-        )
-        inp_spec = cfg.input_at_zoom(zoom)
+        params = _zoom_params(spark, cfg, zoom, prep, _vector_param_cache)
         # the output keys are tile-grid arithmetic for DEM inputs; other
         # inputs define their own tiles, and an output split re-keys them
-        plannable = _is_dem(inp_spec) and out_meta == cfg.pyramid.metatiling
+        plannable = _is_dem(cfg.input_at_zoom(zoom)) and out_meta == cfg.pyramid.metatiling
 
-        def build(todo, parents=None, zoom=zoom, params=params, inp_spec=inp_spec):
-            if kind == "features":
-                from mapchete_spark.operators.process import (
-                    run_feature_process,
-                )
-                from mapchete_spark.operators.vector import (
-                    clip_features_to_tiles,
-                    explode_features_to_tiles,
-                )
-
-                feats = _input_features(spark, cfg, zoom)
-                clipped = clip_features_to_tiles(
-                    explode_features_to_tiles(
-                        feats, zoom, pyramid=cfg.pyramid
-                    ),
-                    cfg.pyramid,
-                )
-                return run_feature_process(
-                    todo.apply(clipped), cfg.pyramid, fn, params=params
-                )
-            if _is_multi_input(inp_spec):
-                if kind != "raster":
-                    raise ValueError(
-                        "named multi-inputs are implemented for raster "
-                        "processes only"
-                    )
-                if pb > 0:
-                    raise ValueError(
-                        "named multi-inputs do not support a pixelbuffer"
-                    )
-                tables, groups = _input_tiles_multi(spark, cfg, zoom)
-                return run_multi_raster_process(
-                    {n: todo.apply(t) for n, t in tables.items()},
-                    cfg.pyramid, fn, params=params,
-                    out_dtype=cfg.output.get("dtype"),
-                    out_nodata=cfg.output.get("nodata"),
-                    groups=groups,
-                )
+        def build(todo, parents=None, zoom=zoom, params=params):
             # continue-mode compute skip: done PROCESS TARGETS are dropped
             # before the process UDF (reference skip-existing semantics,
             # processing/base.py:456-504); the tiles they read still feed
-            # unfinished neighbors. An output split (raster only) keys its
-            # rows by output tile, so there the filter guards the write only
-            split = kind == "raster" and out_meta < cfg.pyramid.metatiling
-            out = _tile_process(
-                spark, cfg, zoom, kind, fn, pb, params, None if split else todo,
-                parents=parents,
-            )
+            # unfinished neighbors
             if not split:
-                return out
+                return _zoom_rows(spark, cfg, zoom, kind, fn, pb, params, todo, parents)
             # Z4: split process metatiles into output tiles
-            from mapchete_spark.operators.outputsplit import (
-                split_to_output_tiles,
-            )
-            from mapchete_spark.tilegrid.pyramid import TilePyramid
-
-            out_pyr = TilePyramid(
-                grid=cfg.pyramid.grid,
-                metatiling=out_meta,
-                tile_size=cfg.pyramid.tile_size,
-            )
-            return todo.apply(split_to_output_tiles(out, cfg.pyramid, out_pyr))
+            rows = _zoom_rows(spark, cfg, zoom, kind, fn, pb, params, PASS_ALL)
+            return todo.apply(split_to_output_tiles(rows, cfg.pyramid, out_pyr))
 
         stage(
             f"process_z{zoom}",
@@ -725,22 +705,13 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
 
     # ---- overview zooms ----
     if cfg.baselevels and mode != "readonly" and kind == "raster":
-
-        def level(zoom: int) -> DataFrame:
-            # the known schema: no schema-inference job per read
-            return (
-                spark.read.schema(RASTER_SCHEMA)
-                .parquet(tiles_path)
-                .where(F.col("zoom") == zoom)
-            )
-
         # lower: reduce from the stored level above the parents the
         # process stage did not reduce in its task; compute skip drops
         # children whose PARENT is done before the reduce shuffle
         def reduce(todo, zoom):
             return overview_reduce_once(
-                level(zoom + 1), cfg.pyramid, resampling=cfg.baselevels.lower,
-                parents=todo,
+                _read_tiles(spark, tiles_path, zoom + 1), cfg.pyramid,
+                resampling=cfg.baselevels.lower, parents=todo,
             )
 
         for zoom in lower:
@@ -754,7 +725,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         # higher: upsample children from the level below; a keep filter
         # also limits the parents read
         def upsample(todo, zoom):
-            src = level(zoom - 1)
+            src = _read_tiles(spark, tiles_path, zoom - 1)
             if todo.keep:
                 src = KeyFilter(_parent_keys(todo.keys), keep=True).apply(src)
             return todo.apply(
@@ -792,11 +763,7 @@ def tile_index(spark: SparkSession, out_path: str, zoom: int) -> DataFrame:
     bounds (a small query over the output table, not a filesystem walk)."""
     from mapchete_spark.plans.config import JobConfig  # noqa: F401
 
-    tiles = (
-        spark.read.schema(RASTER_SCHEMA)
-        .parquet(os.path.join(out_path, "tiles"))
-        .where(F.col("zoom") == zoom)
-    )
+    tiles = _read_tiles(spark, os.path.join(out_path, "tiles"), zoom)
     with open(os.path.join(out_path, "metadata.json")) as f:
         meta = json.load(f)
     from mapchete_spark.tilegrid.pyramid import TilePyramid

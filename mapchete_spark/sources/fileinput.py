@@ -24,6 +24,11 @@ Scale posture, stated honestly:
 - ``vector_table_from_file`` decodes driver-side under the same guard
   and parallelizes features; corpus-scale vectors live as WKB feature
   tables. Both guards raise with the table-based alternative named.
+
+Raster rows are built and read through the row codec
+(operators/rastertable.py ``raster_row`` / ``decode_rows``). A job cuts
+a GeoTIFF input's table to its ``bounds`` (plans/job.py
+``_materialize_input``), as it does a DEM input's.
 """
 
 from __future__ import annotations
@@ -63,12 +68,11 @@ def raster_table_from_file(
     enumerated per covering range (never range-the-matrix), so
     non-intersecting tiles cost nothing at any zoom."""
     from mapchete_spark.operators.rastertable import (
+        RASTER_COLUMNS,
         RASTER_SCHEMA,
-        encode_array,
+        raster_row,
     )
-    from mapchete_spark.raster.array import resample_from_array
     from mapchete_spark.sources.gtiff import decode_gtiff
-    from mapchete_spark.tilegrid.keys import linear_tile_key
     from mapchete_spark.tilegrid.pyramid import Tile
 
     pyr = pyramid or TilePyramid("geodetic")
@@ -151,7 +155,7 @@ def raster_table_from_file(
         sb = Bounds(*sb)
         fwd = get_transform(pyr_crs, warp_src_crs)
         for pdf in batches:
-            out = _empty_raster_out()
+            out = []
             for z, r, c in zip(pdf["zoom"], pdf["tile_row"], pdf["tile_col"]):
                 t = Tile(p, int(z), int(r), int(c))
                 tile_arr = _warped_tile_array(
@@ -159,8 +163,8 @@ def raster_table_from_file(
                 )
                 if tile_arr is None:
                     continue  # tile entirely outside the source
-                _append_raster_row(out, t, tile_arr, nd_)
-            yield pd.DataFrame(out)
+                out.append(raster_row(t, tile_arr, nd_))
+            yield pd.DataFrame(out, columns=RASTER_COLUMNS)
 
     def gen(batches):
         import pandas as pd
@@ -169,40 +173,16 @@ def raster_table_from_file(
         src, sb, nd_ = bc.value
         sb = Bounds(*sb)
         for pdf in batches:
-            out = _empty_raster_out()
+            out = []
             for z, r, c in zip(pdf["zoom"], pdf["tile_row"], pdf["tile_col"]):
                 t = Tile(p, int(z), int(r), int(c))
                 tile_arr = _aligned_tile_array(t, src, sb, nd_, resampling)
-                _append_raster_row(out, t, tile_arr, nd_)
-            yield pd.DataFrame(out)
+                out.append(raster_row(t, tile_arr, nd_))
+            yield pd.DataFrame(out, columns=RASTER_COLUMNS)
 
     par = max(spark.sparkContext.defaultParallelism, 8)
     fn = gen_warped if warp_src_crs is not None else gen
     return ids.repartition(par).mapInPandas(fn, schema=RASTER_SCHEMA)
-
-
-def _empty_raster_out() -> dict:
-    return {k: [] for k in (
-        "zoom", "tile_row", "tile_col", "tile_key", "bands",
-        "height", "width", "dtype", "nodata", "data",
-    )}
-
-
-def _append_raster_row(out: dict, tile, tile_arr, nd: float) -> None:
-    from mapchete_spark.operators.rastertable import encode_array
-    from mapchete_spark.tilegrid.keys import linear_tile_key
-
-    data, dtype, bands, h, w = encode_array(tile_arr, nd)
-    out["zoom"].append(tile.zoom)
-    out["tile_row"].append(tile.row)
-    out["tile_col"].append(tile.col)
-    out["tile_key"].append(linear_tile_key(tile.zoom, tile.row, tile.col))
-    out["bands"].append(bands)
-    out["height"].append(h)
-    out["width"].append(w)
-    out["dtype"].append(dtype)
-    out["nodata"].append(float(nd))
-    out["data"].append(data)
 
 
 def _aligned_tile_array(tile, src, sb: Bounds, nd: float, resampling: str):
@@ -398,9 +378,11 @@ def raster_table_from_files(
     outside the registered families fail their task with a clear
     error (never silently assumed)."""
     from mapchete_spark.operators.rastertable import (
+        RASTER_COLUMNS,
         RASTER_SCHEMA,
-        decode_array,
-        encode_array,
+        decode_rows,
+        raster_row,
+        schema_columns,
     )
 
     pyr = pyramid or TilePyramid("geodetic")
@@ -415,6 +397,7 @@ def raster_table_from_files(
     ).repartition(min(len(paths), spark.sparkContext.defaultParallelism * 2))
 
     contrib_schema = RASTER_SCHEMA + ", file_idx long"
+    contrib_columns = schema_columns(contrib_schema)
 
     def window_files(batches):
         import pandas as pd
@@ -425,8 +408,7 @@ def raster_table_from_files(
 
         p = TilePyramid(**pyr_dict)
         for pdf in batches:
-            out = _empty_raster_out()
-            out["file_idx"] = []
+            out = []
             for fidx, path in zip(pdf["file_idx"], pdf["path"]):
                 with open(path, "rb") as f:
                     buf = f.read()
@@ -483,30 +465,19 @@ def raster_table_from_files(
                                 )
                                 if ta is None:
                                     continue
-                            _append_raster_row(out, t, ta, float(nodata))
-                            out["file_idx"].append(int(fidx))
-            yield pd.DataFrame(out)
+                            out.append(
+                                {**raster_row(t, ta, nodata), "file_idx": int(fidx)}
+                            )
+            yield pd.DataFrame(out, columns=contrib_columns)
 
     contribs = files.mapInPandas(window_files, schema=contrib_schema)
 
     def merge(key, pdf):
         import pandas as pd
 
-        from mapchete_spark.tilegrid.pyramid import Tile
-
-        pdf = pdf.sort_values("file_idx")
-        first = pdf.iloc[0]
-        acc = decode_array(
-            first["data"], first["dtype"], int(first["bands"]),
-            int(first["height"]), int(first["width"]),
-            float(first["nodata"]),
-        )
-        for _, row in pdf.iloc[1:].iterrows():
-            nxt = decode_array(
-                row["data"], row["dtype"], int(row["bands"]),
-                int(row["height"]), int(row["width"]),
-                float(row["nodata"]),
-            )
+        decoded = decode_rows(pdf.sort_values("file_idx"), TilePyramid(**pyr_dict))
+        tile, _, acc, _ = next(decoded)
+        for _, _, nxt, _ in decoded:
             hole = np.ma.getmaskarray(acc) & ~np.ma.getmaskarray(nxt)
             if hole.any():
                 filled = np.where(hole, np.ma.filled(nxt, 0), acc.data)
@@ -515,14 +486,7 @@ def raster_table_from_files(
                     mask=np.ma.getmaskarray(acc) & np.ma.getmaskarray(nxt),
                 )
         acc.set_fill_value(float(nodata))
-        out = _empty_raster_out()
-        p = TilePyramid(**pyr_dict)
-        t = Tile(
-            p, int(first["zoom"]), int(first["tile_row"]),
-            int(first["tile_col"]),
-        )
-        _append_raster_row(out, t, acc, float(nodata))
-        return pd.DataFrame(out)
+        return pd.DataFrame([raster_row(tile, acc, nodata)], columns=RASTER_COLUMNS)
 
     return contribs.groupBy("tile_key").applyInPandas(
         merge, schema=RASTER_SCHEMA

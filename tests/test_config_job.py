@@ -187,11 +187,22 @@ def executed_jobs(spark, tmp_path_factory):
         cfg = from_file("file_groups.mapchete", "fg")
         return cfg, execute(spark, cfg, mode="overwrite")
 
+    def file_groups_split():
+        # the same job on process metatiles of 2, split into output tiles of 1
+        import yaml
+
+        with open(os.path.join(CONFIGS, "file_groups.mapchete")) as f:
+            conf = yaml.safe_load(f)
+        conf["pyramid"]["metatiling"] = 2
+        conf["output"].update(metatiling=1, path=str(base / "fg_split"))
+        cfg = JobConfig.from_dict({**conf, "config_dir": CONFIGS})
+        return cfg, execute(spark, cfg, mode="overwrite")
+
     thunks = dict(
         hillshade=hillshade, continue2=continue2, baselevels=baselevels,
         zoom_dependent=zoom_dependent, tidx=tidx, custom_grid=custom_grid,
         split=split, utm_grid=utm_grid, ts1000=ts1000,
-        file_groups=file_groups,
+        file_groups=file_groups, file_groups_split=file_groups_split,
     )
 
     def run(item):
@@ -404,3 +415,19 @@ class TestFileGroups:
         np.testing.assert_allclose(
             got.astype("float64"), np.squeeze(want), atol=1e-2
         )
+
+    def test_named_inputs_output_split(self, spark, executed_jobs):
+        """Named inputs on process metatiles split into smaller output
+        tiles: the output tiles of the unsplit job, byte for byte."""
+        from pyspark.sql import functions as F
+
+        def stored(key):
+            cfg, _ = _job(executed_jobs, key)
+            out = spark.read.parquet(os.path.join(cfg.output["path"], "tiles"))
+            return sorted(
+                (r["tile_row"], r["tile_col"], r["h"])
+                for r in out.select("tile_row", "tile_col", F.md5("data").alias("h")).collect()
+            )
+
+        want = stored("file_groups")
+        assert len(want) == 4 and stored("file_groups_split") == want

@@ -720,14 +720,60 @@ def _run_execute_tile_matches_full_job(spark, tmp_path):
     )
     assert gotv == wantv and len(gotv) > 0
 
+    # features (feature_clip over a GeoJSON file): the clipped pieces of
+    # a tile that two boxes overlap
+    gj = os.path.join(tmp_path, "boxes.geojson")
+    with open(gj, "w") as f:
+        json.dump({"type": "FeatureCollection", "features": [
+            {"type": "Feature", "properties": {"i": i}, "geometry": {
+                "type": "Polygon",
+                "coordinates": [[[x0, y0], [x0 + 30, y0], [x0 + 30, y0 + 20],
+                                 [x0, y0 + 20], [x0, y0]]]}}
+            for i, (x0, y0) in enumerate([(-10.0, 10.0), (5.0, 15.0)])
+        ]}, f)
+
+    def features():
+        return JobConfig.from_dict(dict(
+            process="feature_clip", zoom_levels=[3], pyramid={"grid": "geodetic"},
+            input={"path": gj}, process_parameters={},
+            output={"path": str(tmp_path / "features"), "format": "parquet_features"},
+        ))
+
+    execute(spark, features(), mode="overwrite")
+    fullf = spark.read.parquet(str(tmp_path / "features" / "tiles"))
+    digest = F.md5(F.concat("geometry", F.encode("properties", "utf-8"))).alias("h")
+    wantf = sorted(
+        x["h"] for x in fullf.where((F.col("tile_row") == 2) & (F.col("tile_col") == 8))
+        .select(digest).collect()
+    )
+    gotf = sorted(x["h"] for x in execute_tile(spark, features(), 3, 2, 8).select(digest).collect())
+    assert gotf == wantf and len(gotf) == 2
+
+    # named and grouped inputs (the reference's file_groups example)
+    def file_groups():
+        cfg = JobConfig.from_file(os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "configs", "file_groups.mapchete",
+        ))
+        cfg.output["path"] = str(tmp_path / "file_groups")
+        return cfg
+
+    execute(spark, file_groups(), mode="overwrite")
+    fullg = spark.read.parquet(str(tmp_path / "file_groups" / "tiles"))
+    wantg = fullg.where((F.col("tile_row") == 3) & (F.col("tile_col") == 9)).select(
+        F.md5("data").alias("h")).collect()
+    gotg = execute_tile(spark, file_groups(), 3, 3, 9).select(F.md5("data").alias("h")).collect()
+    assert [x["h"] for x in gotg] == [x["h"] for x in wantg] and len(wantg) == 1
+
 
 def _run_tile_table_input_with_pixelbuffer(spark, tmp_path):
     """A tile-table input with a pixelbuffer goes through the halo
     exchange end to end: hillshade (raster) and contours (vector,
     pyramid pixelbuffer 1) over the z4 DEM tile table written to parquet
-    store the bytes of the same config over the DEM input, and
-    execute_tile returns the stored rows of an edge and an interior
-    tile."""
+    store the bytes of the same config over the DEM input, also when
+    the table is wider than the job's bounds (its tiles outside them are
+    no input), and execute_tile returns the stored rows of an edge and
+    an interior tile."""
     from pyspark.sql import functions as F
 
     from mapchete_spark.operators.rastertable import materialize_dem
@@ -749,7 +795,16 @@ def _run_tile_table_input_with_pixelbuffer(spark, tmp_path):
         rc for rc in sorted(tiles)
         if all((rc[0] + dr, rc[1] + dc) in tiles for dr in (-1, 0, 1) for dc in (-1, 0, 1))
     )
-    inputs = {"dem": {"source": "dem", "hole": False}, "table": {"path": table}}
+    wide = str(tmp_path / "dem_z4_wide")
+    materialize_dem(
+        spark, 4, TilePyramid("geodetic"), bounds=Bounds(-11.25, 11.25, 56.25, 61.875),
+        hole=False,
+    ).write.parquet(wide)
+    inputs = {
+        "dem": {"source": "dem", "hole": False},
+        "table": {"path": table},
+        "wide_table": {"path": wide},
+    }
 
     def mk(process, inp, fmt, pyramid, params):
         return JobConfig.from_dict(dict(
@@ -782,6 +837,7 @@ def _run_tile_table_input_with_pixelbuffer(spark, tmp_path):
             )
         want = stored["dem"]
         assert want and stored["table"] == want, process
+        assert stored["wide_table"] == want, process
         for rc in (edge, inner):
             cfg = mk(process, "table", fmt, pyramid, params)
             got = digests(execute_tile(spark, cfg, 4, *rc), payload)

@@ -495,3 +495,49 @@ def test_rasterized_count_equals_quadtree_random_aois(seed, n_parts, maxzoom):
     assert count_tiles_rasterized(mp, pyr, mn, maxzoom) == count_tiles(
         mp, pyr, mn, maxzoom
     )
+
+
+@st.composite
+def masked_arrays(draw):
+    """(masked (bands, h, w) array, nodata): uint8, int16, float32 or
+    float64, 1-3 bands, with or without masked pixels; unmasked pixels
+    never equal nodata (the row format masks by equality)."""
+    from hypothesis.extra import numpy as hnp
+
+    dtype = np.dtype(draw(st.sampled_from(["uint8", "int16", "float32", "float64"])))
+    shape = (draw(st.integers(1, 3)), draw(st.integers(1, 6)), draw(st.integers(1, 6)))
+    if dtype.kind == "f":
+        nodata = -9999.0
+        elements = st.floats(-1e6, 1e6, width=dtype.itemsize * 8).filter(lambda v: v != nodata)
+    else:
+        nodata = float(np.iinfo(dtype).min)
+        elements = st.integers(np.iinfo(dtype).min + 1, np.iinfo(dtype).max)
+    data = draw(hnp.arrays(dtype, shape, elements=elements))
+    mask = draw(st.one_of(st.just(np.zeros(shape, bool)), hnp.arrays(bool, shape)))
+    return np.ma.MaskedArray(data, mask=mask), nodata
+
+
+@settings(max_examples=150, deadline=None)
+@given(case=masked_arrays(), row=st.integers(0, 15), col=st.integers(0, 31))
+def test_raster_row_codec_roundtrip(case, row, col):
+    """A raster row built by ``raster_row`` decodes, after the Arrow
+    trip a UDF batch takes, to its tile, key, array, mask and nodata."""
+    import pyarrow as pa
+
+    from mapchete_spark.operators.rastertable import (
+        decode_rows, encode_array, raster_row, row_to_array,
+    )
+    from mapchete_spark.tilegrid.keys import linear_tile_key
+
+    arr, nodata = case
+    tile = GEO.tile(4, row, col)
+    encoded = raster_row(tile, arr, nodata)
+    assert encoded["data"] == encode_array(arr, nodata)[0]
+    (got_tile, key, got, got_nodata), = decode_rows(
+        pa.Table.from_pylist([encoded]).to_pandas(), GEO
+    )
+    assert got_tile == tile and key == linear_tile_key(4, row, col)
+    assert got_nodata == nodata and got.dtype == arr.dtype and got.shape == arr.shape
+    for decoded in (got, row_to_array(encoded)):
+        np.testing.assert_array_equal(np.ma.getmaskarray(decoded), np.ma.getmaskarray(arr))
+        np.testing.assert_array_equal(decoded.filled(nodata), arr.filled(nodata))
