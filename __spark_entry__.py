@@ -5824,8 +5824,9 @@ def q_job_multi_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named MULTI-INPUT job (reference examples/file_groups): jobs A
     and B write independent affine transforms of the lattice; job C
     declares ``input: {a: <pathA>, b: <pathB>}`` and an inline user
-    process ``execute(mp, a, b)`` receiving both arrays by name (the
-    k-way tile-id join in run_multi_raster_process), writing their
+    process ``execute(mp, a, b)`` receiving both arrays by name (each
+    process task reads both tile tables' row groups that hold its
+    tiles, operators/halo.py run_windowed_process), writing their
     mean. The oracle re-derives every pixel through both affines and
     the mean."""
     import tempfile

@@ -6,22 +6,23 @@ tile.py:260-272). Two operators render that here, with one per-tile body
 (operators/process.py ``canvas_rows``: canvas -> raster or, with
 ``vector``, feature rows) and one halo exchange:
 
-- ``run_windowed_process``, for inputs a task can read any tile of (the
-  analytic DEM): one ``mapInPandas`` over a ``spark.range`` of 2x2
-  block ids. Each task reads its tiles' neighbours itself and runs the
-  process on the assembled canvas — no shuffle, one Python stage — and
-  can reduce each block's tiles into their parent right away (the
-  reference builds an overview tile as soon as its four children are
-  done, processing/tasks.py:570-617).
-- ``run_buffered_process``, for tile-table inputs (another job's output,
-  or any DataFrame of tiles): a buffered read becomes a shuffle. Every
-  tile mails the <= pixelbuffer wide edge strips its neighbours need
-  (keyed by the NEIGHBOUR's tile key), and one streamed-group
-  mapInPandas assembles each target's canvas and runs the process on it
-  — the strips are O(pixelbuffer * tile_edge) bytes per neighbour; only
-  the centre piece (the tile's own array) shuffles at full size
-  (SURVEY.md §7 step 6). Without a pixelbuffer it is one mapInPandas
-  over the table.
+- ``run_windowed_process``, the job runner's one process operator: one
+  ``mapInPandas`` over a ``spark.range`` of 2x2 block ids. Each task
+  reads its tiles' neighbours from the input's window source itself
+  (the DEM, a tile table's row groups, a broadcast GeoTIFF, or a dict
+  of them for named inputs) and runs the process on the assembled
+  canvas — no shuffle, one Python stage — and can reduce each block's
+  tiles into their parent right away (the reference builds an overview
+  tile as soon as its four children are done, tasks.py:570-617).
+- ``run_buffered_process``, for any DataFrame of tiles (the table
+  operators ``run_raster_process`` / ``run_vector_process``): a
+  buffered read becomes a shuffle. Every tile mails the <= pixelbuffer
+  wide edge strips its neighbours need (keyed by the NEIGHBOUR's tile
+  key), and one streamed-group mapInPandas assembles each target's
+  canvas and runs the process on it — the strips are O(pixelbuffer *
+  tile_edge) bytes per neighbour; only the centre piece (the tile's own
+  array) shuffles at full size (SURVEY.md §7 step 6). Without a
+  pixelbuffer it is one mapInPandas over the table.
 
 Both place pieces by one rule (``_canvas``) and give the same canvas:
 only neighbours in the input set fill it, the rest stays nodata.
@@ -36,7 +37,7 @@ exactly like Tile.bounds/shape.
 from __future__ import annotations
 
 from collections import OrderedDict
-from typing import Callable, Iterator, Optional
+from typing import Callable, Iterator, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -45,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mapchete_spark.operators.checkpoint import PASS_ALL, KeyFilter
 from mapchete_spark.operators.overviews import reduce_children
-from mapchete_spark.operators.process import VECTOR_SCHEMA, canvas_rows
+from mapchete_spark.operators.process import VECTOR_SCHEMA, canvas_rows, raster_tile_row
 from mapchete_spark.operators.rastertable import (
     RASTER_SCHEMA,
     aoi_tile_ranges,
@@ -112,11 +113,54 @@ def _canvas(me: Tile, pb: int, pieces, nodata: float) -> np.ma.MaskedArray:
     return mask_nodata(canvas, nodata)
 
 
+class _TileFunction(NamedTuple):
+    """The window source of a function Tile -> array whose tiles share
+    one ``nodata`` (the analytic DEM: every tile, nothing read up front)."""
+
+    read_tile: Callable[[Tile], np.ndarray]
+    nodata: float
+
+    def extent(self, pyramid: TilePyramid, zoom: int) -> None:
+        return None
+
+    def open(self, pyramid: TilePyramid, zoom: int, rows, cols):
+        return lambda tile: (self.read_tile(tile), self.nodata)
+
+
+def _cut(ranges: list, extents: list) -> list:
+    """``ranges`` cut to the box around the sources' ``extents`` (lists
+    of tile ranges; None for a source with no edge)."""
+    if any(e is None for e in extents):
+        return ranges
+    boxes = [b for e in extents for b in e]
+    if not boxes:
+        return []
+    r0, r1 = min(b[0] for b in boxes), max(b[1] for b in boxes)
+    c0, c1 = min(b[2] for b in boxes), max(b[3] for b in boxes)
+    cut = [(max(a0, r0), min(a1, r1), max(b0, c0), min(b1, c1)) for a0, a1, b0, b1 in ranges]
+    return [(a0, a1, b0, b1) for a0, a1, b0, b1 in cut if a0 <= a1 and b0 <= b1]
+
+
+#: a tile's 3x3 neighbourhood, itself included, row-major
+_RING_DR = np.repeat([-1, 0, 1], 3)
+_RING_DC = np.tile([-1, 0, 1], 3)
+
+
+def _with_ring(p: TilePyramid, zoom: int, rows: np.ndarray, cols: np.ndarray, pb: int):
+    """(rows, cols) of the tiles and, with a pixelbuffer, of their 3x3
+    neighbourhoods, wrapped across the x edge of a global grid (a
+    neighbour off the grid matches no tile)."""
+    if not pb:
+        return rows, cols
+    rows, cols = (rows[:, None] + _RING_DR).ravel(), (cols[:, None] + _RING_DC).ravel()
+    return rows, (cols % p.matrix_width(zoom) if p.is_global else cols)
+
+
 def run_windowed_process(
     spark: SparkSession,
     pyramid: TilePyramid,
     zoom: int,
-    read_tile: Callable[[Tile], np.ndarray],
+    read_tile,
     nodata: float,
     pixelbuffer: int,
     process,
@@ -136,24 +180,53 @@ def run_windowed_process(
     ``zoom - 1``; at zoom 0 just their row and column halved), then ONE
     mapInPandas. Per block, the task takes the block's tiles that are in
     the input set and pass ``target_filter`` (a checkpoint KeyFilter,
-    applied in the task), builds each one's canvas from
-    ``read_tile(neighbour)`` strips and runs the process on it.
+    applied in the task), builds each one's canvas from its neighbours'
+    strips and runs the process on it.
+
+    ``read_tile`` is the input: a function Tile -> array whose tiles
+    share ``nodata`` (the DEM); a window source, whose ``extent(pyramid,
+    zoom)`` gives the tile ranges it holds (None: every tile) and whose
+    ``open(pyramid, zoom, rows, cols)``, called once per task with the
+    tiles the task reads, gives a reader Tile -> (array, nodata) or None
+    (rastertable.TileTableSource, sources/fileinput.GeoTiffSource); or
+    named inputs, a dict name -> function or source, or -> a dict of
+    them (a group, members named ``group.member``). Named inputs run a
+    raster process without a pixelbuffer on every tile one of them
+    holds; it sees ``TileContext.inputs`` (name -> masked array or
+    None), each name as a parameter and each group as a list of
+    (member, array), and takes its array and nodata from the first
+    input holding the tile (the reference's file_groups example).
+
+    The blocks walked are those of the ``bounds`` ranges cut to the
+    sources' extents. The input set is the tiles of those ranges that
+    intersect ``area`` and that the source holds: a neighbour outside
+    it leaves its part of the canvas nodata, so the output equals the
+    halo exchange over the input's tile table (``run_buffered_process``,
+    same ``vector`` flag) byte for byte. A bounded per-task cache keeps
+    each neighbour read once per task.
 
     ``parents`` (raster only, a KeyFilter of keys at ``zoom - 1``): a
     block whose parent passes it and whose tiles gave rows also emits
     the parent, reduced from those rows by
     ``overviews.reduce_children`` with ``resampling`` — the first
-    overview zoom, in the same task.
-
-    The input set is the tiles of ``bounds`` that intersect ``area``, as
-    ``materialize_dem`` would generate them: a neighbour outside it
-    leaves its part of the canvas nodata, so the output equals the halo
-    exchange over that table (``run_buffered_process``, with the same
-    ``vector`` flag) byte for byte. A bounded per-task cache keeps each
-    neighbour read once per task."""
+    overview zoom, in the same task."""
     if parents is not None and (vector or zoom < 1):
         raise ValueError("only a raster process above zoom 0 can reduce its parents")
-    ranges = aoi_tile_ranges(pyramid, zoom, bounds)
+    named = isinstance(read_tile, dict)
+    if named and (vector or pixelbuffer):
+        raise ValueError("named inputs run a raster process without a pixelbuffer")
+    # flat name -> source; group -> [(member, flat name)]
+    sources, groups = {}, {}
+    for name, src in (read_tile.items() if named else [(None, read_tile)]):
+        if isinstance(src, dict):
+            groups[name] = [(short, f"{name}.{short}") for short in src]
+            sources.update({f"{name}.{short}": s for short, s in src.items()})
+        else:
+            sources[name] = src
+    sources = {n: s if hasattr(s, "open") else _TileFunction(s, nodata) for n, s in sources.items()}
+    ranges = _cut(
+        aoi_tile_ranges(pyramid, zoom, bounds), [s.extent(pyramid, zoom) for s in sources.values()]
+    )
     schema = VECTOR_SCHEMA if vector else RASTER_SCHEMA
     if not ranges:
         return spark.createDataFrame([], schema)
@@ -186,35 +259,59 @@ def run_windowed_process(
                 ) and (area is None or bool(tiles_in_area(p, area, [zoom], [r], [c])[0]))
             return is_input[(r, c)]
 
-        def window(r: int, c: int) -> np.ndarray:
+        def window(r: int, c: int):
+            """(nodata-filled array, nodata) of tile (r, c), or None."""
             nonlocal held
-            arr = windows.pop((r, c), None)
-            if arr is None:
-                arr = filled_array(read_tile(Tile(p, zoom, r, c)), nodata)
-                held += arr.nbytes
+            if (r, c) in windows:
+                windows.move_to_end((r, c))
+                return windows[(r, c)]
+            got = read(Tile(p, zoom, r, c))
+            if got is not None:
+                got = (filled_array(got[0], got[1]), got[1])
+                held += got[0].nbytes
                 while windows and held > WINDOW_CACHE_BYTES:
-                    held -= windows.popitem(last=False)[1].nbytes
-            windows[(r, c)] = arr
-            return arr
+                    old = windows.popitem(last=False)[1]
+                    held -= 0 if old is None else old[0].nbytes
+            windows[(r, c)] = got
+            return got
 
         def tile_rows(r: int, c: int) -> list:
+            centre = window(r, c)
+            if centre is None:
+                return []
             pieces = []
-            for dr in (-1, 0, 1):
-                for dc in (-1, 0, 1):
-                    nr, nc = r + dr, c + dc
-                    if nr < 0 or nr >= mh:
+            for dr, dc in zip(_RING_DR.tolist(), _RING_DC.tolist()):
+                nr, nc = r + dr, c + dc
+                if nr < 0 or nr >= mh:
+                    continue
+                if nc < 0 or nc >= mw:
+                    if not p.is_global:
                         continue
-                    if nc < 0 or nc >= mw:
-                        if not p.is_global:
-                            continue
-                        nc %= mw
-                    if in_input_set(nr, nc):
-                        pieces.append((dr, dc, _strip(window(nr, nc), -dr, -dc, pb)))
-            me = Tile(p, zoom, r, c)
+                    nc %= mw
+                got = window(nr, nc) if in_input_set(nr, nc) else None
+                if got is not None:
+                    pieces.append((dr, dc, _strip(got[0], -dr, -dc, pb)))
+            me, nd = Tile(p, zoom, r, c), centre[1]
             return canvas_rows(
-                me, _canvas(me, pb, pieces, nodata), nodata, process, params,
+                me, _canvas(me, pb, pieces, nd), nd, process, params,
                 out_dtype, out_nodata, vector,
             )
+
+        def named_rows(r: int, c: int) -> list:
+            me = Tile(p, zoom, r, c)
+            got = {name: read_named(me) for name, read_named in readers.items()}
+            inputs = {n: g and mask_nodata(filled_array(*g), g[1]) for n, g in got.items()}
+            present = [(inputs[n], g[1]) for n, g in got.items() if g]
+            if not present:
+                return []
+            params_in = {**params, **inputs, **{
+                g: [(short, inputs[flat]) for short, flat in members]
+                for g, members in groups.items()
+            }}
+            row = raster_tile_row(
+                me, *present[0], process, params_in, out_dtype, out_nodata, inputs=inputs
+            )
+            return [row] if row else []
 
         def parent_row(br: int, bc: int, children: list) -> dict:
             arrays = [
@@ -225,16 +322,32 @@ def run_windowed_process(
                 Tile(p, zoom - 1, br, bc), arrays, children[0]["nodata"], resampling
             )
 
+        walks = []
         for pdf in batches:
-            out = {k: [] for k in columns}
             brs = pdf["tile_row"].values.astype(np.int64)
             bcs = pdf["tile_col"].values.astype(np.int64)
             # the block's four tiles, row-major; tiles off the matrix fail
             # the input-set test below
             rows = (2 * brs[:, None] + np.array([0, 0, 1, 1])).ravel()
             cols = (2 * bcs[:, None] + np.array([0, 1, 0, 1])).ravel()
-            keys = linear_tile_key(zoom, rows, cols)
-            todo = target_filter.passes(keys).reshape(-1, 4)
+            todo = target_filter.passes(linear_tile_key(zoom, rows, cols))
+            walks.append((brs, bcs, rows, cols, todo))
+        # each source opens once per task, for the todo tiles and the
+        # neighbours their windows take pieces of
+        none = np.empty(0, dtype=np.int64)
+        needed = _with_ring(
+            p, zoom,
+            np.concatenate([rows[todo] for _, _, rows, _, todo in walks] + [none]),
+            np.concatenate([cols[todo] for _, _, _, cols, todo in walks] + [none]),
+            pb,
+        )
+        readers = {name: s.open(p, zoom, *needed) for name, s in sources.items()}
+        read = readers.get(None)
+        rows_of = named_rows if named else tile_rows
+
+        for brs, bcs, rows, cols, todo in walks:
+            out = {k: [] for k in columns}
+            todo = todo.reshape(-1, 4)
             emit = (
                 parents.passes(linear_tile_key(zoom - 1, brs, bcs))
                 if parents is not None
@@ -245,7 +358,7 @@ def run_windowed_process(
                 for j in range(4):
                     r, c = int(rows[4 * i + j]), int(cols[4 * i + j])
                     if todo[i, j] and in_input_set(r, c):
-                        children += tile_rows(r, c)
+                        children += rows_of(r, c)
                 if emit[i] and children:
                     children.append(parent_row(br, bc, children))
                 for row in children:

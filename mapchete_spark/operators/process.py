@@ -10,15 +10,16 @@ Spark mapping: ``canvas_rows`` is the one per-tile body: it runs a
 single-input process on one tile's canvas (its window, buffered when
 the process needs a pixelbuffer — hillshade needs >= 1,
 mapchete/processes/hillshade.py:54-205) and returns raster or feature
-rows. The two operators in operators/halo.py call it inside one
-mapInPandas per stage: over windows read at the source, or over a tile
-raster table (assembled by the halo exchange when buffered);
-``run_raster_process`` / ``run_vector_process`` are that table
-operator. Whole Arrow batches stay in one Python call; per-tile numpy
-does the math.  No per-row Python at the DataFrame level. Rows are read
-and built through the raster row codec (operators/rastertable.py
-``decode_rows`` / ``raster_row``), also by ``run_multi_raster_process``,
-which decodes each named input of a joined row with it.
+rows; named inputs (the reference's file_groups) call
+``raster_tile_row`` with every input's array. The two operators in
+operators/halo.py call them inside one mapInPandas per stage: over
+windows read at the source (the job runner, for every input kind), or
+over a tile raster table (assembled by the halo exchange when
+buffered); ``run_raster_process`` / ``run_vector_process`` are that
+table operator. Whole Arrow batches stay in one Python call; per-tile
+numpy does the math.  No per-row Python at the DataFrame level. Rows
+are read and built through the raster row codec
+(operators/rastertable.py ``decode_rows`` / ``raster_row``).
 
 Built-in processes (P1-P4): convert, hillshade, contours, clip.
 """
@@ -33,18 +34,10 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from mapchete_spark.geometry.core import Polygon
 from mapchete_spark.geometry.wkb import to_wkb
-from mapchete_spark.operators.rastertable import (
-    ID_COLUMNS,
-    PAYLOAD_COLUMNS,
-    RASTER_COLUMNS,
-    RASTER_SCHEMA,
-    decode_rows,
-    raster_row,
-)
+from mapchete_spark.operators.rastertable import raster_row
 from mapchete_spark.raster.array import clip_array_with_vector
 from mapchete_spark.raster.terrain import generate_contours, hillshade
 from mapchete_spark.tilegrid.keys import linear_tile_key
@@ -303,78 +296,6 @@ def process_clip(ctx: TileContext) -> np.ma.MaskedArray:
     if out.mask.all():
         raise Empty
     return out
-
-
-def run_multi_raster_process(
-    named_tiles: "dict[str, DataFrame]",
-    pyramid: TilePyramid,
-    process: RasterProcess,
-    params: Optional[dict] = None,
-    out_dtype: Optional[str] = None,
-    out_nodata: Optional[float] = None,
-    groups: Optional[dict] = None,
-) -> DataFrame:
-    """NAMED multi-input raster process — the reference's grouped-input
-    jobs (examples/file_groups: ``execute(group1: RasterInputGroup,
-    group2: ...)``). The k input tile tables FULL-OUTER join on the
-    tile id (one k-way hash shuffle on tile_key — co-partitioned at any
-    scale), each row decodes every present input, and the process sees:
-
-    - ``ctx.inputs``: flat name -> masked array (None where that input
-      has no tile here);
-    - each flat name injected as a process parameter (so a user
-      ``execute(mp, dem_a, dem_b)`` binds them positionally by name,
-      the reference's named-input injection);
-    - each ``groups`` entry injected as a list of (member_name, array)
-      tuples — the RasterInputGroup analog.
-
-    ``ctx.array`` is the first non-None input (reading order of
-    ``named_tiles``); output nodata/dtype default to that input's.
-    Pixelbuffered multi-input is not implemented: the halo exchange
-    (operators/halo.py) assembles the window of one input table."""
-    import functools
-
-    params = params or {}
-    groups = groups or {}
-    names = list(named_tiles)
-    # positional column prefixes: input names may contain dots
-    # (group.member), which Spark column resolution treats as struct
-    # access
-    renamed = []
-    for i, (name, df) in enumerate(named_tiles.items()):
-        sel = [F.col(c) for c in ID_COLUMNS] + [
-            F.col(c).alias(f"in{i}__{c}") for c in PAYLOAD_COLUMNS
-        ]
-        renamed.append(df.select(*sel))
-    joined = functools.reduce(
-        lambda a, b: a.join(b, on=list(ID_COLUMNS), how="full_outer"), renamed
-    )
-    pyr_dict = pyramid.to_dict()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = TilePyramid(**pyr_dict)
-        for pdf in batches:
-            out = []
-            for decoded in zip(*(decode_rows(pdf, p, f"in{i}__") for i in range(len(names)))):
-                inputs = {name: arr for name, (_, _, arr, _) in zip(names, decoded)}
-                present = [(arr, nodata) for _, _, arr, nodata in decoded if arr is not None]
-                if not present:
-                    continue
-                primary, primary_nodata = present[0]
-                group_params = {
-                    g: [(short, inputs.get(flat)) for short, flat in members]
-                    for g, members in groups.items()
-                }
-                res = raster_tile_row(
-                    decoded[0][0], primary, primary_nodata, process,
-                    {**params, **inputs, **group_params}, out_dtype, out_nodata,
-                    inputs=inputs,
-                )
-                if res:
-                    out.append(res)
-            yield pd.DataFrame(out, columns=RASTER_COLUMNS)
-
-    return joined.mapInPandas(gen, schema=RASTER_SCHEMA)
 
 
 def run_feature_process(

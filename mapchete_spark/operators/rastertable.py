@@ -20,7 +20,7 @@ of pre-tiled arrays, which this produces.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Iterator, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -107,17 +107,12 @@ def _decode_payload(data, dtype, bands, height, width, nodata):
 
 
 def decode_rows(
-    pdf: pd.DataFrame, pyramid: TilePyramid, prefix: str = ""
+    pdf: pd.DataFrame, pyramid: TilePyramid
 ) -> Iterator[Tuple[Tile, int, Optional[np.ma.MaskedArray], float]]:
     """(Tile, tile_key, masked array, nodata) per row of an Arrow batch
-    of RASTER_SCHEMA rows, walking its columns. ``prefix`` reads the
-    payload from the columns ``prefix + name`` (the tile id columns keep
-    their names); a row whose payload is null (the missing side of an
-    outer join) gives array None."""
-    for z, r, c, key, *payload in zip(
-        *(pdf[col].values for col in ID_COLUMNS),
-        *(pdf[prefix + col].values for col in PAYLOAD_COLUMNS),
-    ):
+    of RASTER_SCHEMA rows, walking its columns; a row whose payload is
+    null gives array None."""
+    for z, r, c, key, *payload in zip(*(pdf[col].values for col in ID_COLUMNS + PAYLOAD_COLUMNS)):
         yield (
             Tile(pyramid, int(z), int(r), int(c)), int(key),
             _decode_payload(*payload), float(payload[-1]),
@@ -128,6 +123,111 @@ def row_to_array(row) -> np.ma.MaskedArray:
     """Decode one row (a mapping: pandas row, Spark Row, dict) with the
     raster columns."""
     return _decode_payload(*(row[col] for col in PAYLOAD_COLUMNS))
+
+
+def read_tiles(spark: SparkSession, path: str, zoom: Optional[int] = None) -> DataFrame:
+    """The tile table at ``path`` (at ``zoom`` only, when given), read
+    with the raster schema, so Spark starts no schema-inference job."""
+    df = spark.read.schema(RASTER_SCHEMA).parquet(path)
+    return df if zoom is None else df.where(F.col("zoom") == zoom)
+
+
+#: a span with no statistics: any zoom, row or column
+_ANY = (-(2**62), 2**62)
+
+
+class RowGroup(NamedTuple):
+    """Where a row group of a tile table is, and the tiles it can hold."""
+
+    path: str
+    index: int
+    zooms: Tuple[int, int]
+    rows: Tuple[int, int]
+    cols: Tuple[int, int]
+    #: False in a zoom-partitioned file: its zoom is the path's
+    has_zoom: bool
+
+
+class TileTableSource:
+    """A parquet tile table as a window source of
+    ``halo.run_windowed_process``. The driver lists every row group
+    once, from the parquet footers: (file, row group, zoom, row and
+    column min–max). A task reads, in one pyarrow read per file, only
+    the row groups that hold the tiles it asks for, and keeps those
+    tiles (the per-partition metadata of Jigsaw, SIGMOD 2021). Files of
+    a zoom-partitioned table (``zoom=<z>`` directories, as ``execute``
+    writes them) take their zoom from the path."""
+
+    def __init__(self, path: str):
+        import pyarrow.dataset as pads
+
+        dataset = pads.dataset(path, format="parquet", partitioning="hive")
+        self.filesystem = dataset.filesystem
+        self.row_groups: list = []
+        for frag in dataset.get_fragments():
+            zoom = pads.get_partition_keys(frag.partition_expression).get("zoom")
+            for group in frag.row_groups:
+                stats = group.statistics  # the columns with a min and max
+                span = {c: (stats[c]["min"], stats[c]["max"]) if c in stats else _ANY
+                        for c in ("zoom", "tile_row", "tile_col")}
+                if group.num_rows:
+                    self.row_groups.append(RowGroup(
+                        frag.path, group.id, span["zoom"] if zoom is None else (zoom, zoom),
+                        span["tile_row"], span["tile_col"], zoom is None,
+                    ))
+
+    def _at(self, zoom: int) -> list:
+        return [g for g in self.row_groups if g.zooms[0] <= zoom <= g.zooms[1]]
+
+    def extent(self, pyramid: TilePyramid, zoom: int) -> list:
+        """The one (r0, r1, c0, c1) box of the row groups at ``zoom``."""
+        at = self._at(zoom)
+        if not at:
+            return []
+        return [(
+            min(g.rows[0] for g in at), max(g.rows[1] for g in at),
+            min(g.cols[0] for g in at), max(g.cols[1] for g in at),
+        )]
+
+    def open(self, pyramid: TilePyramid, zoom: int, rows: np.ndarray, cols: np.ndarray):
+        """In the task: the reader of the tiles (``rows``, ``cols``) at
+        ``zoom``, Tile -> (array, nodata), or None for a tile the table
+        does not hold."""
+        groups = [
+            g for g in self._at(zoom)
+            if np.any(
+                (rows >= g.rows[0]) & (rows <= g.rows[1])
+                & (cols >= g.cols[0]) & (cols <= g.cols[1])
+            )
+        ]
+        tiles = {
+            rc: (decode_array(*payload), float(payload[-1]))
+            for rc, payload in self.read_row_groups(groups, zoom, rows, cols)
+        }
+        return lambda tile: tiles.get((tile.row, tile.col))
+
+    def read_row_groups(self, groups: list, zoom: int, rows: np.ndarray, cols: np.ndarray):
+        """((row, col), payload columns) of the tiles (``rows``,
+        ``cols``) at ``zoom`` in the row groups ``groups``, one read per
+        file."""
+        import pyarrow.parquet as pq
+
+        want = linear_tile_key(zoom, rows, cols)
+        by_file: dict = {}
+        for g in groups:
+            by_file.setdefault((g.path, g.has_zoom), []).append(g.index)
+        for (path, has_zoom), ids in by_file.items():
+            columns = (["zoom"] if has_zoom else []) + ["tile_row", "tile_col", *PAYLOAD_COLUMNS]
+            with self.filesystem.open_input_file(path) as f:
+                table = pq.ParquetFile(f).read_row_groups(ids, columns=columns)
+            r = table.column("tile_row").to_numpy()
+            c = table.column("tile_col").to_numpy()
+            keep = np.isin(linear_tile_key(zoom, r, c), want)
+            if has_zoom:
+                keep &= table.column("zoom").to_numpy() == zoom
+            kept = np.flatnonzero(keep)
+            payload = (table.column(col).take(kept).to_pylist() for col in PAYLOAD_COLUMNS)
+            yield from zip(zip(r[kept].tolist(), c[kept].tolist()), zip(*payload))
 
 
 def merge_tile_ranges(ranges) -> list:

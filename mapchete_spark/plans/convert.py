@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from mapchete_spark.operators.process import process_convert, run_raster_process
 from mapchete_spark.operators.outputsplit import split_to_output_tiles
+from mapchete_spark.operators.rastertable import read_tiles
 from mapchete_spark.operators.tiledir import read_tiledir
 from mapchete_spark.tilegrid.pyramid import TilePyramid
 
@@ -39,7 +40,7 @@ def convert(
         src_meta = json.load(f)
     src_pyr = TilePyramid(**src_meta["pyramid"])
     dst_pyr = dst_pyramid or src_pyr
-    tiles = spark.read.parquet(os.path.join(src_path, "tiles"))
+    tiles = read_tiles(spark, os.path.join(src_path, "tiles"))
     if zoom_levels is None:
         zoom_levels = sorted(
             r["zoom"] for r in tiles.select("zoom").distinct().collect()

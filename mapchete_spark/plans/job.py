@@ -5,21 +5,21 @@ Lifecycle mapping (SURVEY.md §3.1): parse YAML -> per-zoom plan on the
 driver; then per process zoom (descending):
     tile ids -> buffered window read in the task -> process UDF -> write
     (output parquet) -> driver-side commit (done-manifest + metrics)
-for DEM inputs (operators/halo.py run_windowed_process: one Python
-stage over 2x2 blocks, no shuffle), and for tile-table inputs
-    input tiles -> halo exchange (pixelbuffer) -> process UDF -> write
-(run_buffered_process: one strip shuffle, one Python stage after it;
-the input tiles are those of the job's bounds, as for a DEM input).
-Raster and vector processes take the same path, with one per-tile body
-(operators/process.py canvas_rows); only an output split is
-raster-only. A raster DEM process zoom right above a lower overview
-zoom also reduces each block into its parent in the same task, and
-both zooms go out in the stage's one write (the reference starts an
-overview tile once its four children are done, processing/tasks.py:
-570-617). Per overview zoom, for the rest: groupBy(parent) reduce of the
-stored level above (lower path) or parent->children upsample (higher
-path) — Z1 semantics (mapchete/processing/tasks.py:378-450); a zoom
-whose parents were all reduced in the process task starts no job.
+for every raster input (operators/halo.py run_windowed_process: one
+Python stage over 2x2 blocks, no shuffle; each input kind has one window
+source the task reads, and the input tiles are those of the job's
+bounds for every kind, as the reference reads each tile's window from
+the source, io/raster/read.py:58-206). Raster and vector processes take
+the same path, with one per-tile body (operators/process.py
+canvas_rows); only an output split is raster-only. A raster process
+zoom over DEM inputs right above a lower overview zoom also reduces
+each block into its parent in the same task, and both zooms go out in
+the stage's one write (the reference starts an overview tile once its
+four children are done, processing/tasks.py:570-617). Per overview
+zoom, for the rest: groupBy(parent) reduce of the stored level above
+(lower path) or parent->children upsample (higher path) — Z1 semantics
+(mapchete/processing/tasks.py:378-450); a zoom whose parents were all
+reduced in the process task starts no job.
 
 Continue mode is planned on the driver (reference S11/J1/J2: an
 existence check on tiles whose ids are computed, not stored): each
@@ -58,22 +58,15 @@ from mapchete_spark.operators.checkpoint import (
     plan_keys,
     write_tiles,
 )
-from mapchete_spark.operators.halo import run_buffered_process, run_windowed_process
+from mapchete_spark.operators.halo import run_windowed_process
 from mapchete_spark.operators.overviews import overview_reduce_once, overview_upsample
 from mapchete_spark.operators.process import (
     process_clip,
     process_contours,
     process_convert,
     process_hillshade,
-    run_multi_raster_process,
 )
-from mapchete_spark.operators.rastertable import (
-    RASTER_SCHEMA,
-    aoi_tile_keys,
-    aoi_tile_ranges,
-    filter_tiles_to_area,
-    materialize_dem,
-)
+from mapchete_spark.operators.rastertable import TileTableSource, aoi_tile_keys, read_tiles
 from mapchete_spark.plans.config import JobConfig
 from mapchete_spark.raster.dem import DEM_NODATA, dem_tile
 from mapchete_spark.tilegrid.keys import (
@@ -165,28 +158,6 @@ def _is_multi_input(inp) -> bool:
     )
 
 
-def _input_tiles_multi(spark, cfg: JobConfig, zoom: int, cut=None):
-    """(flat name -> tile table, group map) for a named-input config.
-    One level of nesting = a group: its members flatten to
-    ``group.member`` and the group name later injects as a list of
-    (member, array) tuples (the RasterInputGroup analog)."""
-    inp = cfg.input_at_zoom(zoom)
-    flat, groups = {}, {}
-    for name, spec in inp.items():
-        if _is_leaf_spec(spec):
-            flat[name] = spec
-        else:
-            groups[name] = []
-            for short, sub in spec.items():
-                fname = f"{name}.{short}"
-                flat[fname] = sub
-                groups[name].append((short, fname))
-    tables = {
-        n: _materialize_input(spark, cfg, zoom, spec, cut) for n, spec in flat.items()
-    }
-    return tables, groups
-
-
 def _is_dem(inp) -> bool:
     return inp in (None, "dem") or (isinstance(inp, dict) and inp.get("source") == "dem")
 
@@ -195,19 +166,42 @@ def _dem_hole(inp) -> bool:
     return bool(inp.get("hole", True)) if isinstance(inp, dict) else True
 
 
+def _input_specs(inp) -> list:
+    """The specs of ``inp``: itself, or every member of named inputs."""
+    if not _is_multi_input(inp):
+        return [inp]
+    return [s for spec in inp.values() for s in ([spec] if _is_leaf_spec(spec) else spec.values())]
+
+
+def _input_source(spark, cfg: JobConfig, spec):
+    """The window source of one input spec: the analytic DEM, or for a
+    path by extension a GeoTIFF resampled onto the job grid (the
+    reference's raster_file driver) or a parquet tile table (S3/S4:
+    another job's output)."""
+    if _is_dem(spec):
+        return functools.partial(dem_tile, hole=_dem_hole(spec))
+    path = spec.get("path") if isinstance(spec, dict) else spec
+    if not isinstance(path, str):
+        raise ValueError(f"unsupported input spec: {spec!r}")
+    if path.lower().endswith((".tif", ".tiff")):
+        from mapchete_spark.sources.fileinput import GeoTiffSource
+
+        resampling = spec.get("resampling", "nearest") if isinstance(spec, dict) else "nearest"
+        return GeoTiffSource(path, cfg.pyramid, resampling=resampling).broadcast(spark)
+    return TileTableSource(path)
+
+
 def _zoom_rows(
     spark, cfg: JobConfig, zoom: int, kind: str, fn, pb: int, params,
-    todo: KeyFilter, parents: Optional[KeyFilter] = None, cut=None,
+    todo: KeyFilter, parents: Optional[KeyFilter] = None,
 ) -> DataFrame:
     """The rows of the process at ``zoom`` whose keys pass ``todo``,
     before any output split: raster rows, or feature rows for a vector
-    or features ``kind``. Over a DEM input, every tile of the AOI with
-    its buffered window read inside the process task (no tile table, no
-    shuffle), plus the ``parents`` at ``zoom - 1`` that pass that filter
-    reduced from their children in the same task; over a tile table, the
-    halo exchange when ``pb`` asks for a buffer; over named inputs, their
-    tables joined on the tile id. ``cut`` (a row/col predicate) narrows
-    the tile tables read."""
+    or features ``kind``. Over a raster input, every tile of the AOI that
+    the input holds, with its buffered window read inside the process
+    task from the input's window source (no input table, no shuffle),
+    plus the ``parents`` at ``zoom - 1`` that pass that filter reduced
+    from their children in the same task."""
     if kind == "features":
         from mapchete_spark.operators.process import run_feature_process
         from mapchete_spark.operators.vector import (
@@ -220,34 +214,21 @@ def _zoom_rows(
             explode_features_to_tiles(feats, zoom, pyramid=cfg.pyramid), cfg.pyramid
         )
         return run_feature_process(todo.apply(clipped), cfg.pyramid, fn, params=params)
-    common = dict(
-        params=params,
-        out_dtype=cfg.output.get("dtype"),
-        out_nodata=cfg.output.get("nodata"),
-    )
     inp = cfg.input_at_zoom(zoom)
     if _is_multi_input(inp):
-        if kind != "raster":
-            raise ValueError(
-                "named multi-inputs are implemented for raster processes only"
-            )
-        if pb > 0:
-            raise ValueError("named multi-inputs do not support a pixelbuffer")
-        tables, groups = _input_tiles_multi(spark, cfg, zoom, cut)
-        return run_multi_raster_process(
-            {n: todo.apply(t) for n, t in tables.items()}, cfg.pyramid, fn,
-            groups=groups, **common,
-        )
-    common.update(target_filter=todo, vector=kind != "raster")
-    if _is_dem(inp):
-        return run_windowed_process(
-            spark, cfg.pyramid, zoom, functools.partial(dem_tile, hole=_dem_hole(inp)),
-            DEM_NODATA, pb, fn, bounds=cfg.bounds, area=cfg.area, parents=parents,
-            resampling=cfg.baselevels.lower if parents is not None else "nearest",
-            **common,
-        )
-    return run_buffered_process(
-        _materialize_input(spark, cfg, zoom, inp, cut), cfg.pyramid, pb, fn, **common
+        source = {
+            name: _input_source(spark, cfg, spec) if _is_leaf_spec(spec) else {
+                short: _input_source(spark, cfg, sub) for short, sub in spec.items()
+            }
+            for name, spec in inp.items()
+        }
+    else:
+        source = _input_source(spark, cfg, inp)
+    return run_windowed_process(
+        spark, cfg.pyramid, zoom, source, DEM_NODATA, pb, fn, params=params,
+        out_dtype=cfg.output.get("dtype"), out_nodata=cfg.output.get("nodata"),
+        bounds=cfg.bounds, area=cfg.area, target_filter=todo, vector=kind != "raster",
+        parents=parents, resampling=cfg.baselevels.lower if parents is not None else "nearest",
     )
 
 
@@ -275,72 +256,6 @@ def _child_keys(keys: np.ndarray, pyramid) -> np.ndarray:
     return np.unique(linear_tile_key(zc, rows[ok], cols[ok]))
 
 
-def _in_ranges(ranges):
-    """Predicate of the tiles in (r0, r1, c0, c1) ranges, on the row and
-    column columns, so a parquet scan can push it down."""
-    return functools.reduce(
-        lambda a, b: a | b,
-        (
-            F.col("tile_row").between(r0, r1) & F.col("tile_col").between(c0, c1)
-            for r0, r1, c0, c1 in ranges
-        ),
-        F.lit(False),
-    )
-
-
-def _materialize_input(spark, cfg: JobConfig, zoom: int, inp, cut=None) -> DataFrame:
-    """The input tile table of ``inp`` at ``zoom``: a parquet path reads
-    an existing tile table (S3/S4 analog: another job's output), cut to
-    the tiles of the AOI, the same input set for every input kind.
-    ``cut`` (a row/col predicate) narrows a table read further. The
-    process stages read a DEM input's windows in the task instead
-    (``_zoom_rows``)."""
-    if _is_dem(inp):
-        # area filter applied on the ID table inside materialize_dem —
-        # excluded tiles never compute a payload
-        return materialize_dem(
-            spark, zoom, cfg.pyramid, bounds=cfg.bounds, hole=_dem_hole(inp),
-            area=cfg.area,
-        )
-    elif isinstance(inp, dict) and "path" in inp:
-        df = _read_path_input(spark, cfg, zoom, inp["path"], inp)
-    elif isinstance(inp, str) and inp not in ("dem",):
-        df = _read_path_input(spark, cfg, zoom, inp, {})
-    else:
-        raise ValueError(f"unsupported input spec: {inp!r}")
-    keep = _in_ranges(aoi_tile_ranges(cfg.pyramid, zoom, cfg.bounds))
-    df = df.where(keep if cut is None else keep & cut)
-    if cfg.area is not None:
-        df = filter_tiles_to_area(df, cfg.pyramid, cfg.area)
-    return df
-
-
-def _read_tiles(spark, path: str, zoom: int) -> DataFrame:
-    """The tiles at ``zoom`` of the tile table at ``path``, read with the
-    raster schema (no schema-inference job per read)."""
-    return spark.read.schema(RASTER_SCHEMA).parquet(path).where(F.col("zoom") == zoom)
-
-
-def _read_path_input(spark, cfg: JobConfig, zoom: int, path: str, spec: dict):
-    """Path inputs: a parquet tile table (the scale shape) OR — round 5,
-    through the in-tree codecs (sources/fileinput.py) — a single
-    GeoTIFF raster file resampled onto the job grid, exactly the
-    reference's raster_file input driver
-    (formats/default/raster_file.py). Dispatch is by extension."""
-    low = str(path).lower()
-    if low.endswith((".tif", ".tiff")):
-        from mapchete_spark.sources.fileinput import raster_table_from_file
-
-        return raster_table_from_file(
-            spark,
-            path,
-            zoom,
-            cfg.pyramid,
-            resampling=spec.get("resampling", "nearest"),
-        )
-    return _read_tiles(spark, path, zoom)
-
-
 _VECTOR_FILE_EXTS = (".geojson", ".json", ".gpkg", ".fgb", ".shp")
 #: param auto-loading excludes bare ``.json`` — a parameter naming a
 #: .json file may be any sidecar, only unambiguous geo extensions load
@@ -359,10 +274,10 @@ def _input_features(spark, cfg: JobConfig, zoom: int) -> DataFrame:
         raise ValueError(
             f"kind-'features' process needs a path input, got {inp!r}"
         )
-    low = path.lower()
-    if not low.endswith(_VECTOR_FILE_EXTS):
-        return spark.read.parquet(path)
     from mapchete_spark.operators.vector import FEATURE_SCHEMA
+
+    if not path.lower().endswith(_VECTOR_FILE_EXTS):
+        return spark.read.schema(FEATURE_SCHEMA).parquet(path)
     from mapchete_spark.sources.fileinput import vector_table_from_file
 
     pyr_crs = str(getattr(cfg.pyramid, "crs", "EPSG:4326"))
@@ -450,19 +365,14 @@ def execute_tile(
     (mapchete/processing/base.py:403-430), the primary single-tile
     correctness harness of its test suite: the process tile, with no
     output split. Spark rendering: ``execute``'s per-zoom body with a
-    keep filter on the target key; tile-table inputs are first cut to
-    the target (plus its 3x3 neighborhood, wrapped across the
-    antimeridian on global grids, when a pixelbuffer needs the halo)."""
+    keep filter on the target key, one Spark job: only the task whose
+    block holds the target reads a window, and from a tile table only
+    the row groups of the target and its neighbours."""
     kind, fn, min_pb = resolve_process(cfg)
     pb = max(cfg.pyramid.pixelbuffer, min_pb)
     params = _zoom_params(spark, cfg, zoom, run_preprocessing_tasks(spark, cfg), {})
     keep = KeyFilter(np.array([linear_tile_key(zoom, row, col)]), keep=True)
-    d = 1 if pb else 0
-    mw = cfg.pyramid.matrix_width(zoom)
-    cols = {col + dc for dc in range(-d, d + 1)}
-    cols = {c % mw for c in cols} if cfg.pyramid.is_global else {c for c in cols if 0 <= c < mw}
-    cut = _in_ranges((row - d, row + d, c, c) for c in sorted(cols))
-    return _zoom_rows(spark, cfg, zoom, kind, fn, pb, params, keep, cut=cut)
+    return _zoom_rows(spark, cfg, zoom, kind, fn, pb, params, keep)
 
 
 def run_preprocessing_tasks(spark: SparkSession, cfg: JobConfig) -> Dict[str, object]:
@@ -674,9 +584,13 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
     _vector_param_cache: Dict[str, list] = {}
     for zoom in cfg.process_zooms():
         params = _zoom_params(spark, cfg, zoom, prep, _vector_param_cache)
-        # the output keys are tile-grid arithmetic for DEM inputs; other
-        # inputs define their own tiles, and an output split re-keys them
-        plannable = _is_dem(cfg.input_at_zoom(zoom)) and out_meta == cfg.pyramid.metatiling
+        # the output keys are tile-grid arithmetic for DEM inputs (named
+        # ones too); other inputs define their own tiles, and an output
+        # split re-keys them
+        plannable = (
+            all(map(_is_dem, _input_specs(cfg.input_at_zoom(zoom))))
+            and out_meta == cfg.pyramid.metatiling
+        )
 
         def build(todo, parents=None, zoom=zoom, params=params):
             # continue-mode compute skip: done PROCESS TARGETS are dropped
@@ -710,7 +624,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         # children whose PARENT is done before the reduce shuffle
         def reduce(todo, zoom):
             return overview_reduce_once(
-                _read_tiles(spark, tiles_path, zoom + 1), cfg.pyramid,
+                read_tiles(spark, tiles_path, zoom + 1), cfg.pyramid,
                 resampling=cfg.baselevels.lower, parents=todo,
             )
 
@@ -725,7 +639,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         # higher: upsample children from the level below; a keep filter
         # also limits the parents read
         def upsample(todo, zoom):
-            src = _read_tiles(spark, tiles_path, zoom - 1)
+            src = read_tiles(spark, tiles_path, zoom - 1)
             if todo.keep:
                 src = KeyFilter(_parent_keys(todo.keys), keep=True).apply(src)
             return todo.apply(
@@ -763,7 +677,7 @@ def tile_index(spark: SparkSession, out_path: str, zoom: int) -> DataFrame:
     bounds (a small query over the output table, not a filesystem walk)."""
     from mapchete_spark.plans.config import JobConfig  # noqa: F401
 
-    tiles = _read_tiles(spark, os.path.join(out_path, "tiles"), zoom)
+    tiles = read_tiles(spark, os.path.join(out_path, "tiles"), zoom)
     with open(os.path.join(out_path, "metadata.json")) as f:
         meta = json.load(f)
     from mapchete_spark.tilegrid.pyramid import TilePyramid

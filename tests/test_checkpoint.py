@@ -487,70 +487,92 @@ def test_dem_process_stage_writes_first_overview(spark, tmp_path):
     assert over["task_run_ms"] is None
 
 
-def test_table_stage_reads_input_with_its_schema(spark, tmp_path):
-    """A process stage over a parquet tile table reads the table with
-    the raster schema, so Spark starts no schema-inference job: under
-    AQE its job group holds the strip shuffle's job and the write's."""
+def _table_stage(spark, tmp_path, **conf):
+    """Run a zoom-5 process with pixelbuffer 1 over the zoom-5 DEM tile
+    table written to parquet, under AQE: the process stage's metrics
+    row, job ids and query plans."""
     from mapchete_spark.plans.config import JobConfig
 
     table = str(tmp_path / "dem")
     _dem(spark).write.parquet(table)
     cfg = JobConfig.from_dict(dict(
-        process="hillshade",
-        zoom_levels=[5],
-        pyramid=dict(grid="geodetic", pixelbuffer=1),
-        input=dict(path=table),
-        output=dict(format="parquet_tiles", path=str(tmp_path / "o")),
+        zoom_levels=[5], pyramid=dict(grid="geodetic", pixelbuffer=1), input=dict(path=table),
+        **conf,
     ))
-    [(row, jobs, _plans)] = _stages_under_aqe(spark, cfg, "process_z5")
-    assert row["n_rows"] > 0
-    assert len(jobs) == 2, jobs
+    [stage] = _stages_under_aqe(spark, cfg, "process_z5")
+    return stage
 
 
-def test_table_vector_stage_has_one_exchange(spark, tmp_path):
-    """A vector process over a tile table with a pixelbuffer runs the
-    halo exchange and nothing else: under AQE its query plan holds one
-    Exchange (the strip shuffle), two MapInPandas (strips out; assemble
-    and process) and no grouped-map Python operator."""
-    from mapchete_spark.plans.config import JobConfig
-
-    table = str(tmp_path / "dem")
-    _dem(spark).write.parquet(table)
-    cfg = JobConfig.from_dict(dict(
-        process="contours",
-        zoom_levels=[5],
-        pyramid=dict(grid="geodetic", pixelbuffer=1),
-        input=dict(path=table),
-        process_parameters=dict(interval=200),
-        output=dict(format="parquet_features", path=str(tmp_path / "o")),
-    ))
-    row, plans = _stage_under_aqe(spark, cfg, "process_z5")
-    assert row["n_rows"] > 0 and row["shuffle_write_bytes"] > 0
-    assert len(plans) == 1, plans
+def _assert_one_windowed_job(row, jobs, plans):
+    """The stage is one Spark job whose query holds one MapInPandas (the
+    windowed process) and no Exchange, and writes no shuffle bytes."""
+    assert row["n_rows"] > 0 and row["shuffle_write_bytes"] == 0
+    assert len(jobs) == 1 and len(plans) == 1, (jobs, plans)
     # the operator tree; under AQE the final plan's
     tree = plans[0].split("\n\n")[0].split("== Initial Plan ==")[0]
-    assert tree.count("Exchange (") == 1, tree
-    assert tree.count("MapInPandas (") == 2, tree
+    assert "Exchange" not in plans[0], tree
+    assert tree.count("MapInPandas (") == 1, tree
     assert "FlatMapGroupsInPandas" not in plans[0], tree
 
 
-@pytest.mark.parametrize("hole", [False, True])
-def test_noop_continue_starts_no_spark_job(spark, tmp_path, hole):
+def test_table_stage_reads_windows_in_one_job(spark, tmp_path):
+    """A raster process stage over a parquet tile table reads each
+    task's windows from the table's row groups in the process task:
+    Spark starts no schema-inference job and no strip shuffle, so under
+    AQE the stage is the write's one job."""
+    _assert_one_windowed_job(*_table_stage(
+        spark, tmp_path, process="hillshade",
+        output=dict(format="parquet_tiles", path=str(tmp_path / "o")),
+    ))
+
+
+def test_table_vector_stage_has_no_exchange(spark, tmp_path):
+    """A vector process over a tile table with a pixelbuffer reads its
+    windows in the task as a raster process does: one job, one
+    MapInPandas, no Exchange, no grouped-map Python operator."""
+    _assert_one_windowed_job(*_table_stage(
+        spark, tmp_path, process="contours", process_parameters=dict(interval=200),
+        output=dict(format="parquet_features", path=str(tmp_path / "o")),
+    ))
+
+
+def _file_groups_cfg(out):
+    """configs/file_groups.mapchete: named and grouped DEM inputs."""
+    from mapchete_spark.plans.config import JobConfig
+
+    cfg = JobConfig.from_file(os.path.join(HERE, "configs", "file_groups.mapchete"))
+    cfg.output["path"] = out
+    return cfg
+
+
+#: a no-op continue run's config (from its output path) and the tiles
+#: of its first run whose process raised Empty, keyed by test id: the
+#: pyramid without and with the DEM hole, and named DEM inputs
+NOOP_CASES = {
+    False: (_pyramid_cfg, 0),
+    True: (lambda out: _pyramid_cfg(out, hole=True), 1),
+    "file_groups": (_file_groups_cfg, 0),
+}
+
+
+@pytest.mark.parametrize("case", list(NOOP_CASES))
+def test_noop_continue_starts_no_spark_job(spark, tmp_path, case):
     """A continue run with nothing left to do is planned on the driver:
     it starts no Spark job and leaves every tile file as it was, and its
     bookkeeping does not grow the state tables past the compaction
     bound. A tile whose process raised Empty counts as done."""
     from mapchete_spark.plans.job import execute
 
+    config, n_empty = NOOP_CASES[case]
     out = str(tmp_path / "o")
-    first = execute(spark, _pyramid_cfg(out, hole), mode="continue")
+    first = execute(spark, config(out), mode="continue")
     assert all(n > 0 for n in first.values()), first
     manifest = JobStore(spark, os.path.join(out, "_state")).checkpoint()
-    assert manifest.where(F.col("payload_md5").isNull()).count() == (1 if hole else 0)
+    assert manifest.where(F.col("payload_md5").isNull()).count() == n_empty
     before = _file_digests(os.path.join(out, "tiles"))
     for _ in range(COMPACT_PARTS + 2):
         j0 = _last_job_id(spark)
-        counts = execute(spark, _pyramid_cfg(out, hole), mode="continue")
+        counts = execute(spark, config(out), mode="continue")
         j1 = _last_job_id(spark)
         assert counts == {k: 0 for k in first}
         assert j1 - j0 - 1 == 0, f"no-op run started {j1 - j0 - 1} Spark jobs"
@@ -563,6 +585,20 @@ def test_noop_continue_starts_no_spark_job(spark, tmp_path, hole):
         ]
         assert len(parts) <= COMPACT_PARTS + 1, (table, parts)
 
+
+
+def test_execute_tile_over_named_inputs_is_one_job(spark, tmp_path):
+    """``execute_tile`` over named and grouped inputs reads each input's
+    window in the one task whose block holds the tile: one Spark job,
+    no join of the input tables."""
+    from mapchete_spark.plans.job import execute_tile
+
+    cfg = _file_groups_cfg(str(tmp_path / "o"))
+    j0 = _last_job_id(spark)
+    rows = execute_tile(spark, cfg, 3, 3, 9).select("tile_row", "tile_col").collect()
+    j1 = _last_job_id(spark)
+    assert [tuple(r) for r in rows] == [(3, 9)]
+    assert j1 - j0 - 1 == 1, f"execute_tile started {j1 - j0 - 1} Spark jobs"
 
 def test_crash_between_write_and_commit_is_repaired(spark, tmp_path, monkeypatch):
     """A run that dies after its tile write but before the manifest

@@ -198,11 +198,26 @@ def executed_jobs(spark, tmp_path_factory):
         cfg = JobConfig.from_dict({**conf, "config_dir": CONFIGS})
         return cfg, execute(spark, cfg, mode="overwrite")
 
+    def file_groups_baselevels():
+        # the named inputs at zoom 4 with the lower overviews down to zoom 2
+        import yaml
+
+        with open(os.path.join(CONFIGS, "file_groups.mapchete")) as f:
+            conf = yaml.safe_load(f)
+        conf.update(
+            zoom_levels=dict(min=2, max=4),
+            baselevels=dict(min=4, max=4, lower="bilinear"),
+        )
+        conf["output"]["path"] = str(base / "fg_baselevels")
+        cfg = JobConfig.from_dict({**conf, "config_dir": CONFIGS})
+        return cfg, execute(spark, cfg, mode="overwrite")
+
     thunks = dict(
         hillshade=hillshade, continue2=continue2, baselevels=baselevels,
         zoom_dependent=zoom_dependent, tidx=tidx, custom_grid=custom_grid,
         split=split, utm_grid=utm_grid, ts1000=ts1000,
         file_groups=file_groups, file_groups_split=file_groups_split,
+        file_groups_baselevels=file_groups_baselevels,
     )
 
     def run(item):
@@ -248,7 +263,8 @@ class TestExecute:
         n5 = out.where(F.col("zoom") == 5).count()
         assert 0 < n4 <= n5
         # the stored lower chain (z4 from stored z5, z3 from stored z4)
-        # is byte for byte the in-memory chain over the stored z5 level
+        # is byte for byte the in-memory chain over the stored z5 level;
+        # so it is over named inputs (z3 and z2 from the stored z4)
         from mapchete_spark.operators.overviews import build_overviews
 
         def md5s(df):
@@ -259,12 +275,17 @@ class TestExecute:
                 ).collect()
             }
 
-        want = build_overviews(
-            out.where(F.col("zoom") == 5), cfg.pyramid, 5, 3,
-            resampling=cfg.baselevels.lower,
-        )
-        for z, df in want:
-            assert md5s(out.where(F.col("zoom") == z)) == md5s(df), z
+        for key in ("baselevels", "file_groups_baselevels"):
+            cfg, _counts = _job(executed_jobs, key)
+            out = spark.read.parquet(os.path.join(cfg.output["path"], "tiles"))
+            base, low = min(cfg.process_zooms()), min(cfg.overview_zooms_lower())
+            want = build_overviews(
+                out.where(F.col("zoom") == base), cfg.pyramid, base, low,
+                resampling=cfg.baselevels.lower,
+            )
+            assert [z for z, _ in want] == list(range(base - 1, low - 1, -1)), key
+            for z, df in want:
+                assert md5s(out.where(F.col("zoom") == z)) == md5s(df), (key, z)
 
     def test_zoom_dependent_job(self, spark, executed_jobs):
         cfg, _counts = _job(executed_jobs, "zoom_dependent")

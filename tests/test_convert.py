@@ -78,3 +78,30 @@ def test_convert_cli_smoke(spark, tmp_path, src_output):
     assert rc == 0
     out = json.loads(out_txt.strip().splitlines()[-1])
     assert out["status"] == "done" and out["stages"]["convert_z4"] > 0
+
+
+def test_convert_reads_source_with_its_schema(spark, tmp_path, src_output):
+    """A same-grid convert of one zoom reads the source tile table with
+    the raster schema: its Spark jobs run no ``parallelize`` stage, the
+    schema-inference job a read without a schema starts."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    group = f"convert-{tmp_path.name}"
+    sc.setJobGroup(group, "convert")
+    try:
+        counts = convert(spark, src_output, str(tmp_path / "dst"), zoom_levels=[4])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts["convert_z4"] > 0
+
+    def scopes(cluster):  # operator scopes of a stage's RDD graph
+        children = cluster.childClusters()
+        return [cluster.name()] + [
+            n for i in range(children.size()) for n in scopes(children.apply(i))
+        ]
+
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds}
+    names = [n for s in stages for n in scopes(store.operationGraphForStage(s).rootCluster())]
+    assert jobs and names and "parallelize" not in names, names

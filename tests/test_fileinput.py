@@ -844,6 +844,56 @@ def _run_tile_table_input_with_pixelbuffer(spark, tmp_path):
             assert got == {rc: want[rc]}, (process, rc)
 
 
+def _run_buffered_tif_inputs(spark, tmp_path):
+    """GeoTIFF inputs with a pixelbuffer through the job runner:
+    hillshade at pixelbuffer 1 over a same-CRS GeoTIFF (the DEM mosaic)
+    and over an EPSG:3857 GeoTIFF on a geodetic grid, each with
+    ``bounds`` inside the source. The stored tiles equal the halo
+    exchange (run_raster_process) over raster_table_from_file's tile
+    table cut to the tiles of ``bounds``, byte for byte."""
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators.process import process_hillshade, run_raster_process
+    from mapchete_spark.operators.rastertable import aoi_tile_keys, materialize_dem
+    from mapchete_spark.plans.config import JobConfig
+    from mapchete_spark.plans.job import execute
+    from mapchete_spark.sources.fileinput import raster_table_from_file
+    from mapchete_spark.sources.singlefile import write_single_artifact
+
+    pyr = TilePyramid("geodetic")
+    dem = materialize_dem(spark, 4, pyr, bounds=Bounds(0.0, 20.0, 45.0, 50.0), hole=True)
+    write_single_artifact(dem, pyr, 4, str(tmp_path / "dem"))
+    ramp = (np.arange(64, dtype=np.float32)[:, None] * 64
+            + np.arange(64, dtype=np.float32)[None, :])[None] * 3.0
+    merc = os.path.join(tmp_path, "m3857.tif")
+    with open(merc, "wb") as f:
+        f.write(encode_gtiff(ramp, Bounds(0.0, 0.0, 5e6, 5e6), crs="EPSG:3857", nodata=-1.0))
+
+    for name, path, zoom, bounds in (
+        ("same_crs", str(tmp_path / "dem.tif"), 4, Bounds(5.0, 25.0, 40.0, 45.0)),
+        ("warped", merc, 5, Bounds(0.0, 5.0, 40.0, 35.0)),
+    ):
+        out = str(tmp_path / name)
+        execute(spark, JobConfig.from_dict(dict(
+            process="hillshade", zoom_levels=[zoom], pyramid={"grid": "geodetic"},
+            input={"path": path}, bounds=list(bounds),
+            output={"path": out, "format": "parquet_tiles", "dtype": "uint8", "nodata": 0},
+        )), mode="overwrite")
+        table = raster_table_from_file(spark, path, zoom, pyr)
+        keys = [int(k) for k in aoi_tile_keys(pyr, zoom, bounds)]
+        want = run_raster_process(
+            table.where(F.col("tile_key").isin(keys)), pyr, process_hillshade,
+            out_dtype="uint8", out_nodata=0, pixelbuffer=1,
+        )
+
+        def md5s(df):
+            return sorted(tuple(r) for r in df.select("tile_key", F.md5("data")).collect())
+
+        got = md5s(spark.read.parquet(os.path.join(out, "tiles")))
+        assert got and got == md5s(want), name
+        assert len(got) < table.count(), name
+
+
 import pytest as _pytest
 
 
@@ -873,6 +923,7 @@ def fi_jobs(spark, tmp_path_factory):
         files_overlap=_run_files_first_valid_overlap,
         files_mixed=_run_files_mixed_crs,
         tile_table_pixelbuffer=_run_tile_table_input_with_pixelbuffer,
+        tif_hillshade=_run_buffered_tif_inputs,
     )
     return run_concurrently(
         {k: mk(k, fn) for k, fn in scenarios.items()}, max_workers=8
@@ -913,6 +964,12 @@ def test_tile_table_input_with_pixelbuffer(fi_jobs):
     from tests.conftest import assert_ok
 
     assert_ok(fi_jobs, "tile_table_pixelbuffer")
+
+
+def test_buffered_tif_inputs(fi_jobs):
+    from tests.conftest import assert_ok
+
+    assert_ok(fi_jobs, "tif_hillshade")
 
 
 def test_raster_warp_polar_source_covers_pole(spark, tmp_path):

@@ -4,6 +4,7 @@ reduction. Goldens computed directly from the analytic DEM."""
 
 import functools
 import json
+import os
 
 import numpy as np
 import pytest
@@ -30,6 +31,7 @@ from mapchete_spark.raster.mosaic import create_mosaic
 from mapchete_spark.raster.array import resample_from_array
 from mapchete_spark.raster.terrain import hillshade as np_hillshade
 from mapchete_spark.tilegrid import Bounds, TilePyramid
+from mapchete_spark.tilegrid.keys import split_linear_tile_key
 
 GEO = TilePyramid("geodetic")
 AOI = Bounds(0.0, 20.0, 45.0, 50.0)
@@ -267,16 +269,43 @@ WINDOW_CASES = {
 }
 
 
-def test_windowed_process_equals_halo_exchange(spark):
+def _write_row_groups(table, path, per_group):
+    """Write the Arrow ``table`` of tiles to one parquet file at
+    ``path``, sorted by row and column, in row groups of ``per_group``
+    tiles."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    pq.write_table(
+        table.sort_by([("tile_row", "ascending"), ("tile_col", "ascending")]),
+        os.path.join(path, "part-0.parquet"), row_group_size=per_group,
+    )
+
+
+def test_windowed_process_equals_halo_exchange(spark, tmp_path):
     """Windows read in the process task give the halo exchange's tiles
     byte for byte: pixelbuffer 0-2, the DEM hole, the antimeridian, the
     pole rows, metatiling, an area, a continue-mode key filter, and
-    vector (contours) rows, compared by md5 of geometry and properties."""
+    vector (contours) rows, compared by md5 of geometry and properties.
+    The windows are read from the DEM and from its tile table, written
+    to parquet in several row groups."""
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     from mapchete_spark.operators.checkpoint import KeyFilter
     from mapchete_spark.operators.halo import run_windowed_process
-    from mapchete_spark.operators.rastertable import aoi_tile_keys
+    from mapchete_spark.operators.rastertable import TileTableSource, aoi_tile_keys
+
+    dems = {
+        name: materialize_dem(spark, zoom, pyr, bounds=bounds, hole=hole, area=area)
+        for name, (pyr, zoom, bounds, pb, hole, area, *_) in WINDOW_CASES.items()
+    }
+    tables = functools.reduce(lambda a, b: a.unionByName(b), (
+        dem.withColumn("case", F.lit(name)) for name, dem in dems.items()
+    )).toArrow()
+    for name in WINDOW_CASES:
+        table = tables.filter(pc.equal(tables["case"], name)).drop_columns(["case"])
+        _write_row_groups(table, str(tmp_path / name), max(1, table.num_rows // 5))
 
     processes = {"hillshade": process_hillshade, "convert": process_convert}
     frames = []
@@ -292,28 +321,81 @@ def test_windowed_process_equals_halo_exchange(spark):
             out = dict(process=processes[proc], params={"dtype": "int16"},
                        out_dtype="uint8" if proc == "hillshade" else "int16", out_nodata=0)
             digest = F.md5("data")
-        windowed = run_windowed_process(
-            spark, pyr, zoom, functools.partial(dem_tile, hole=hole), DEM_NODATA,
-            pb, bounds=bounds, area=area, target_filter=todo, vector=vector, **out,
+        windowed, table = (
+            run_windowed_process(
+                spark, pyr, zoom, source, DEM_NODATA, pb, bounds=bounds, area=area,
+                target_filter=todo, vector=vector, **out,
+            )
+            for source in (
+                functools.partial(dem_tile, hole=hole), TileTableSource(str(tmp_path / name))
+            )
         )
-        dem = materialize_dem(spark, zoom, pyr, bounds=bounds, hole=hole, area=area)
         run = run_vector_process if vector else run_raster_process
-        halo = run(dem, pyr, pixelbuffer=pb, target_filter=todo, **out)
+        halo = run(dems[name], pyr, pixelbuffer=pb, target_filter=todo, **out)
         frames += [
             df.select(F.lit(side).alias("side"), F.lit(name).alias("case"), "tile_key",
                       digest.alias("h"))
-            for side, df in (("windowed", windowed), ("halo", halo))
+            for side, df in (("windowed", windowed), ("table", table), ("halo", halo))
         ]
 
     got: dict = {}
     for r in functools.reduce(lambda a, b: a.unionByName(b), frames).collect():
         got.setdefault((r["side"], r["case"]), {}).setdefault(r["tile_key"], []).append(r["h"])
     for name in WINDOW_CASES:
-        windowed, halo = (
+        windowed, table, halo = (
             {k: sorted(v) for k, v in got.get((side, name), {}).items()}
-            for side in ("windowed", "halo")
+            for side in ("windowed", "table", "halo")
         )
         assert halo and windowed == halo, name
+        assert table == halo, name
+
+
+def test_table_task_reads_its_row_groups(spark, tmp_path):
+    """A task reads only the row groups that hold its tiles and their
+    neighbours: over a table of many row groups, with a key filter that
+    keeps one tile row, no task reads all of them, and the tiles equal
+    the halo exchange's. Each task's row-group count comes back through
+    an accumulator."""
+    from pyspark import AccumulatorParam
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators.checkpoint import KeyFilter
+    from mapchete_spark.operators.halo import run_windowed_process
+    from mapchete_spark.operators.rastertable import TileTableSource, aoi_tile_keys
+
+    class Lists(AccumulatorParam):
+        def zero(self, value):
+            return []
+
+        def addInPlace(self, a, b):
+            return a + b
+
+    counts = spark.sparkContext.accumulator([], Lists())
+
+    class Counted(TileTableSource):
+        def read_row_groups(self, groups, *args):
+            counts.add([len(groups)])
+            return super().read_row_groups(groups, *args)
+
+    dem = materialize_dem(spark, ZOOM, GEO, bounds=AOI, hole=False)
+    path = str(tmp_path / "dem")
+    _write_row_groups(dem.toArrow(), path, 4)
+    source = Counted(path)
+    keys = aoi_tile_keys(GEO, ZOOM, AOI)
+    _, rows, _ = split_linear_tile_key(keys)
+    todo = KeyFilter(keys[rows == 9], keep=True)
+    out = dict(process=process_hillshade, params={}, out_dtype="uint8", out_nodata=0)
+    windowed = run_windowed_process(
+        spark, GEO, ZOOM, source, DEM_NODATA, 1, bounds=AOI, target_filter=todo, **out
+    )
+    halo = run_raster_process(dem, GEO, pixelbuffer=1, target_filter=todo, **out)
+
+    def md5s(df):
+        return sorted(tuple(r) for r in df.select("tile_key", F.md5("data")).collect())
+
+    assert md5s(windowed) == md5s(halo) and len(md5s(halo)) == todo.keys.size
+    assert len(source.row_groups) >= 10 and counts.value
+    assert max(counts.value) < len(source.row_groups), counts.value
 
 
 #: name -> (pyramid, zoom, bounds, pixelbuffer, hole, area, resampling, keep)
