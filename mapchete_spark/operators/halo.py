@@ -9,11 +9,12 @@ tile.py:260-272). Two operators render that here, with one per-tile body
 - ``run_windowed_process``, the job runner's one process operator: one
   ``mapInPandas`` over a ``spark.range`` of 2x2 block ids. Each task
   reads its tiles' neighbours from the input's window source itself
-  (the DEM, a tile table's row groups, a broadcast GeoTIFF, or a dict
-  of them for named inputs) and runs the process on the assembled
-  canvas — no shuffle, one Python stage — and can reduce each block's
-  tiles into their parent right away (the reference builds an overview
-  tile as soon as its four children are done, tasks.py:570-617).
+  (the DEM, a tile table's row groups, a broadcast GeoTIFF, or
+  ``NamedInputs``, several of them by name) and runs the process on
+  the assembled canvas — no shuffle, one Python stage — and can reduce
+  each block's tiles into their parent right away (the reference
+  builds an overview tile as soon as its four children are done,
+  tasks.py:570-617).
 - ``run_buffered_process``, for any DataFrame of tiles (the table
   operators ``run_raster_process`` / ``run_vector_process``): a
   buffered read becomes a shuffle. Every tile mails the <= pixelbuffer
@@ -74,6 +75,12 @@ _PART_COLUMNS = schema_columns(_PART_SCHEMA)
 #: rows above and below a row of up to ~80 targets stay cached
 WINDOW_CACHE_BYTES = 64 << 20
 
+#: bytes of encoded tiles an open reader of a windowed task may hold (a
+#: tile table's); with the window cache and the one row group a reader
+#: reads at a time (at most 128 MB as Spark writes them), a Python
+#: worker stays within Spark's 512 MB ``spark.python.worker.memory``
+READ_BYTES = 256 << 20
+
 
 def _strip(arr: np.ndarray, dr: int, dc: int, pb: int) -> np.ndarray:
     """The part of a tile's (bands, h, w) array that its neighbour at
@@ -113,7 +120,7 @@ def _canvas(me: Tile, pb: int, pieces, nodata: float) -> np.ma.MaskedArray:
     return mask_nodata(canvas, nodata)
 
 
-class _TileFunction(NamedTuple):
+class TileFunction(NamedTuple):
     """The window source of a function Tile -> array whose tiles share
     one ``nodata`` (the analytic DEM: every tile, nothing read up front)."""
 
@@ -123,8 +130,19 @@ class _TileFunction(NamedTuple):
     def extent(self, pyramid: TilePyramid, zoom: int) -> None:
         return None
 
+    def tile_bytes(self, zoom: int) -> int:
+        return 0
+
     def open(self, pyramid: TilePyramid, zoom: int, rows, cols):
         return lambda tile: (self.read_tile(tile), self.nodata)
+
+
+class NamedInputs(NamedTuple):
+    """Named inputs of a process: flat name -> window source, a group's
+    members named ``group.member``; and group -> [(member, flat name)]."""
+
+    sources: dict
+    groups: dict
 
 
 def _cut(ranges: list, extents: list) -> list:
@@ -156,12 +174,36 @@ def _with_ring(p: TilePyramid, zoom: int, rows: np.ndarray, cols: np.ndarray, pb
     return rows, (cols % p.matrix_width(zoom) if p.is_global else cols)
 
 
+def _chunks(p: TilePyramid, zoom: int, walks: list, pb: int, limit: int) -> list:
+    """``walks`` (per batch: block rows, block columns, and the blocks'
+    tile rows, tile columns and todo flags) cut into runs of blocks
+    whose todo tiles and their neighbourhoods number at most ``limit``
+    tiles (at least one block a run), one walk per run."""
+    brs, bcs, rows, cols, todo = (np.concatenate(a) for a in zip(*walks))
+    cuts, held = [0], set()
+    for i in range(brs.size):
+        t = slice(4 * i, 4 * i + 4)
+        ring = set(zip(*(a.tolist() for a in _with_ring(
+            p, zoom, rows[t][todo[t]], cols[t][todo[t]], pb
+        ))))
+        if held and len(held) + len(ring - held) > limit:
+            cuts.append(i)
+            held = ring
+        else:
+            held |= ring
+    cuts.append(brs.size)
+    return [
+        (brs[i:j], bcs[i:j], rows[4 * i : 4 * j], cols[4 * i : 4 * j], todo[4 * i : 4 * j])
+        for i, j in zip(cuts, cuts[1:])
+    ]
+
+
 def run_windowed_process(
     spark: SparkSession,
     pyramid: TilePyramid,
     zoom: int,
     read_tile,
-    nodata: float,
+    nodata: Optional[float],
     pixelbuffer: int,
     process,
     params: Optional[dict] = None,
@@ -183,27 +225,31 @@ def run_windowed_process(
     applied in the task), builds each one's canvas from its neighbours'
     strips and runs the process on it.
 
-    ``read_tile`` is the input: a function Tile -> array whose tiles
-    share ``nodata`` (the DEM); a window source, whose ``extent(pyramid,
-    zoom)`` gives the tile ranges it holds (None: every tile) and whose
-    ``open(pyramid, zoom, rows, cols)``, called once per task with the
-    tiles the task reads, gives a reader Tile -> (array, nodata) or None
-    (rastertable.TileTableSource, sources/fileinput.GeoTiffSource); or
-    named inputs, a dict name -> function or source, or -> a dict of
-    them (a group, members named ``group.member``). Named inputs run a
-    raster process without a pixelbuffer on every tile one of them
-    holds; it sees ``TileContext.inputs`` (name -> masked array or
-    None), each name as a parameter and each group as a list of
-    (member, array), and takes its array and nodata from the first
-    input holding the tile (the reference's file_groups example).
+    ``read_tile`` is the input: a window source, whose ``extent(pyramid,
+    zoom)`` gives the tile ranges it holds (None: every tile), whose
+    ``open(pyramid, zoom, rows, cols)``, called in the task with tiles
+    it reads, gives a reader Tile -> (array, nodata) or None, and whose
+    ``tile_bytes(zoom)`` is what an open reader holds per tile (0 for a
+    source that reads a tile when it is looked up) — TileFunction,
+    rastertable.TileTableSource, sources/fileinput.GeoTiffSource; a bare
+    function Tile -> array, whose tiles share ``nodata`` (the DEM, read
+    through a TileFunction); or NamedInputs. Named inputs run a raster
+    process without a pixelbuffer on every tile one of them holds; it
+    sees ``TileContext.inputs`` (name -> masked array or None), each
+    name as a parameter and each group as a list of (member, array), and
+    takes its array and nodata from the first input holding the tile
+    (the reference's file_groups example).
 
     The blocks walked are those of the ``bounds`` ranges cut to the
     sources' extents. The input set is the tiles of those ranges that
     intersect ``area`` and that the source holds: a neighbour outside
     it leaves its part of the canvas nodata, so the output equals the
     halo exchange over the input's tile table (``run_buffered_process``,
-    same ``vector`` flag) byte for byte. A bounded per-task cache keeps
-    each neighbour read once per task.
+    same ``vector`` flag) byte for byte. The sources open once per
+    Arrow batch of blocks; a source whose readers hold tiles opens once
+    per run of blocks whose tiles take at most READ_BYTES
+    (``_chunks``). A cache of at most WINDOW_CACHE_BYTES of decoded
+    windows keeps each neighbour read once per task while it fits.
 
     ``parents`` (raster only, a KeyFilter of keys at ``zoom - 1``): a
     block whose parent passes it and whose tiles gave rows also emits
@@ -212,18 +258,12 @@ def run_windowed_process(
     overview zoom, in the same task."""
     if parents is not None and (vector or zoom < 1):
         raise ValueError("only a raster process above zoom 0 can reduce its parents")
-    named = isinstance(read_tile, dict)
+    if callable(read_tile):
+        read_tile = TileFunction(read_tile, nodata)
+    named = isinstance(read_tile, NamedInputs)
     if named and (vector or pixelbuffer):
         raise ValueError("named inputs run a raster process without a pixelbuffer")
-    # flat name -> source; group -> [(member, flat name)]
-    sources, groups = {}, {}
-    for name, src in (read_tile.items() if named else [(None, read_tile)]):
-        if isinstance(src, dict):
-            groups[name] = [(short, f"{name}.{short}") for short in src]
-            sources.update({f"{name}.{short}": s for short, s in src.items()})
-        else:
-            sources[name] = src
-    sources = {n: s if hasattr(s, "open") else _TileFunction(s, nodata) for n, s in sources.items()}
+    sources, groups = read_tile if named else ({None: read_tile}, {})
     ranges = _cut(
         aoi_tile_ranges(pyramid, zoom, bounds), [s.extent(pyramid, zoom) for s in sources.values()]
     )
@@ -244,6 +284,9 @@ def run_windowed_process(
     pyr_dict = pyramid.to_dict()
     params = params or {}
     columns = schema_columns(schema)
+    tile_bytes = max(s.tile_bytes(zoom) for s in sources.values())
+    chunk_tiles = max(1, READ_BYTES // tile_bytes) if tile_bytes else None
+    cache_bytes = WINDOW_CACHE_BYTES
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = TilePyramid(**pyr_dict)
@@ -251,6 +294,10 @@ def run_windowed_process(
         is_input: dict = {}
         windows: OrderedDict = OrderedDict()
         held = 0
+        # the tiles whose strips reach a canvas: without a pixelbuffer
+        # only the tile itself, so no reader is asked for a neighbour it
+        # was not opened for
+        ring = list(zip(_RING_DR.tolist(), _RING_DC.tolist())) if pb else [(0, 0)]
 
         def in_input_set(r: int, c: int) -> bool:
             if (r, c) not in is_input:
@@ -269,7 +316,7 @@ def run_windowed_process(
             if got is not None:
                 got = (filled_array(got[0], got[1]), got[1])
                 held += got[0].nbytes
-                while windows and held > WINDOW_CACHE_BYTES:
+                while windows and held > cache_bytes:
                     old = windows.popitem(last=False)[1]
                     held -= 0 if old is None else old[0].nbytes
             windows[(r, c)] = got
@@ -280,7 +327,7 @@ def run_windowed_process(
             if centre is None:
                 return []
             pieces = []
-            for dr, dc in zip(_RING_DR.tolist(), _RING_DC.tolist()):
+            for dr, dc in ring:
                 nr, nc = r + dr, c + dc
                 if nr < 0 or nr >= mh:
                     continue
@@ -332,20 +379,15 @@ def run_windowed_process(
             cols = (2 * bcs[:, None] + np.array([0, 1, 0, 1])).ravel()
             todo = target_filter.passes(linear_tile_key(zoom, rows, cols))
             walks.append((brs, bcs, rows, cols, todo))
-        # each source opens once per task, for the todo tiles and the
-        # neighbours their windows take pieces of
-        none = np.empty(0, dtype=np.int64)
-        needed = _with_ring(
-            p, zoom,
-            np.concatenate([rows[todo] for _, _, rows, _, todo in walks] + [none]),
-            np.concatenate([cols[todo] for _, _, _, cols, todo in walks] + [none]),
-            pb,
-        )
-        readers = {name: s.open(p, zoom, *needed) for name, s in sources.items()}
-        read = readers.get(None)
         rows_of = named_rows if named else tile_rows
-
+        if chunk_tiles and walks:
+            walks = _chunks(p, zoom, walks, pb, chunk_tiles)
         for brs, bcs, rows, cols, todo in walks:
+            # the sources open for the todo tiles and the neighbours
+            # their windows take pieces of
+            needed = _with_ring(p, zoom, rows[todo], cols[todo], pb)
+            readers = {name: s.open(p, zoom, *needed) for name, s in sources.items()}
+            read = readers.get(None)
             out = {k: [] for k in columns}
             todo = todo.reshape(-1, 4)
             emit = (

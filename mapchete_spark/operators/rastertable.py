@@ -20,7 +20,7 @@ of pre-tiled arrays, which this produces.
 
 from __future__ import annotations
 
-from typing import Iterator, NamedTuple, Optional, Tuple
+from typing import Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -135,35 +135,37 @@ def read_tiles(spark: SparkSession, path: str, zoom: Optional[int] = None) -> Da
 #: a span with no statistics: any zoom, row or column
 _ANY = (-(2**62), 2**62)
 
-
-class RowGroup(NamedTuple):
-    """Where a row group of a tile table is, and the tiles it can hold."""
-
-    path: str
-    index: int
-    zooms: Tuple[int, int]
-    rows: Tuple[int, int]
-    cols: Tuple[int, int]
-    #: False in a zoom-partitioned file: its zoom is the path's
-    has_zoom: bool
+#: a row group of a tile table: its file (an index into
+#: ``TileTableSource.files``) and index in it, whether its rows carry a
+#: zoom column (not in a zoom-partitioned file: its zoom is the path's),
+#: the (min, max) of the zooms, rows and columns it can hold, and its
+#: uncompressed bytes per row
+ROW_GROUP = np.dtype([
+    ("file", "i8"), ("index", "i8"), ("zoom_column", "?"),
+    ("zooms", "i8", 2), ("rows", "i8", 2), ("cols", "i8", 2), ("row_bytes", "i8"),
+])
 
 
 class TileTableSource:
     """A parquet tile table as a window source of
     ``halo.run_windowed_process``. The driver lists every row group
-    once, from the parquet footers: (file, row group, zoom, row and
-    column min–max). A task reads, in one pyarrow read per file, only
-    the row groups that hold the tiles it asks for, and keeps those
-    tiles (the per-partition metadata of Jigsaw, SIGMOD 2021). Files of
-    a zoom-partitioned table (``zoom=<z>`` directories, as ``execute``
-    writes them) take their zoom from the path."""
+    once, from the parquet footers, into ``row_groups`` (a ROW_GROUP
+    array). A task opens the source for a chunk of the tiles it needs
+    and reads, one row group at a time (the unit Spark's parquet reader
+    holds too), only the row groups whose spans hold one of them; it
+    keeps those tiles' encoded payloads and decodes a tile when it is
+    looked up (the per-partition metadata of Jigsaw, SIGMOD 2021).
+    ``tile_bytes`` tells the operator how large a chunk to open. Files
+    of a zoom-partitioned table (``zoom=<z>`` directories, as
+    ``execute`` writes them) take their zoom from the path."""
 
     def __init__(self, path: str):
         import pyarrow.dataset as pads
 
         dataset = pads.dataset(path, format="parquet", partitioning="hive")
         self.filesystem = dataset.filesystem
-        self.row_groups: list = []
+        self.files: list = []
+        groups = []
         for frag in dataset.get_fragments():
             zoom = pads.get_partition_keys(frag.partition_expression).get("zoom")
             for group in frag.row_groups:
@@ -171,63 +173,87 @@ class TileTableSource:
                 span = {c: (stats[c]["min"], stats[c]["max"]) if c in stats else _ANY
                         for c in ("zoom", "tile_row", "tile_col")}
                 if group.num_rows:
-                    self.row_groups.append(RowGroup(
-                        frag.path, group.id, span["zoom"] if zoom is None else (zoom, zoom),
-                        span["tile_row"], span["tile_col"], zoom is None,
+                    groups.append((
+                        len(self.files), group.id, zoom is None,
+                        span["zoom"] if zoom is None else (zoom, zoom),
+                        span["tile_row"], span["tile_col"],
+                        -(-group.total_byte_size // group.num_rows),
                     ))
+            self.files.append(frag.path)
+        self.row_groups = np.array(groups, dtype=ROW_GROUP)
 
-    def _at(self, zoom: int) -> list:
-        return [g for g in self.row_groups if g.zooms[0] <= zoom <= g.zooms[1]]
+    def _at(self, zoom: int) -> np.ndarray:
+        zooms = self.row_groups["zooms"]
+        return self.row_groups[(zooms[:, 0] <= zoom) & (zoom <= zooms[:, 1])]
 
     def extent(self, pyramid: TilePyramid, zoom: int) -> list:
         """The one (r0, r1, c0, c1) box of the row groups at ``zoom``."""
         at = self._at(zoom)
-        if not at:
+        if not at.size:
             return []
         return [(
-            min(g.rows[0] for g in at), max(g.rows[1] for g in at),
-            min(g.cols[0] for g in at), max(g.cols[1] for g in at),
+            int(at["rows"][:, 0].min()), int(at["rows"][:, 1].max()),
+            int(at["cols"][:, 0].min()), int(at["cols"][:, 1].max()),
         )]
+
+    def tile_bytes(self, zoom: int) -> int:
+        """The largest uncompressed bytes per row of a row group at
+        ``zoom``: about what an open reader holds per tile."""
+        at = self._at(zoom)
+        return int(at["row_bytes"].max()) if at.size else 0
 
     def open(self, pyramid: TilePyramid, zoom: int, rows: np.ndarray, cols: np.ndarray):
         """In the task: the reader of the tiles (``rows``, ``cols``) at
         ``zoom``, Tile -> (array, nodata), or None for a tile the table
         does not hold."""
-        groups = [
-            g for g in self._at(zoom)
-            if np.any(
-                (rows >= g.rows[0]) & (rows <= g.rows[1])
-                & (cols >= g.cols[0]) & (cols <= g.cols[1])
-            )
-        ]
-        tiles = {
-            rc: (decode_array(*payload), float(payload[-1]))
-            for rc, payload in self.read_row_groups(groups, zoom, rows, cols)
-        }
-        return lambda tile: tiles.get((tile.row, tile.col))
+        tiles = dict(self.read_row_groups(self.groups_of(zoom, rows, cols), zoom, rows, cols))
 
-    def read_row_groups(self, groups: list, zoom: int, rows: np.ndarray, cols: np.ndarray):
+        def read(tile: Tile):
+            payload = tiles.get((tile.row, tile.col))
+            return payload and (decode_array(*payload), float(payload[-1]))
+
+        return read
+
+    def groups_of(self, zoom: int, rows: np.ndarray, cols: np.ndarray) -> np.ndarray:
+        """The row groups at ``zoom`` whose spans hold one of the tiles
+        (``rows``, ``cols``): those that meet the tiles' box, then tested
+        tile by tile."""
+        at = self._at(zoom)
+        if not rows.size:
+            return at[:0]
+        at = at[
+            (at["rows"][:, 0] <= rows.max()) & (at["rows"][:, 1] >= rows.min())
+            & (at["cols"][:, 0] <= cols.max()) & (at["cols"][:, 1] >= cols.min())
+        ]
+        hit = [
+            bool(np.any((rows >= r0) & (rows <= r1) & (cols >= c0) & (cols <= c1)))
+            for (r0, r1), (c0, c1) in zip(at["rows"].tolist(), at["cols"].tolist())
+        ]
+        return at[np.array(hit, dtype=bool)]
+
+    def read_row_groups(self, groups: np.ndarray, zoom: int, rows: np.ndarray, cols: np.ndarray):
         """((row, col), payload columns) of the tiles (``rows``,
-        ``cols``) at ``zoom`` in the row groups ``groups``, one read per
-        file."""
+        ``cols``) at ``zoom`` in the row groups ``groups``, read one row
+        group at a time."""
         import pyarrow.parquet as pq
 
         want = linear_tile_key(zoom, rows, cols)
-        by_file: dict = {}
-        for g in groups:
-            by_file.setdefault((g.path, g.has_zoom), []).append(g.index)
-        for (path, has_zoom), ids in by_file.items():
-            columns = (["zoom"] if has_zoom else []) + ["tile_row", "tile_col", *PAYLOAD_COLUMNS]
-            with self.filesystem.open_input_file(path) as f:
-                table = pq.ParquetFile(f).read_row_groups(ids, columns=columns)
-            r = table.column("tile_row").to_numpy()
-            c = table.column("tile_col").to_numpy()
-            keep = np.isin(linear_tile_key(zoom, r, c), want)
-            if has_zoom:
-                keep &= table.column("zoom").to_numpy() == zoom
-            kept = np.flatnonzero(keep)
-            payload = (table.column(col).take(kept).to_pylist() for col in PAYLOAD_COLUMNS)
-            yield from zip(zip(r[kept].tolist(), c[kept].tolist()), zip(*payload))
+        columns = ["tile_row", "tile_col", *PAYLOAD_COLUMNS]
+        for file in np.unique(groups["file"]).tolist():
+            with self.filesystem.open_input_file(self.files[file]) as f:
+                parquet = pq.ParquetFile(f)
+                for g in groups[groups["file"] == file]:
+                    table = parquet.read_row_group(
+                        int(g["index"]), columns=(["zoom"] if g["zoom_column"] else []) + columns
+                    )
+                    r = table.column("tile_row").to_numpy()
+                    c = table.column("tile_col").to_numpy()
+                    keep = np.isin(linear_tile_key(zoom, r, c), want)
+                    if g["zoom_column"]:
+                        keep &= table.column("zoom").to_numpy() == zoom
+                    kept = np.flatnonzero(keep)
+                    payload = (table.column(col).take(kept).to_pylist() for col in PAYLOAD_COLUMNS)
+                    yield from zip(zip(r[kept].tolist(), c[kept].tolist()), zip(*payload))
 
 
 def merge_tile_ranges(ranges) -> list:

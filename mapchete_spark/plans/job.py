@@ -43,7 +43,7 @@ import functools
 import json
 import os
 import time
-from typing import Callable, Dict, Optional
+from typing import Callable, Dict, Optional, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -58,7 +58,7 @@ from mapchete_spark.operators.checkpoint import (
     plan_keys,
     write_tiles,
 )
-from mapchete_spark.operators.halo import run_windowed_process
+from mapchete_spark.operators.halo import NamedInputs, TileFunction, run_windowed_process
 from mapchete_spark.operators.overviews import overview_reduce_once, overview_upsample
 from mapchete_spark.operators.process import (
     process_clip,
@@ -166,11 +166,20 @@ def _dem_hole(inp) -> bool:
     return bool(inp.get("hole", True)) if isinstance(inp, dict) else True
 
 
-def _input_specs(inp) -> list:
-    """The specs of ``inp``: itself, or every member of named inputs."""
+def _named_inputs(inp) -> Tuple[dict, dict]:
+    """The input specs of ``inp`` by flat name, a group's members named
+    ``group.member`` ({None: inp} for a single input), and group ->
+    [(member, flat name)]."""
     if not _is_multi_input(inp):
-        return [inp]
-    return [s for spec in inp.values() for s in ([spec] if _is_leaf_spec(spec) else spec.values())]
+        return {None: inp}, {}
+    specs, groups = {}, {}
+    for name, spec in inp.items():
+        if _is_leaf_spec(spec):
+            specs[name] = spec
+        else:
+            groups[name] = [(short, f"{name}.{short}") for short in spec]
+            specs.update({f"{name}.{short}": sub for short, sub in spec.items()})
+    return specs, groups
 
 
 def _input_source(spark, cfg: JobConfig, spec):
@@ -179,7 +188,7 @@ def _input_source(spark, cfg: JobConfig, spec):
     reference's raster_file driver) or a parquet tile table (S3/S4:
     another job's output)."""
     if _is_dem(spec):
-        return functools.partial(dem_tile, hole=_dem_hole(spec))
+        return TileFunction(functools.partial(dem_tile, hole=_dem_hole(spec)), DEM_NODATA)
     path = spec.get("path") if isinstance(spec, dict) else spec
     if not isinstance(path, str):
         raise ValueError(f"unsupported input spec: {spec!r}")
@@ -214,18 +223,11 @@ def _zoom_rows(
             explode_features_to_tiles(feats, zoom, pyramid=cfg.pyramid), cfg.pyramid
         )
         return run_feature_process(todo.apply(clipped), cfg.pyramid, fn, params=params)
-    inp = cfg.input_at_zoom(zoom)
-    if _is_multi_input(inp):
-        source = {
-            name: _input_source(spark, cfg, spec) if _is_leaf_spec(spec) else {
-                short: _input_source(spark, cfg, sub) for short, sub in spec.items()
-            }
-            for name, spec in inp.items()
-        }
-    else:
-        source = _input_source(spark, cfg, inp)
+    specs, groups = _named_inputs(cfg.input_at_zoom(zoom))
+    sources = {name: _input_source(spark, cfg, spec) for name, spec in specs.items()}
     return run_windowed_process(
-        spark, cfg.pyramid, zoom, source, DEM_NODATA, pb, fn, params=params,
+        spark, cfg.pyramid, zoom, sources[None] if None in sources else NamedInputs(sources, groups),
+        None, pb, fn, params=params,
         out_dtype=cfg.output.get("dtype"), out_nodata=cfg.output.get("nodata"),
         bounds=cfg.bounds, area=cfg.area, target_filter=todo, vector=kind != "raster",
         parents=parents, resampling=cfg.baselevels.lower if parents is not None else "nearest",
@@ -588,7 +590,7 @@ def _run(spark, cfg: JobConfig, mode: str, store: JobStore, notify) -> Dict[str,
         # ones too); other inputs define their own tiles, and an output
         # split re-keys them
         plannable = (
-            all(map(_is_dem, _input_specs(cfg.input_at_zoom(zoom))))
+            all(map(_is_dem, _named_inputs(cfg.input_at_zoom(zoom))[0].values()))
             and out_meta == cfg.pyramid.metatiling
         )
 

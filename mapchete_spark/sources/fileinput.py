@@ -116,6 +116,10 @@ class GeoTiffSource:
 
         return merge_tile_ranges(pyramid.tile_ranges_from_bounds(self.cover, zoom))
 
+    def tile_bytes(self, zoom: int) -> int:
+        """0: a reader reads a tile's window when it is looked up."""
+        return 0
+
     def open(self, pyramid: TilePyramid, zoom: int, rows=None, cols=None):
         """The reader Tile -> (array, nodata), or None for a tile outside
         the source."""

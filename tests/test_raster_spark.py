@@ -282,16 +282,18 @@ def _write_row_groups(table, path, per_group):
     )
 
 
-def test_windowed_process_equals_halo_exchange(spark, tmp_path):
+def test_windowed_process_equals_halo_exchange(spark, tmp_path, monkeypatch):
     """Windows read in the process task give the halo exchange's tiles
     byte for byte: pixelbuffer 0-2, the DEM hole, the antimeridian, the
     pole rows, metatiling, an area, a continue-mode key filter, and
     vector (contours) rows, compared by md5 of geometry and properties.
     The windows are read from the DEM and from its tile table, written
-    to parquet in several row groups."""
+    to parquet in several row groups, once with the table opened once per
+    task and once per block (READ_BYTES of 1)."""
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
+    from mapchete_spark.operators import halo
     from mapchete_spark.operators.checkpoint import KeyFilter
     from mapchete_spark.operators.halo import run_windowed_process
     from mapchete_spark.operators.rastertable import TileTableSource, aoi_tile_keys
@@ -321,47 +323,42 @@ def test_windowed_process_equals_halo_exchange(spark, tmp_path):
             out = dict(process=processes[proc], params={"dtype": "int16"},
                        out_dtype="uint8" if proc == "hillshade" else "int16", out_nodata=0)
             digest = F.md5("data")
-        windowed, table = (
-            run_windowed_process(
+        def windowed(source):
+            return run_windowed_process(
                 spark, pyr, zoom, source, DEM_NODATA, pb, bounds=bounds, area=area,
                 target_filter=todo, vector=vector, **out,
             )
-            for source in (
-                functools.partial(dem_tile, hole=hole), TileTableSource(str(tmp_path / name))
-            )
-        )
+
+        sides = {
+            "windowed": windowed(functools.partial(dem_tile, hole=hole)),
+            "table": windowed(TileTableSource(str(tmp_path / name))),
+        }
+        with monkeypatch.context() as m:
+            m.setattr(halo, "READ_BYTES", 1)
+            sides["table_per_block"] = windowed(TileTableSource(str(tmp_path / name)))
         run = run_vector_process if vector else run_raster_process
-        halo = run(dems[name], pyr, pixelbuffer=pb, target_filter=todo, **out)
+        sides["halo"] = run(dems[name], pyr, pixelbuffer=pb, target_filter=todo, **out)
         frames += [
             df.select(F.lit(side).alias("side"), F.lit(name).alias("case"), "tile_key",
                       digest.alias("h"))
-            for side, df in (("windowed", windowed), ("table", table), ("halo", halo))
+            for side, df in sides.items()
         ]
 
     got: dict = {}
     for r in functools.reduce(lambda a, b: a.unionByName(b), frames).collect():
         got.setdefault((r["side"], r["case"]), {}).setdefault(r["tile_key"], []).append(r["h"])
     for name in WINDOW_CASES:
-        windowed, table, halo = (
+        windowed, table, per_block, reference = (
             {k: sorted(v) for k, v in got.get((side, name), {}).items()}
-            for side in ("windowed", "table", "halo")
+            for side in ("windowed", "table", "table_per_block", "halo")
         )
-        assert halo and windowed == halo, name
-        assert table == halo, name
+        assert reference and windowed == reference, name
+        assert table == reference and per_block == reference, name
 
 
-def test_table_task_reads_its_row_groups(spark, tmp_path):
-    """A task reads only the row groups that hold its tiles and their
-    neighbours: over a table of many row groups, with a key filter that
-    keeps one tile row, no task reads all of them, and the tiles equal
-    the halo exchange's. Each task's row-group count comes back through
-    an accumulator."""
+def _list_accumulator(spark):
+    """An accumulator that concatenates the lists tasks add."""
     from pyspark import AccumulatorParam
-    from pyspark.sql import functions as F
-
-    from mapchete_spark.operators.checkpoint import KeyFilter
-    from mapchete_spark.operators.halo import run_windowed_process
-    from mapchete_spark.operators.rastertable import TileTableSource, aoi_tile_keys
 
     class Lists(AccumulatorParam):
         def zero(self, value):
@@ -370,11 +367,28 @@ def test_table_task_reads_its_row_groups(spark, tmp_path):
         def addInPlace(self, a, b):
             return a + b
 
-    counts = spark.sparkContext.accumulator([], Lists())
+    return spark.sparkContext.accumulator([], Lists())
+
+
+def test_table_task_reads_its_row_groups(spark, tmp_path):
+    """A task reads only the row groups that hold its tiles and their
+    neighbours: over a table of many row groups, with a key filter that
+    keeps one tile row, no task reads all of them, and the tiles equal
+    the halo exchange's. Each read row group comes back with its task
+    through an accumulator."""
+    from pyspark import TaskContext
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators.checkpoint import KeyFilter
+    from mapchete_spark.operators.halo import run_windowed_process
+    from mapchete_spark.operators.rastertable import TileTableSource, aoi_tile_keys
+
+    reads = _list_accumulator(spark)
 
     class Counted(TileTableSource):
         def read_row_groups(self, groups, *args):
-            counts.add([len(groups)])
+            task = TaskContext.get().partitionId()
+            reads.add([(task, int(g["file"]), int(g["index"])) for g in groups])
             return super().read_row_groups(groups, *args)
 
     dem = materialize_dem(spark, ZOOM, GEO, bounds=AOI, hole=False)
@@ -394,8 +408,59 @@ def test_table_task_reads_its_row_groups(spark, tmp_path):
         return sorted(tuple(r) for r in df.select("tile_key", F.md5("data")).collect())
 
     assert md5s(windowed) == md5s(halo) and len(md5s(halo)) == todo.keys.size
-    assert len(source.row_groups) >= 10 and counts.value
-    assert max(counts.value) < len(source.row_groups), counts.value
+    per_task: dict = {}
+    for task, *group in reads.value:
+        per_task.setdefault(task, set()).add(tuple(group))
+    assert len(source.row_groups) >= 10 and per_task
+    assert max(map(len, per_task.values())) < len(source.row_groups), per_task
+
+
+def test_table_task_holds_at_most_its_read_budget(spark, tmp_path, monkeypatch):
+    """Over a tile table larger than a task's budgets (READ_BYTES of
+    encoded tiles, WINDOW_CACHE_BYTES of decoded windows), a task opens
+    the table once per run of blocks, and each open holds at most
+    READ_BYTES; the tiles equal the halo exchange's at pixelbuffer 1.
+    The bytes each open holds come back with its task through an
+    accumulator."""
+    from pyspark import TaskContext
+    from pyspark.sql import functions as F
+
+    from mapchete_spark.operators import halo
+    from mapchete_spark.operators.rastertable import TileTableSource
+
+    monkeypatch.setattr(halo, "READ_BYTES", 8 << 20)
+    monkeypatch.setattr(halo, "WINDOW_CACHE_BYTES", 4 << 20)
+    opens = _list_accumulator(spark)
+
+    class Counted(TileTableSource):
+        def read_row_groups(self, *args):
+            held = 0
+            for tile, payload in super().read_row_groups(*args):
+                held += len(payload[0])
+                yield tile, payload
+            opens.add([(TaskContext.get().partitionId(), held)])
+
+    zoom = ZOOM + 1
+    dem = materialize_dem(spark, zoom, GEO, bounds=AOI, hole=True)
+    table = dem.toArrow()
+    path = str(tmp_path / "dem")
+    _write_row_groups(table, path, 8)
+    out = dict(process=process_hillshade, params={}, out_dtype="uint8", out_nodata=0)
+    windowed = halo.run_windowed_process(
+        spark, GEO, zoom, Counted(path), None, 1, bounds=AOI, **out
+    )
+    reference = run_raster_process(dem, GEO, pixelbuffer=1, **out)
+
+    def md5s(df):
+        return sorted(tuple(r) for r in df.select("tile_key", F.md5("data")).collect())
+
+    assert md5s(reference) and md5s(windowed) == md5s(reference)
+    assert sum(map(len, table.column("data").to_pylist())) > 2 * (12 << 20)
+    per_task: dict = {}
+    for task, held in opens.value:
+        per_task.setdefault(task, []).append(held)
+    assert max(held for _, held in opens.value) <= 8 << 20, per_task
+    assert max(map(len, per_task.values())) > 1, per_task
 
 
 #: name -> (pyramid, zoom, bounds, pixelbuffer, hole, area, resampling, keep)
